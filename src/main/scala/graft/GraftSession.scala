@@ -10,13 +10,37 @@ import org.apache.spark.sql.SparkSession
   *     because the engine's scale story depends on them),
   *   - shuffle partitions sized to the local core count (a cluster
   *     deployment overrides via --conf; 200 default partitions on
-  *     local[N] just schedules overhead).
+  *     local[N] just schedules overhead),
+  *   - a compiled-class cache that holds the engine's working set.
+  *
+  * The codegen cache (`spark.sql.codegen.cache.maxEntries`) is static
+  * and JVM-wide: `CodeGenerator` reads it once, at its first compile,
+  * so it must be set on the first session of the JVM, before any
+  * query runs. Spark's default of 100 entries is smaller than one pass
+  * of either measured workload, so every pass recompiled almost all
+  * of its classes (25–33 ms each). Working sets measured with
+  * `CodegenMetrics` (distinct classes compiled, no bound):
+  *   - rideshare T1–T7 (18 actions): 169 classes;
+  *   - the 7-query corpus/ML mix (one registry query per family): 234;
+  *   - all 243 registry queries at sf0.001 (one Verify sweep): 3,110,
+  *     which at the default bound cost 7,813 compiles.
+  * 1024 entries is about 4× the larger per-workload set. A cached class
+  * holds about 25–70 KB of heap, so a full cache costs at most ~70 MB.
+  * A sweep of all 243 queries still cycles the cache; it holds the
+  * classes of a repeated mix, which is what a serving or bench loop
+  * runs.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+    builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+
+  /** The defaults alone, with master and shuffle partitions left to the
+    * deployment (`spark-submit --master … --conf …`).
+    */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
@@ -26,6 +50,7 @@ object GraftSession {
       // win for the selective fact⋈fact joins at cluster scale
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", 1024)
       // shuffle/spill scratch on tmpfs when available: the harness box
       // intermittently throttles block-device writes to ~15 MB/s,
       // which turns every exchange into an IO stall and benches the

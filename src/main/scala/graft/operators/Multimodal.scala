@@ -1156,21 +1156,6 @@ object Multimodal {
     out
   }
 
-  /** Resize every P6 payload, emitting (doc_id, out_w, out_h,
-    * resized payload, content md5). */
-  def resizePpm(spark: SparkSession, withPayload: DataFrame,
-      outW: Int, outH: Int): DataFrame = {
-    import spark.implicits._
-    withPayload.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        (id, resizePpmBytes(b, outW, outH)) })
-      .toDF("doc_id", "payload")
-      .select(col("doc_id"), lit(outW.toLong).as("out_width"),
-        lit(outH.toLong).as("out_height"), col("payload"),
-        md5(col("payload")).as("payload_md5"))
-  }
-
   // ---- REAL compressed-image codec: PNG, pure JDK. ----
   // The deflate machinery ships in every JDK (java.util.zip.Inflater /
   // CRC32 / Adler32 — public platform API, no imaging library needed),
@@ -1375,15 +1360,6 @@ object Multimodal {
     }
     PngMeta(id, w, h, 8L, ct, h.toLong * (1 + w * bpp),
       sr / n, sg / n, sb / n)
-  }
-
-  /** Partition-local REAL decode of PNG payloads. */
-  def decodePng(spark: SparkSession, withPayload: DataFrame)
-      : Dataset[PngMeta] = {
-    import spark.implicits._
-    withPayload.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) => parsePng(id, b) })
   }
 
   /** Encode raw 8-bit pixels as a PNG payload. Deterministic across

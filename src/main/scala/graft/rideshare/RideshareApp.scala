@@ -2,6 +2,7 @@ package graft.rideshare
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.sources.Sinks
 
 /** Drop-in replacement for the reference's seven spark-submit scripts
@@ -24,10 +25,8 @@ import graft.sources.Sinks
 object RideshareApp {
   def main(args: Array[String]): Unit = {
     val Array(tripsCsv, zonesCsv, outDir) = args
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .appName("rideshare-analysis")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     try run(spark, tripsCsv, zonesCsv, outDir)
     finally spark.stop()

@@ -92,22 +92,10 @@ object Zorder {
       nFiles: Int, bits: Int = 16): Unit =
     writeOrderedBy(df, path, morton(a, b, bits), nFiles)
 
-  /** [[writeZordered]] over k keys ([[mortonN]]) — the n-column
-    * ZORDER BY layout job.
-    */
-  def writeZorderedN(df: DataFrame, path: String, cols: Seq[Column],
-      nFiles: Int, bits: Int): Unit =
-    writeOrderedBy(df, path, mortonN(cols, bits), nFiles)
-
   /** [[writeZordered]] with the Hilbert code — same one-shuffle
     * layout job, strictly better box locality (see [[hilbert]]).
     */
   def writeHilbertOrdered(df: DataFrame, path: String, a: Column,
       b: Column, nFiles: Int, bits: Int = 16): Unit =
     writeOrderedBy(df, path, hilbert(a, b, bits), nFiles)
-
-  /** [[writeHilbertOrdered]] over k keys ([[hilbertN]]). */
-  def writeHilbertOrderedN(df: DataFrame, path: String,
-      cols: Seq[Column], nFiles: Int, bits: Int): Unit =
-    writeOrderedBy(df, path, hilbertN(cols, bits), nFiles)
 }
