@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.CacheScope
+
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line on stdout
   * (stdout is forwarded verbatim — build.sbt sets run/outputStrategy).
@@ -59,9 +61,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val mainT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Timed action: write to the no-op sink, NOT count(). Under count()
@@ -191,10 +191,12 @@ object Bench {
       // ADVICE): a query that fails here still gets measured below
       // (where its error is fatal to the bench), but a failed
       // artifact-warm build would silently shift the one-time build
-      // cost into the first measured run — the log makes that visible
+      // cost into the first measured run — the log makes that visible.
+      // Each query releases its persists in its own scope (scopes are
+      // per thread, so the pooled warmup below keeps them apart).
       def warmExec(n: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
           dir: String): Unit =
-        try exec(fn(spark, dir)) catch {
+        try CacheScope.run(exec(fn(spark, dir))) catch {
           case t: Throwable => System.err.println(
             s"warmup failed: $n @ $dir: ${t.getClass.getSimpleName}: " +
               Option(t.getMessage).getOrElse("").take(160))
@@ -203,10 +205,9 @@ object Bench {
       // JIT/codegen/classloader ramp, not to measure — so its queries
       // need not run one at a time. At sf0.001 each query is
       // work-tiny but latency-bound (~1 s of driver/plan/stage
-      // round-trips), so a small pool overlaps those latencies on the
-      // idle local[32] executor threads and cuts the warmup wall ~Nx
-      // without changing WHAT gets warmed (every query still
-      // executes, twice). Spark sessions are thread-safe for
+      // round-trips), so a small pool overlaps those latencies and cuts
+      // the warmup wall ~Nx without changing WHAT gets warmed (every
+      // query still executes, twice). Spark sessions are thread-safe for
       // concurrent actions; the STORED-ARTIFACT queries are excluded
       // from the pool — two ensureFrame calls racing on one artifact
       // dir (sim_nndescent_loaded + emb_outliers_loaded share theirs)
@@ -239,7 +240,6 @@ object Bench {
         // serial, for the shared-dir reason above
         queries.filter { case (n, _) => !singleRun(n) && artifactWarm(n) }
           .foreach { case (n, fn) => warmExec(n, fn, warmupDir) }
-        spark.catalog.clearCache()
       }
       // stored-artifact queries build their ModelStore artifact on the
       // first run against a data dir; build it HERE, at the timed dir,
@@ -248,7 +248,6 @@ object Bench {
       // phase that exists to pay one-time costs outside the measurement
       queries.filter { case (n, _) => artifactWarm(n) }
         .foreach { case (n, fn) => warmExec(n, fn, sfDir) }
-      spark.catalog.clearCache()
     }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
 
@@ -270,14 +269,14 @@ object Bench {
       sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(3))
     val results = queries.map { case (name, fn) =>
       var err: Option[String] = None
-      def timed(): Double = {
-        // per RUN (which also covers per-query): pair miners persist
-        // candidate / signature frames internally and CacheManager
-        // matches re-built plans by canonical form, so without this the
-        // 2nd+ runs of a cached-artifact query time cache hits instead
-        // of the operator — and stale blocks would distort later
-        // queries via memory pressure
-        spark.catalog.clearCache()
+      // one scope per RUN (which also covers per-query): pair miners
+      // persist candidate / signature frames internally and
+      // CacheManager matches re-built plans by canonical form, so
+      // without the release the 2nd+ runs of a cached-artifact query
+      // time cache hits instead of the operator — and stale blocks
+      // would distort later queries via memory pressure. The clock
+      // stops before the scope releases.
+      def timed(): Double = CacheScope.run {
         val t0 = System.nanoTime()
         try { exec(fn(spark, sfDir)) } catch {
           case t: Throwable =>

@@ -31,6 +31,15 @@ import org.apache.spark.sql.SparkSession
   * runs.
   */
 object GraftSession {
+  /** Local core count of the mains (Bench, Verify, ScalingBench and the
+    * probes): `SPARK_GRAFT_CPUS`, else every processor the JVM sees.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The defaults on `local[cpus]`, with one shuffle partition per core. */
+  def local(): SparkSession.Builder = builder(s"local[$cpus]", cpus)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     builder()
       .master(master)

@@ -20,7 +20,7 @@ import graft.sources.{ModelStore, Tables}
 object Ivf2Probe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def exec(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{CacheScope, Tables}
 
 /** Scaling-curve harness: measures how the pair-miner / ANN family
   * grows with corpus size — the empirical backing for every "scale-
@@ -36,7 +36,7 @@ import graft.sources.Tables
   *
   * Usage:
   *   sbt "runMain graft.ScalingBench [baseSfDir] [outRoot]"
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALING_RUNS
+  * Env: SPARK_GRAFT_CPUS (default: all processors), SPARK_GRAFT_SCALING_RUNS
   * (default 2, best-of), SPARK_GRAFT_SCALES (default "1,2,4,8").
   * Stdout: one JSON line (times, counts, exponents). Stderr: the
   * ready-to-paste SCALING.md table.
@@ -486,7 +486,6 @@ object ScalingBench {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outRoot = args.drop(1).headOption.getOrElse("target/scaling")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_SCALING_RUNS")
       .flatMap(_.toIntOption).getOrElse(2))
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,2,4,8")
@@ -494,8 +493,7 @@ object ScalingBench {
     // comma-separated subject-name filter for re-measuring one curve
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // every subject carries its corpus family's dir prefix: the main
@@ -555,10 +553,9 @@ object ScalingBench {
       .flatMap(_.toIntOption).getOrElse(2))
     (1 to warmups).foreach { _ =>
       active.foreach { case (_, fn, p) =>
-        try exec(fn(spark, s"$outRoot/$p${scales.head}"))
+        try CacheScope.run(exec(fn(spark, s"$outRoot/$p${scales.head}")))
         catch { case _: Throwable => () }
       }
-      spark.catalog.clearCache()
     }
 
     // rows: one untimed count per cell — the pair miners' output
@@ -566,19 +563,19 @@ object ScalingBench {
     val cells = for ((name, fn, p) <- active; k <- scales) yield {
       val dir = s"$outRoot/$p$k"
       val times = (1 to runs).map { _ =>
-        // per RUN, not per cell (the Bench.scala lesson): the miners
-        // persist derived frames internally and CacheManager matches
-        // re-built plans by canonical form, so without this the 2nd+
-        // runs time cache hits and best-of-N reports warm minima —
-        // the growth exponent then measures cache-scan growth, not
-        // the operator
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        exec(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
+        // one scope per RUN, not per cell (the Bench.scala lesson): the
+        // miners persist derived frames internally and CacheManager
+        // matches re-built plans by canonical form, so without the
+        // release the 2nd+ runs time cache hits and best-of-N reports
+        // warm minima — the growth exponent then measures cache-scan
+        // growth, not the operator. The clock stops before the release.
+        CacheScope.run {
+          val t0 = System.nanoTime()
+          exec(fn(spark, dir))
+          (System.nanoTime() - t0) / 1e9
+        }
       }
-      spark.catalog.clearCache()
-      val rows = fn(spark, dir).count()
+      val rows = CacheScope.run(fn(spark, dir).count())
       System.err.println(
         f"$name%-26s x$k%-3d best=${times.min}%8.3fs rows=$rows%d")
       (name, k, times.min, rows)

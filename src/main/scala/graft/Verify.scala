@@ -1,14 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.sources.CacheScope
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // the correctness gate always exercises the FULL
@@ -29,13 +29,19 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
-      // pair-miner caches must not accumulate across the 54-query sweep
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // one scope per query: the operators' persists are released after
+      // its write, and any that escape the scope are reported
+      val (plans0, rdds0) = CacheScope.held(spark)
+      try CacheScope.run {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      val (plans1, rdds1) = CacheScope.held(spark)
+      val leaked = math.max(plans1 - plans0, rdds1 - rdds0)
+      if (leaked > 0)
+        System.err.println(s"[verify] $name leaked $leaked persists")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

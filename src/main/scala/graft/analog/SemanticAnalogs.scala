@@ -224,10 +224,9 @@ object SemanticAnalogs {
     // rather than hand-chaining — so the gate exercises the loop's
     // materialize/re-root path at depth, and the oracle is the
     // deterministic three-step chain. Cache lifetime: the final
-    // graph's block cache stays live after the action by design
-    // (NnDescentResult scaladoc) — the harness's per-query
-    // catalog.clearCache() is this registration's release companion;
-    // a library caller composing the loop calls result.close().
+    // graph's block cache stays live after the action by design and
+    // is released with the query's CacheScope (NnDescentResult
+    // scaladoc).
     Q("eval_nndescent3_metrics",
       (s, d) => {
         val embs = Tables.embeddings(s, d)
@@ -739,9 +738,8 @@ object SemanticAnalogs {
     // chain; the early-stop law (a complete graph is a fixpoint at
     // round 1) is spec-pinned in SimilarityConsumersSpec. Cache
     // lifetime: the final graph's cache stays live after the action
-    // by design — the harness's per-query catalog.clearCache() is
-    // this registration's release companion (NnDescentResult
-    // scaladoc); library callers close().
+    // by design and is released with the query's CacheScope
+    // (NnDescentResult scaladoc).
     Q("sim_nndescent_converged",
       (s, d) => Similarity.nnDescent(Tables.embeddings(s, d), k = 5,
         maxRounds = 2, minImprovedPm = 0L).graph

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.CacheScope
 
 /** Benchmark decontamination and corpus-composition operators — the
   * train/eval hygiene half of an LLM-data pipeline (BASELINE.json
@@ -86,7 +87,7 @@ object Decontam {
 
   /** The pair verify over pre-computed gram tables — shared by the
     * broadcast-join path ([[overlapCore]]) and the Bloom-prescreened
-    * path ([[bloomSurvivorsManaged]]), so the two can't diverge.
+    * path ([[bloomSurvivors]]), so the two can't diverge.
     */
   private def overlapOnGrams(tg: DataFrame, bg: DataFrame,
       minShared: Int, broadcastBench: Boolean): DataFrame = {
@@ -170,32 +171,24 @@ object Decontam {
     * path. `broadcastBench = false` degrades the verify join to a
     * shuffle of the probe survivors (the regime the bloom path exists
     * for); the probe itself never shuffles either way.
+    *
+    * The bench gram table is evaluated three times (filter sizing,
+    * filter fold, verify join); by the screen's contract it is small,
+    * so it persists for the query's lifetime
+    * ([[graft.sources.CacheScope]]).
     */
   def bloomSurvivors(train: DataFrame, bench: DataFrame, n: Int = 3,
       minShared: Int = 2, fpp: Double = 0.01,
-      broadcastBench: Boolean = true): DataFrame =
-    bloomSurvivorsManaged(train, bench, n, minShared, fpp, broadcastBench).df
-
-  /** [[bloomSurvivors]] with its internal persist exposed for release
-    * — see [[Dedup.Managed]]. The bench gram table is evaluated three
-    * times (filter sizing, filter fold, verify join); by the screen's
-    * contract it is small, so it persists for the plan's lifetime.
-    */
-  def bloomSurvivorsManaged(train: DataFrame, bench: DataFrame,
-      n: Int = 3, minShared: Int = 2, fpp: Double = 0.01,
-      broadcastBench: Boolean = true): Dedup.Managed = {
+      broadcastBench: Boolean = true): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
-    val bg = gramHashes(bench, "bench_id", n).persist()
+    val bg = CacheScope.persist(gramHashes(bench, "bench_id", n))
     val benchHashes = bg.select("h").distinct()
     val nGrams = benchHashes.count()
     // empty bench side (no docs, or none long enough to carry an
     // n-gram): nothing can be contaminated — and stat.bloomFilter over
     // zero rows yields a null-buffer filter whose probe NPEs, so the
     // guard is correctness, not just a fast path
-    if (nGrams == 0L) {
-      val out = train.select("doc_id").orderBy("doc_id")
-      return new Dedup.Managed(out, Seq(bg))
-    }
+    if (nGrams == 0L) return train.select("doc_id").orderBy("doc_id")
     // numBits spelled out (Spark's own -n·ln(p)/ln²2 optimum) and
     // clamped to ≥ 8: the fpp overload TRUNCATES the optimum to long,
     // so a tiny bench at a loose fpp (1 gram at 0.9) lands on numBits
@@ -211,9 +204,8 @@ object Decontam {
       .select(col("train_id").as("doc_id")).distinct()
     // sort-first export, the survivors() pattern: the range exchange
     // sorts the cheap id scan; the broadcast anti-join preserves order
-    val out = train.select("doc_id").orderBy("doc_id")
+    train.select("doc_id").orderBy("doc_id")
       .join(broadcast(confirmed), Seq("doc_id"), "left_anti")
-    new Dedup.Managed(out, Seq(bg))
   }
 
   /** Per-document repetition profile over word `n`-grams — the
@@ -276,27 +268,22 @@ object Decontam {
     * of (id, hash) pairs, never text; the hot boilerplate bigrams are
     * exactly the non-rare ones, and AQE's skew split covers them. All
     * counting is integer-exact; the single division rounds at 6 dp.
+    *
+    * The exploded (doc, bigram-hash) table persists: it feeds both the
+    * corpus frequency aggregation and the rare-hash join-back, and
+    * without the persist the tokenize+explode+md5 walk runs twice (the
+    * two consumers prune different columns, so the exchanges don't
+    * unify for reuse).
     */
-  def rareBigramRate(docs: DataFrame, maxCount: Long = 2): DataFrame =
-    rareBigramRateManaged(docs, maxCount).df
-
-  /** [[rareBigramRate]] with its internal persist exposed for release
-    * — see [[Dedup.Managed]]. The exploded (doc, bigram-hash) table
-    * feeds both the corpus frequency aggregation and the rare-hash
-    * join-back; without the persist the tokenize+explode+md5 walk runs
-    * twice (the two consumers prune different columns, so the
-    * exchanges don't unify for reuse).
-    */
-  def rareBigramRateManaged(docs: DataFrame,
-      maxCount: Long = 2): Dedup.Managed = {
+  def rareBigramRate(docs: DataFrame, maxCount: Long = 2): DataFrame = {
     // positional (distinct = false): a bigram occurring k times in a
     // doc is k rare OCCURRENCES — multiplicity is the statistic
-    // fanned out (round 18) — the Dedup.minhashPairsManaged rationale:
-    // the md5-per-bigram walk on a single-row-group scan is one-core
-    val bg = graft.sources.Par.fanOut(docs).select(col("doc_id"),
-      explode(graft.expressions.TextExpressions.gramHashes60(
-        tokens(col("text")), 2, distinct = false)).as("h"))
-      .persist()
+    // fanned out (round 18) — the Dedup.minhashPairs rationale: the
+    // md5-per-bigram walk on a single-row-group scan is one-core
+    val bg = CacheScope.persist(graft.sources.Par.fanOut(docs)
+      .select(col("doc_id"),
+        explode(graft.expressions.TextExpressions.gramHashes60(
+          tokens(col("text")), 2, distinct = false)).as("h")))
     // join back only the RARE hashes: every surviving row is a rare
     // occurrence, so n_rare is a plain count — the non-rare (hot,
     // skew-prone) bigrams never cross the join at all. n_bigrams is a
@@ -306,7 +293,7 @@ object Decontam {
       .filter(col("c") <= maxCount).select("h")
     val nRare = bg.join(rare, "h")
       .groupBy("doc_id").agg(count(lit(1)).as("n_rare"))
-    val out = docs.select(col("doc_id"),
+    docs.select(col("doc_id"),
         greatest(size(tokens(col("text"))) - 1, lit(0)).cast("long")
           .as("n_bigrams"))
       .join(nRare, Seq("doc_id"), "left")
@@ -318,7 +305,6 @@ object Decontam {
             / col("n_bigrams").cast("double"))
           .otherwise(lit(0.0)), 6).as("rare_rate"))
       .orderBy("doc_id")
-    new Dedup.Managed(out, Seq(bg))
   }
 
   /** Per-source corpus composition and uniform-target resampling

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.CacheScope
 
 /** Deduplication operators over a document table (`doc_id, text, lang,
   * source, …`) — the exact / near-dup family a training-data pipeline
@@ -24,26 +25,6 @@ import graft.functions.TextFunctions._
   *     a 16-bit bucket (Manku et al., WWW'07 shape).
   */
 object Dedup {
-
-  /** A result DataFrame plus the internally persisted plans backing it.
-    *
-    * The pair miners cache small derived artifacts (candidate edge
-    * lists, signature frames) that are referenced several times inside
-    * one plan. Bench/Verify clear the whole cache between queries, but
-    * a long-lived pipeline composing miners needs a per-operator
-    * release handle — `close()` unpersists exactly the plans this
-    * result created, nothing else (no `spark.catalog.clearCache()`
-    * hammer). Safe to call after the result has been fully consumed;
-    * Spark recomputes if the df is reused afterwards.
-    */
-  final class Managed(val df: DataFrame,
-      private[operators] val handles: Seq[DataFrame])
-      extends AutoCloseable {
-    def close(): Unit = handles.foreach(_.unpersist(false))
-    /** True iff every internally persisted plan has been released. */
-    def released: Boolean =
-      handles.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-  }
 
   /** Exact dedup: group on md5(text); keeper = min doc_id per group.
     * Output one row per distinct content hash.
@@ -105,17 +86,14 @@ object Dedup {
     * — and equi-joins on (pos, band); only the surviving candidate ids
     * re-join the shingle arrays for verification, so full shingle sets
     * move for candidates only, never for the whole corpus×4 bands.
+    *
+    * `lengthPrefilter = false` disables the size-ratio candidate screen
+    * (exists so DedupProps can prove the screen lossless by comparing
+    * both paths; production always keeps it on). The band, candidate
+    * and shingle caches persist through [[graft.sources.CacheScope]].
     */
-  def minhashPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    minhashPairsManaged(docs, threshold).df
-
-  /** [[minhashPairs]] with its internal persist exposed for release —
-    * see [[Managed]]. `lengthPrefilter = false` disables the size-ratio
-    * candidate screen (exists so DedupProps can prove the screen
-    * lossless by comparing both paths; production always keeps it on).
-    */
-  def minhashPairsManaged(docs: DataFrame, threshold: Double = 0.5,
-      lengthPrefilter: Boolean = true): Managed = {
+  def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
+      lengthPrefilter: Boolean = true): DataFrame = {
     // two-step select: `hs` is non-cheap and referenced twice (bands +
     // size) — CollapseProject keeps the steps separate, so the shingle
     // hashing evaluates once per row. CACHED because the self-join
@@ -127,14 +105,13 @@ object Dedup {
     // dominant scalar cost and a single-row-group scan runs it on one
     // core; Par.fanOut no-ops when the scan already parallelizes, and
     // every downstream aggregate here is integer-exact
-    val bands = graft.sources.Par.fanOut(docs)
+    val bands = CacheScope.persist(graft.sources.Par.fanOut(docs)
       .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
       .select(col("doc_id"),
         graft.expressions.TextExpressions.minhashBands(col("hs")).as("bands"),
         size(col("hs")).cast("long").as("sz"))
       .select(col("doc_id"), col("sz"),
-        posexplode(col("bands")).as(Seq("pos", "band")))
-      .cache()
+        posexplode(col("bands")).as(Seq("pos", "band"))))
     // LOSSLESS length prefilter (same algebra as ngramJaccardPairs'
     // buckets): |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
     // J ≥ t forces min/max ≥ t. The verify keeps round(J,6) ≥ t, i.e.
@@ -152,14 +129,13 @@ object Dedup {
     // fraction artifact of the operator — without the persist each
     // reference re-runs the band self-join. MEMORY_AND_DISK, bounded
     // by |candidates|.
-    val candidates = bands.alias("ba")
+    val candidates = CacheScope.persist(bands.alias("ba")
       .join(bands.alias("bb"),
         col("ba.pos") === col("bb.pos") && col("ba.band") === col("bb.band"))
       .filter(col("ba.doc_id") < col("bb.doc_id"))
       .filter(if (lengthPrefilter) sizeOk else lit(true))
       .select(col("ba.doc_id").as("doc_a"), col("bb.doc_id").as("doc_b"))
-      .distinct()
-      .cache()
+      .distinct())
     // shingle the candidate docs ONLY (semi-join first): verification
     // never re-derives features for the whole corpus — at scale the
     // survivors are a vanishing fraction of the input
@@ -169,16 +145,15 @@ object Dedup {
     // cached: both verify-join arms below consume it (sa broadcast +
     // sb), and recomputing means a second scan of docs — bounded by
     // |candidate docs| rows of sorted shingle arrays
-    val candSh = docs.join(candIds, "doc_id")
-      .select(col("doc_id"), array_sort(shingles2(col("text"))).as("sh"))
-      .cache()
+    val candSh = CacheScope.persist(docs.join(candIds, "doc_id")
+      .select(col("doc_id"), array_sort(shingles2(col("text"))).as("sh")))
     val inter = graft.expressions.TextExpressions
       .sortedIntersectCount(col("sh_a"), col("sh_b"))
     val union = size(col("sh_a")).cast("long") +
       size(col("sh_b")).cast("long") - inter
     // same aliasing trick for the two verify joins: candSh's exchange
     // is shared between the doc_a and doc_b sides
-    val out = candidates.alias("c")
+    candidates.alias("c")
       .join(candSh.alias("sa"), col("c.doc_a") === col("sa.doc_id"))
       .join(candSh.alias("sb"), col("c.doc_b") === col("sb.doc_id"))
       .select(col("c.doc_a").as("doc_a"), col("c.doc_b").as("doc_b"),
@@ -196,8 +171,25 @@ object Dedup {
       // (the reference exports single CSVs, so one output partition is
       // the right final shape at any scale)
       .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, Seq(bands, candidates, candSh))
   }
+
+  /** The corpus-side band table (doc_id, sz, pos, band) — the STORED
+    * artifact the incremental screen probes (class doc of
+    * [[minhashPairsIncremental]]): a deployment mines it at ingest,
+    * stores it ([[graft.sources.ModelStore.ensureFrame]]), and every
+    * increment probes the stored rows instead of re-shingling the
+    * corpus. Longs round-trip parquet exactly, so a stored table
+    * screens identically to a fresh one.
+    */
+  def minhashBandTable(docs: DataFrame): DataFrame =
+    // fanned out (round 18) — the minhashPairs rationale
+    graft.sources.Par.fanOut(docs)
+    .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
+    .select(col("doc_id"),
+      graft.expressions.TextExpressions.minhashBands(col("hs")).as("bands"),
+      size(col("hs")).cast("long").as("sz"))
+    .select(col("doc_id"), col("sz"),
+      posexplode(col("bands")).as(Seq("pos", "band")))
 
   /** Cross-batch (incremental) MinHash-LSH screen: near-dup pairs
     * BETWEEN a new batch and an existing corpus, never within either
@@ -214,65 +206,39 @@ object Dedup {
     * PROBES the stored bands: cost per increment is O(batch) map work
     * plus an equi-join whose corpus side is a pre-bucketed 32-byte-row
     * table, not the corpus text.
+    *
+    * `oldBands` = a pre-mined [[minhashBandTable]] of the corpus side
+    * (typically read back from storage); when absent the table is
+    * derived here and persisted in-process as the next-best artifact
+    * lifecycle.
     */
   def minhashPairsIncremental(newDocs: DataFrame, oldDocs: DataFrame,
-      threshold: Double = 0.5, oldBands: Option[DataFrame] = None): DataFrame =
-    minhashPairsIncrementalManaged(newDocs, oldDocs, threshold,
-      oldBands).df
-
-  /** The corpus-side band table (doc_id, sz, pos, band) — the STORED
-    * artifact the incremental screen probes (class doc of
-    * [[minhashPairsIncremental]]): a deployment mines it at ingest,
-    * stores it ([[graft.sources.ModelStore.ensureFrame]]), and every
-    * increment probes the stored rows instead of re-shingling the
-    * corpus. Longs round-trip parquet exactly, so a stored table
-    * screens identically to a fresh one.
-    */
-  def minhashBandTable(docs: DataFrame): DataFrame =
-    // fanned out (round 18) — the minhashPairsManaged rationale
-    graft.sources.Par.fanOut(docs)
-    .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
-    .select(col("doc_id"),
-      graft.expressions.TextExpressions.minhashBands(col("hs")).as("bands"),
-      size(col("hs")).cast("long").as("sz"))
-    .select(col("doc_id"), col("sz"),
-      posexplode(col("bands")).as(Seq("pos", "band")))
-
-  /** [[minhashPairsIncremental]] with its internal persist exposed for
-    * release — see [[Managed]]. `oldBands` = a pre-mined
-    * [[minhashBandTable]] of the corpus side (typically read back
-    * from storage); when absent the table is derived here and
-    * persisted in-process as the next-best artifact lifecycle.
-    */
-  def minhashPairsIncrementalManaged(newDocs: DataFrame,
-      oldDocs: DataFrame, threshold: Double = 0.5,
-      oldBandsIn: Option[DataFrame] = None): Managed = {
+      threshold: Double = 0.5,
+      oldBands: Option[DataFrame] = None): DataFrame = {
     def bandsOf(df: DataFrame) = minhashBandTable(df)
     // the corpus band table IS the operator's stored artifact (class
     // doc: at scale increments probe it, they don't rebuild it) — a
     // caller-provided stored table is used as-is; otherwise persist
     // the derived one so later increments against the same corpus
     // (and bench re-runs — CacheManager matches by canonical plan)
-    // probe the materialized 32-byte-row table. Release via Managed.
-    // The batch side stays unpersisted: it is consumed once and is new
-    // data each increment by definition.
-    val oldBands = oldBandsIn.getOrElse(bandsOf(oldDocs).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // probe the materialized 32-byte-row table. The batch side stays
+    // unpersisted: it is consumed once and is new data each increment
+    // by definition.
+    val oldTable = oldBands.getOrElse(CacheScope.persist(bandsOf(oldDocs)))
     // the minhashPairs lossless size-ratio prefilter, verbatim (the
-    // proof at minhashPairsManaged:110 does not care which side a doc
+    // proof at minhashPairs' `sizeOk` does not care which side a doc
     // came from)
     val sizeOk =
       least(col("ba.sz"), col("bb.sz")).cast("double") >=
         (lit(threshold) - lit(1e-6)) * greatest(col("ba.sz"), col("bb.sz"))
     // persisted: referenced three times (verify join + both shingle
     // semi-join arms), and it is the vanishing-fraction artifact
-    val candidates = bandsOf(newDocs).alias("ba")
-      .join(oldBands.alias("bb"),
+    val candidates = CacheScope.persist(bandsOf(newDocs).alias("ba")
+      .join(oldTable.alias("bb"),
         col("ba.pos") === col("bb.pos") && col("ba.band") === col("bb.band"))
       .filter(sizeOk)
       .select(col("ba.doc_id").as("new_id"), col("bb.doc_id").as("old_id"))
-      .distinct()
-      .cache()
+      .distinct())
     // shingle the candidate docs ONLY, per side (each side's shingle
     // frame feeds exactly one verify arm — no cross-arm reuse to cache)
     def candSh(df: DataFrame, idCol: String) = df
@@ -282,7 +248,7 @@ object Dedup {
       .sortedIntersectCount(col("sh_a"), col("sh_b"))
     val union = size(col("sh_a")).cast("long") +
       size(col("sh_b")).cast("long") - inter
-    val out = candidates.alias("c")
+    candidates.alias("c")
       .join(candSh(newDocs, "new_id").alias("sa"),
         col("c.new_id") === col("sa.doc_id"))
       .join(candSh(oldDocs, "old_id").alias("sb"),
@@ -293,13 +259,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("new_id", "old_id", "jaccard")
       // single-partition export sort of the vanishing pair list — the
-      // minhashPairs tail argument verbatim (minhashPairsManaged:161)
+      // minhashPairs tail argument verbatim (its `repartition(1)` note)
       .repartition(1).sortWithinPartitions("new_id", "old_id")
-    // a caller-provided stored table was never persisted here — only
-    // frames THIS call persisted go in the release set
-    new Managed(out,
-      if (oldBandsIn.isDefined) Seq(candidates)
-      else Seq(oldBands, candidates))
   }
 
   /** Blocked pairwise n-gram Jaccard: self-join within (lang, source,
@@ -321,14 +282,8 @@ object Dedup {
     * where even a single cohort is huge, compose with [[minhashPairs]]
     * (LSH banding) and keep (lang, source) as a pre-filter.
     */
-  def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    ngramJaccardPairsManaged(docs, threshold).df
-
-  /** [[ngramJaccardPairs]] with its internal persist exposed for
-    * release — see [[Managed]].
-    */
-  def ngramJaccardPairsManaged(docs: DataFrame,
-      threshold: Double = 0.8): Managed = {
+  def ngramJaccardPairs(docs: DataFrame,
+      threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold < 1, "threshold must be in (0,1)")
     val bucketWidth = -math.log(threshold) // ln(1/t)
     // word sets sorted ONCE per doc so the per-pair verify is a native
@@ -341,13 +296,12 @@ object Dedup {
     // arrays — the operator's whole working set, which both sides
     // fully consume either way; MEMORY_AND_DISK trades one disk
     // materialization for the second scalar pass.
-    val withSet = graft.sources.Par.fanOut(docs)
-      // fanned out (round 18) — the minhashPairsManaged rationale
+    val withSet = CacheScope.persist(graft.sources.Par.fanOut(docs)
+      // fanned out (round 18) — the minhashPairs rationale
       .select(col("doc_id"), col("lang"), col("source"),
         array_sort(wordSet(col("text"))).as("ws"))
       .withColumn("szb",
-        floor(log(size(col("ws")).cast("double")) / bucketWidth).cast("long"))
-      .cache()
+        floor(log(size(col("ws")).cast("double")) / bucketWidth).cast("long")))
     // CANDIDATES ON IDS, PAYLOADS ATTACHED AFTER (the ANN families'
     // bucket-join discipline): the block self-join carries only
     // (block key, doc_id), so whichever physical join Catalyst picks,
@@ -385,7 +339,7 @@ object Dedup {
       .sortedIntersectCount(col("ws_a"), col("ws_b"))
     val union = size(col("ws_a")).cast("long") +
       size(col("ws_b")).cast("long") - inter
-    val out = ids
+    ids
       .join(withSet.select(col("doc_id").as("doc_a"), col("ws").as("ws_a")),
         Seq("doc_a"))
       .join(withSet.select(col("doc_id").as("doc_b"), col("ws").as("ws_b")),
@@ -398,7 +352,6 @@ object Dedup {
       // the blocked join+verify stays parallel upstream of the
       // exchange; only the surviving pair list crosses it
       .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, Seq(withSet))
   }
 
   /** PERCOLATION-SAFE Jaccard threshold for the word-set near-dup
@@ -427,24 +380,19 @@ object Dedup {
     * Scale shape: one n-row partner equi-join over the word sets +
     * a ≤ 10-row aggregate. Output: one row (threshold_micro,
     * mode_bucket).
+    *
+    * Two caches: the sorted word sets (ONE corpus pass serves the
+    * count, the partner side, and the target side — uncached this plan
+    * scans the corpus three times) and the ≤ 10-row histogram
+    * (consumed by the total, the mode, and the gap scan — each would
+    * re-run the partner join).
     */
   def calibratedJaccardMicro(docs: DataFrame,
-      epsPm: Long = 0L): DataFrame =
-    calibratedJaccardMicroManaged(docs, epsPm).df
-
-  /** [[calibratedJaccardMicro]] with its internal persists exposed for
-    * release — see [[Managed]]. Two caches: the sorted word sets (ONE
-    * corpus pass serves the count, the partner side, and the target
-    * side — uncached this plan scans the corpus three times) and the
-    * ≤ 10-row histogram (consumed by the total, the mode, and the gap
-    * scan — each would re-run the partner join).
-    */
-  def calibratedJaccardMicroManaged(docs: DataFrame,
-      epsPm: Long = 0L): Managed = {
+      epsPm: Long = 0L): DataFrame = {
     require(epsPm >= 0L && epsPm <= 10000L,
       s"epsPm must be in [0,10000], got $epsPm")
-    val ws = docs.select(col("doc_id"),
-      array_sort(wordSet(col("text"))).as("ws")).cache()
+    val ws = CacheScope.persist(docs.select(col("doc_id"),
+      array_sort(wordSet(col("text"))).as("ws")))
     val n = ws.count()
     val a = ws.select(col("doc_id").as("aid"), col("ws").as("ws_a"))
       .withColumn("p", wordHash60(col("aid").cast("string")) % lit(n))
@@ -454,20 +402,19 @@ object Dedup {
       .sortedIntersectCount(col("ws_a"), col("ws_b"))
     val union = size(col("ws_a")).cast("long") +
       size(col("ws_b")).cast("long") - inter
-    val hist = a.join(b, col("p") === col("bid"))
+    val hist = CacheScope.persist(a.join(b, col("p") === col("bid"))
       .filter(size(col("ws_a")) + size(col("ws_b")) > 0)
       .select(round(round(inter.cast("double") / union, 6) * lit(1e6))
         .cast("long").as("jmicro"))
       .select(least(lit(9L),
         call_function("div", col("jmicro"), lit(100000L))).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
-      .cache()
+      .groupBy("bucket").agg(count(lit(1)).as("n_pairs")))
     val tot = hist.agg(coalesce(sum("n_pairs"), lit(0L)).as("n_total"))
     val mode = hist
       .agg(max(struct(col("n_pairs"), (-col("bucket")).as("nb"))).as("m"))
       .select((-col("m.nb")).as("mode_bucket"))
     val grid = docs.sparkSession.range(0, 11).select(col("id").as("cand"))
-    val out = grid.join(hist, col("cand") === col("bucket"), "left")
+    grid.join(hist, col("cand") === col("bucket"), "left")
       .select(col("cand"), coalesce(col("n_pairs"), lit(0L)).as("np"))
       .crossJoin(broadcast(tot)).crossJoin(broadcast(mode))
       .filter(col("cand") > col("mode_bucket") &&
@@ -477,7 +424,6 @@ object Dedup {
         coalesce(col("tb") * lit(100000L), lit(1000001L))
           .as("threshold_micro"),
         coalesce(col("mb"), lit(-1L)).as("mode_bucket"))
-    new Managed(out, Seq(ws, hist))
   }
 
   /** [[ngramJaccardPairs]] at the CALIBRATED threshold: mine with the
@@ -495,8 +441,9 @@ object Dedup {
     // the calibration's collect is terminal here, so its caches are
     // released immediately (the returned miner plan shares nothing
     // with them)
-    val cal = calibratedJaccardMicroManaged(docs, epsPm)
-    val t = try cal.df.collect().head.getLong(0) finally cal.close()
+    val t = CacheScope.run {
+      calibratedJaccardMicro(docs, epsPm).collect().head.getLong(0)
+    }
     // an empty corpus calibrates to the 1000001 sentinel — nothing
     // can pair; keep the plan valid with an always-false cut
     val blockT = math.min(0.95, math.max(0.1, t / 1e6))
@@ -572,36 +519,29 @@ object Dedup {
     * Scale shape: one n-row partner equi-join over the 16-byte
     * signature rows + a ≤ 10-row aggregate. Output: one row
     * (radius, mode_bucket).
+    *
+    * The signature cache serves the count and both partner sides; the
+    * ≤ 10-row histogram is cached against its two aggregate consumers.
+    * `epsPm` is the same per-myriad tolerance the sibling calibrations
+    * expose (a bucket counts as a gap when `n_pairs·10⁴ ≤
+    * epsPm·n_total`); the strict default 0 is the shipped rule.
     */
   def calibratedHammingRadius(docs: DataFrame,
-      epsPm: Long = 0L): DataFrame =
-    calibratedHammingRadiusManaged(docs, epsPm).df
-
-  /** [[calibratedHammingRadius]] with its internal persists exposed
-    * for release — see [[Managed]] (the signature cache serves the
-    * count and both partner sides; the ≤ 10-row histogram is cached
-    * against its two aggregate consumers). `epsPm` is the same
-    * per-myriad tolerance the sibling calibrations expose (a bucket
-    * counts as a gap when `n_pairs·10⁴ ≤ epsPm·n_total`); the strict
-    * default 0 is the shipped rule.
-    */
-  def calibratedHammingRadiusManaged(docs: DataFrame,
-      epsPm: Long = 0L): Managed = {
+      epsPm: Long = 0L): DataFrame = {
     require(epsPm >= 0L && epsPm <= 10000L,
       s"epsPm must be in [0,10000], got $epsPm")
-    val sv = docs
-      .select(col("doc_id"), simhash60(col("text")).as("simhash")).cache()
+    val sv = CacheScope.persist(docs
+      .select(col("doc_id"), simhash60(col("text")).as("simhash")))
     val n = sv.count()
     val a = sv.select(col("doc_id").as("aid"), col("simhash").as("sig_a"))
       .withColumn("p", wordHash60(col("aid").cast("string")) % lit(n))
       .filter(col("p") =!= col("aid"))
     val b = sv.select(col("doc_id").as("bid"), col("simhash").as("sig_b"))
-    val hist = a.join(b, col("p") === col("bid"))
+    val hist = CacheScope.persist(a.join(b, col("p") === col("bid"))
       .select(least(lit(9L), call_function("div",
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"),
         lit(6L))).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
-      .cache()
+      .groupBy("bucket").agg(count(lit(1)).as("n_pairs")))
     // ties toward the larger distance: max(struct(count, bucket))
     val mode = hist
       .agg(max(struct(col("n_pairs"), col("bucket"))).as("m"))
@@ -614,12 +554,11 @@ object Dedup {
       .filter(col("cand") < col("mode_bucket") &&
         col("np") * lit(10000L) <= lit(epsPm) * col("n_total"))
       .agg(max(col("cand")).as("gb"))
-    val out = gap.crossJoin(broadcast(mode)).select(
+    gap.crossJoin(broadcast(mode)).select(
       when(coalesce(col("mode_bucket"), lit(0L)) === lit(0L), lit(-1L))
         .otherwise(coalesce(col("gb") * lit(6L) + lit(5L), lit(0L)))
         .as("radius"),
       coalesce(col("mode_bucket"), lit(-1L)).as("mode_bucket"))
-    new Managed(out, Seq(sv, hist))
   }
 
   /** [[simhashPairs]] at the CALIBRATED radius: mine with the
@@ -636,8 +575,9 @@ object Dedup {
     */
   def simhashPairsCalibrated(docs: DataFrame,
       maxHamming: Int = 3, epsPm: Long = 0L): DataFrame = {
-    val cal = calibratedHammingRadiusManaged(docs, epsPm)
-    val r = try cal.df.collect().head.getLong(0) finally cal.close()
+    val r = CacheScope.run {
+      calibratedHammingRadius(docs, epsPm).collect().head.getLong(0)
+    }
     val eff = math.min(maxHamming.toLong, r)
     simhashPairs(docs, maxHamming)
       .filter(col("hamming") <= lit(eff))
@@ -660,24 +600,17 @@ object Dedup {
     * sane sketch width) are deduped (a pair agreeing on k blocks
     * appears k times) and single-partition sorted for the export tail.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashPairsManaged(docs, maxHamming).df
-
-  /** [[simhashPairs]] with its internal persist exposed for release —
-    * see [[Managed]].
-    */
-  def simhashPairsManaged(docs: DataFrame, maxHamming: Int = 3): Managed = {
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val nBlocks = maxHamming + 1
     require(SimhashBits % nBlocks == 0,
       s"maxHamming must be one of 1..5 (60-bit blocks), got $maxHamming")
     val blockBits = SimhashBits / nBlocks
     val mask = (1L << blockBits) - 1
     // cache: the 60-bit fold is the expensive scalar half and the
-    // self-join evaluates its input once per side (Bench/Verify clear
-    // caches between queries; long-lived pipelines release via Managed)
-    val sigs = graft.sources.Par.fanOut(docs)
-      // fanned out (round 18) — the minhashPairsManaged rationale
-      .select(col("doc_id"), simhash60(col("text")).as("simhash")).cache()
+    // self-join evaluates its input once per side
+    val sigs = CacheScope.persist(graft.sources.Par.fanOut(docs)
+      // fanned out (round 18) — the minhashPairs rationale
+      .select(col("doc_id"), simhash60(col("text")).as("simhash")))
     val blocks = sigs.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until nBlocks).map(i =>
         shiftright(col("simhash"), SimhashBits - (i + 1) * blockBits)
@@ -686,7 +619,7 @@ object Dedup {
       col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
     val b = blocks.select(col("blk"), col("bval"),
       col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    val out = a.join(b, Seq("blk", "bval"))
+    a.join(b, Seq("blk", "bval"))
       .filter(col("doc_a") < col("doc_b"))
       .withColumn("hamming",
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
@@ -698,7 +631,6 @@ object Dedup {
       // range-sampling double-execution, and only the surviving pair
       // list crosses the single-task exchange
       .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, Seq(sigs))
   }
 
   /** Winnowing near-dup pairs (MOSS shape): docs sharing ≥ `minShared`
@@ -724,22 +656,15 @@ object Dedup {
     * operator's semantics (the oracle applies it identically).
     */
   def winnowPairs(docs: DataFrame, k: Int = 3, win: Int = 4,
-      minShared: Int = 3, maxDf: Long = 128L): DataFrame =
-    winnowPairsManaged(docs, k, win, minShared, maxDf).df
-
-  /** [[winnowPairs]] with its internal persist exposed for release —
-    * see [[Managed]].
-    */
-  def winnowPairsManaged(docs: DataFrame, k: Int = 3, win: Int = 4,
-      minShared: Int = 3, maxDf: Long = 128L): Managed = {
+      minShared: Int = 3, maxDf: Long = 128L): DataFrame = {
     // cached: the self-join consumes the fingerprint table once per
     // side (plus the df aggregate); 16 bytes per (doc, fp) row, no text
-    val fps = graft.sources.Par.fanOut(docs).select(col("doc_id"),
-      // fanned out (round 18) — the minhashPairsManaged rationale
-      explode(winnowFingerprints(col("text"), k, win)).as("fp"))
-      .cache()
+    val fps = CacheScope.persist(graft.sources.Par.fanOut(docs)
+      // fanned out (round 18) — the minhashPairs rationale
+      .select(col("doc_id"),
+        explode(winnowFingerprints(col("text"), k, win)).as("fp")))
     val hits = dfCapped(fps, maxDf)
-    val out = hits.alias("a")
+    hits.alias("a")
       .join(hits.alias("b"), col("a.fp") === col("b.fp"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -747,7 +672,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
       // repartition(1) + single-partition sort (see minhashPairs)
       .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, Seq(fps))
   }
 
   /** Hot-key cap shared by the winnow-fingerprint miners: drop every
@@ -808,49 +732,49 @@ object Dedup {
   def containmentPairs(docs: DataFrame, k: Int = 3, win: Int = 4,
       minShared: Int = 2, thresholdPm: Long = 8000L,
       maxDf: Long = 128L): DataFrame =
-    containmentPairsManaged(docs, k, win, minShared, thresholdPm, maxDf).df
+    containmentVerified(docs, k, win, minShared, thresholdPm, maxDf)
+      .select("doc_a", "doc_b", "containment_pm")
+      // export tail: single sorted file (see minhashPairs); the
+      // surviving pair list is threshold-vanishing
+      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
 
   /** Shared core of [[containmentPairs]] / [[containmentSurvivors]]:
     * verified over-threshold pairs WITH both shingle-set sizes
-    * (doc_a, doc_b, containment_pm, sz_a, sz_b), plus the internal
-    * caches for release.
+    * (doc_a, doc_b, containment_pm, sz_a, sz_b).
     */
   private def containmentVerified(docs: DataFrame, k: Int, win: Int,
-      minShared: Int, thresholdPm: Long,
-      maxDf: Long): (DataFrame, Seq[DataFrame]) = {
+      minShared: Int, thresholdPm: Long, maxDf: Long): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(thresholdPm >= 0L && thresholdPm <= 10000L,
       s"thresholdPm must be in [0, 10000], got $thresholdPm")
     // fingerprint table: 16 bytes per (doc, fp) row, no text (the
     // winnowPairs convention); cached — the df aggregate and both
     // self-join sides read it; fanned out (round 18) — the
-    // minhashPairsManaged rationale
-    val fps = graft.sources.Par.fanOut(docs).select(col("doc_id"),
-      explode(winnowFingerprints(col("text"), k, win)).as("fp"))
-      .cache()
+    // minhashPairs rationale
+    val fps = CacheScope.persist(graft.sources.Par.fanOut(docs)
+      .select(col("doc_id"),
+        explode(winnowFingerprints(col("text"), k, win)).as("fp")))
     val hits = dfCapped(fps, maxDf)
-    val candidates = hits.alias("a")
+    val candidates = CacheScope.persist(hits.alias("a")
       .join(hits.alias("b"), col("a.fp") === col("b.fp"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .select("doc_a", "doc_b")
-      .cache()
+      .select("doc_a", "doc_b"))
     // shingle only the candidate docs (semi-join first — verification
     // never re-derives features for the whole corpus)
     val candIds = candidates.select(col("doc_a").as("doc_id"))
       .union(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
-    val candSh = docs.join(candIds, "doc_id")
+    val candSh = CacheScope.persist(docs.join(candIds, "doc_id")
       .select(col("doc_id"),
         array_sort(graft.functions.TextFunctions
-          .shinglesN(col("text"), k)).as("sh"))
-      .cache()
+          .shinglesN(col("text"), k)).as("sh")))
     val inter = graft.expressions.TextExpressions
       .sortedIntersectCount(col("sh_a"), col("sh_b")).cast("long")
     val minSz = least(size(col("sh_a")), size(col("sh_b"))).cast("long")
-    val verified = candidates.alias("c")
+    candidates.alias("c")
       .join(candSh.alias("sa"), col("c.doc_a") === col("sa.doc_id"))
       .join(candSh.alias("sb"), col("c.doc_b") === col("sb.doc_id"))
       .select(col("c.doc_a").as("doc_a"), col("c.doc_b").as("doc_b"),
@@ -865,23 +789,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("containment_pm"),
         size(col("sh_a")).cast("long").as("sz_a"),
         size(col("sh_b")).cast("long").as("sz_b"))
-    (verified, Seq(fps, candidates, candSh))
-  }
-
-  /** [[containmentPairs]] with its internal persists exposed for
-    * release — see [[Managed]].
-    */
-  def containmentPairsManaged(docs: DataFrame, k: Int = 3, win: Int = 4,
-      minShared: Int = 2, thresholdPm: Long = 8000L,
-      maxDf: Long = 128L): Managed = {
-    val (verified, caches) =
-      containmentVerified(docs, k, win, minShared, thresholdPm, maxDf)
-    val out = verified
-      .select("doc_a", "doc_b", "containment_pm")
-      // export tail: single sorted file (see minhashPairs); the
-      // surviving pair list is threshold-vanishing
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, caches)
   }
 
   /** The removal half of containment dedup: survivors after dropping,
@@ -899,28 +806,17 @@ object Dedup {
     */
   def containmentSurvivors(docs: DataFrame, k: Int = 3, win: Int = 4,
       minShared: Int = 2, thresholdPm: Long = 8000L,
-      maxDf: Long = 128L): DataFrame =
-    containmentSurvivorsManaged(docs, k, win, minShared, thresholdPm,
-      maxDf).df
-
-  /** [[containmentSurvivors]] with its internal persists exposed for
-    * release — see [[Managed]].
-    */
-  def containmentSurvivorsManaged(docs: DataFrame, k: Int = 3,
-      win: Int = 4, minShared: Int = 2,
-      thresholdPm: Long = 8000L, maxDf: Long = 128L): Managed = {
-    val (verified, caches) =
-      containmentVerified(docs, k, win, minShared, thresholdPm, maxDf)
-    val drops = verified.select(
+      maxDf: Long = 128L): DataFrame = {
+    val drops = containmentVerified(docs, k, win, minShared, thresholdPm,
+        maxDf).select(
       when(col("sz_a") < col("sz_b"), col("doc_a"))
         .when(col("sz_b") < col("sz_a"), col("doc_b"))
         .otherwise(col("doc_b")) // equal sizes: a < b, keep a
         .as("doc_id"))
       .distinct()
-    val out = docs.join(broadcast(drops), Seq("doc_id"), "left_anti")
+    docs.join(broadcast(drops), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("n_chars"))
       .orderBy("doc_id")
-    new Managed(out, caches)
   }
 
   /** Exact-substring duplicate pairs (Lee et al. 2021, "Deduplicating
@@ -957,15 +853,7 @@ object Dedup {
     */
   def substringPairs(docs: DataFrame, gram: Int = 8, minRun: Int = 12,
       maxDf: Long = 128L): DataFrame =
-    substringPairsManaged(docs, gram, minRun, maxDf).df
-
-  /** [[substringPairs]] with its internal persist exposed for release —
-    * see [[Managed]].
-    */
-  def substringPairsManaged(docs: DataFrame, gram: Int = 8,
-      minRun: Int = 12, maxDf: Long = 128L): Managed = {
-    val (runs, anchors) = substringRuns(docs, gram, maxDf)
-    val out = runs
+    substringRuns(docs, gram, maxDf)
       .filter(col("run_len") >= minRun)
       .groupBy("doc_a", "doc_b")
       .agg(max(col("run_len")).as("max_run"),
@@ -973,13 +861,7 @@ object Dedup {
       // export tail: only the surviving pair list crosses the
       // single-task exchange (see minhashPairs)
       .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    new Managed(out, Seq(anchors))
-  }
 
-  /** Shared core of [[substringPairs]] / [[substringClean]]: maximal
-    * matching runs per (doc_a < doc_b, diagonal), with 0-based span
-    * starts on both sides. Returns (runs, cached anchors handle).
-    */
   /** Positional gram anchors (doc_id, pos, h) — one row per token
     * position (minus the trailing gram−1), 24 bytes each, no text.
     * The shared primitive of the substring family: the batch miners
@@ -995,12 +877,16 @@ object Dedup {
         tokens(col("text")), gram, distinct = false)).as(Seq("pos", "h")))
   }
 
+  /** Shared core of [[substringPairs]] / [[substringClean]]: maximal
+    * matching runs per (doc_a < doc_b, diagonal), with 0-based span
+    * starts on both sides.
+    */
   private def substringRuns(docs: DataFrame, gram: Int,
-      maxDf: Long): (DataFrame, DataFrame) = {
+      maxDf: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Cached: consumed by the df-count aggregate AND both self-join
     // sides.
-    val anchors = positionalAnchors(docs, gram).cache()
+    val anchors = CacheScope.persist(positionalAnchors(docs, gram))
     // hot-gram cap: one aggregate on the SAME key as the join, so the
     // df table is hash-partitioned identically to the probe side
     val rare = anchors.groupBy("h")
@@ -1018,13 +904,12 @@ object Dedup {
     // gaps-and-islands per diagonal: consecutive pos_a values are one
     // shared run; island size + gram − 1 is its exact token length
     val wd = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    val runs = aligned
+    aligned
       .withColumn("grp", col("pos_a") - row_number().over(wd))
       .groupBy("doc_a", "doc_b", "diag", "grp")
       .agg((count(lit(1)) + lit(gram - 1)).as("run_len"),
         min(col("pos_a")).as("start_a"))
       .withColumn("start_b", col("start_a") - col("diag"))
-    (runs, anchors)
   }
 
   /** The REMOVAL half of Lee et al. 2021 (see [[substringPairs]]):
@@ -1046,15 +931,8 @@ object Dedup {
     * text (the [[graft.operators.Chunking.clean]] convention).
     */
   def substringClean(docs: DataFrame, gram: Int = 8, minRun: Int = 12,
-      maxDf: Long = 128L): DataFrame =
-    substringCleanManaged(docs, gram, minRun, maxDf).df
-
-  /** [[substringClean]] with its internal persist exposed for release —
-    * see [[Managed]].
-    */
-  def substringCleanManaged(docs: DataFrame, gram: Int = 8,
-      minRun: Int = 12, maxDf: Long = 128L): Managed = {
-    val (runs, anchors) = substringRuns(docs, gram, maxDf)
+      maxDf: Long = 128L): DataFrame = {
+    val runs = substringRuns(docs, gram, maxDf)
     // spans to remove, on the HIGHER-id side of each pair; distinct
     // covered positions union overlapping spans. The explode is
     // bounded by the corpus' duplicated-token mass (run_len each).
@@ -1073,12 +951,11 @@ object Dedup {
         array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("tok")))),
           t => t.getField("tok")), " ").as("clean_text"))
-    val out = docs.select("doc_id").join(kept, Seq("doc_id"), "left")
+    docs.select("doc_id").join(kept, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("clean_text"), lit("")).as("clean_text"))
       .orderBy("doc_id")
-    new Managed(out, Seq(anchors))
   }
 
   /** (source_a, source_b, n_pairs, n_docs): the cross-source overlap
@@ -1096,25 +973,21 @@ object Dedup {
     * aggregations, both keyed on the |sources|²-bounded pair key. The
     * distinct-doc count dedups (source pair, doc) BEFORE counting, so
     * no per-group collection ever materializes.
+    *
+    * The tagged pair frame is persisted: it feeds BOTH aggregations,
+    * and without the persist each would re-run the (expensive) pair
+    * miner upstream.
     */
-  def sourceOverlap(docs: DataFrame, pairs: DataFrame): DataFrame =
-    sourceOverlapManaged(docs, pairs).df
-
-  /** [[sourceOverlap]] with its internal persist exposed ([[Managed]]):
-    * the tagged pair frame feeds BOTH aggregations, and without the
-    * persist each would re-run the (expensive) pair miner upstream.
-    */
-  def sourceOverlapManaged(docs: DataFrame, pairs: DataFrame): Managed = {
+  def sourceOverlap(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
-    val tagged = pairs
+    val tagged = CacheScope.persist(pairs
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
         "doc_a")
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")),
         "doc_b")
       .select(least(col("sa"), col("sb")).as("source_a"),
         greatest(col("sa"), col("sb")).as("source_b"),
-        col("doc_a"), col("doc_b"))
-      .cache()
+        col("doc_a"), col("doc_b")))
     val nPairs = tagged.groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_pairs"))
     val nDocs = tagged
@@ -1123,8 +996,8 @@ object Dedup {
       .distinct()
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_docs"))
-    new Managed(nPairs.join(nDocs, Seq("source_a", "source_b"))
-      .orderBy("source_a", "source_b"), Seq(tagged))
+    nPairs.join(nDocs, Seq("source_a", "source_b"))
+      .orderBy("source_a", "source_b")
   }
 
   /** Dedup completion: collapse near-dup PAIRS into clusters and pick
@@ -1136,13 +1009,6 @@ object Dedup {
     * Deterministic: labels converge to min reachable doc_id, so the
     * result is iteration-order independent (DuckDB verifies via a
     * recursive transitive-closure CTE).
-    */
-  def clusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20,
-      localThreshold: Int = 100000, sorted: Boolean = true): DataFrame =
-    clustersManaged(docs, pairs, maxIters, localThreshold, sorted).df
-
-  /** [[clusters]] with its internal persists exposed for release (see
-    * [[Managed]]) and the export sort made explicit.
     *
     * `sorted = true` (the oracle/export convention — the reference
     * exports single ordered CSVs) ends in a corpus-wide `orderBy
@@ -1153,8 +1019,8 @@ object Dedup {
     * cost (the same argument as the pair miners' repartition(1)
     * tails, which only ever sort the vanishing-fraction pair list).
     */
-  def clustersManaged(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20,
-      localThreshold: Int = 100000, sorted: Boolean = true): Managed = {
+  def clusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20,
+      localThreshold: Int = 100000, sorted: Boolean = true): DataFrame = {
     def exportOrder(df: DataFrame): DataFrame =
       if (sorted) df.orderBy("doc_id") else df
     // fast path: an LSH pair graph is normally a vanishing fraction of
@@ -1188,27 +1054,27 @@ object Dedup {
       val spark = docs.sparkSession
       import spark.implicits._
       val mapDf = broadcast(mapping.toDF("doc_id", "root"))
-      return new Managed(exportOrder(docs.select(col("doc_id"))
+      return exportOrder(docs.select(col("doc_id"))
         .join(mapDf, Seq("doc_id"), "left")
         .select(col("doc_id"),
-          coalesce(col("root"), col("doc_id")).as("cluster_id"))), Nil)
+          coalesce(col("root"), col("doc_id")).as("cluster_id")))
     }
 
     // both edge orientations from ONE scan of the miner subtree
     // (round 19): the previous two-projection union executed the
     // whole upstream pair miner TWICE when this cache landed — the
     // explode emits the identical (src, dst) multiset per pair row
-    val edges = pairs.select(explode(array(
+    val edges = CacheScope.persist(pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .cache()
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // only docs touched by an edge can ever change labels — iterate on
     // that (tiny) subgraph; the untouched corpus anti-joins in at the
     // end as its own singleton clusters. At 100 TB the pair graph is a
     // vanishing fraction of the corpus, so the loop never touches the
     // bulk of the data.
-    val edgeIds = edges.select(col("src").as("doc_id")).distinct().cache()
+    val edgeIds = CacheScope.persist(
+      edges.select(col("src").as("doc_id")).distinct())
     var labels = edgeIds.select(col("doc_id"), col("doc_id").as("cluster_id"))
     var cached: DataFrame = null
     var converged = false
@@ -1243,10 +1109,12 @@ object Dedup {
       labels = docs.sparkSession.createDataFrame(pruned.rdd, pruned.schema)
       i += 1
     }
+    // the last round's cache backs the returned labels: the query owns
+    // it from here
+    Option(cached).foreach(CacheScope.persist)
     val untouched = docs.select(col("doc_id"), col("doc_id").as("cluster_id"))
       .join(edgeIds, Seq("doc_id"), "left_anti")
-    new Managed(exportOrder(untouched.union(labels)),
-      Seq(edges, edgeIds) ++ Option(cached))
+    exportOrder(untouched.union(labels))
   }
 
   /** Quality-aware dedup completion — the keep-BEST policy (the
@@ -1265,7 +1133,7 @@ object Dedup {
     * (null stays null).
     *
     * Output: one row per cluster (cluster_id, doc_id = the survivor,
-    * q_score, n_docs). Scale shape: [[clustersManaged]]'s labels
+    * q_score, n_docs). Scale shape: [[clusters]]' labels
     * (unsorted — the total order here is per-cluster, not corpus-
     * wide) join the (doc_id, score) projection, then ONE hash
     * aggregate with map-side combine: `max(struct(score, −doc_id))`
@@ -1274,22 +1142,16 @@ object Dedup {
     * struct per (partition, cluster).
     */
   def bestSurvivors(docs: DataFrame, pairs: DataFrame, score: Column,
-      maxIters: Int = 20, localThreshold: Int = 100000): DataFrame =
-    bestSurvivorsManaged(docs, pairs, score, maxIters, localThreshold).df
-
-  /** [[bestSurvivors]] with [[clustersManaged]]'s persists exposed. */
-  def bestSurvivorsManaged(docs: DataFrame, pairs: DataFrame,
-      score: Column, maxIters: Int = 20,
-      localThreshold: Int = 100000): Managed = {
-    val m = clustersManaged(docs, pairs, maxIters, localThreshold,
+      maxIters: Int = 20, localThreshold: Int = 100000): DataFrame = {
+    val labels = clusters(docs, pairs, maxIters, localThreshold,
       sorted = false)
     val labeled = docs
       .select(col("doc_id"), score.cast("long").as("q_score"))
-      .join(m.df, Seq("doc_id"))
+      .join(labels, Seq("doc_id"))
     // sort key coalesced so null scores lose EXPLICITLY (see scaladoc);
     // the raw q_score rides along as the struct's third field so the
     // winner reports its actual value, null included
-    val out = labeled.groupBy("cluster_id")
+    labeled.groupBy("cluster_id")
       .agg(max(struct(
           coalesce(col("q_score"), lit(Long.MinValue)).as("k"),
           (-col("doc_id")).as("nid"), col("q_score"))).as("b"),
@@ -1297,6 +1159,5 @@ object Dedup {
       .select(col("cluster_id"), (-col("b.nid")).as("doc_id"),
         col("b.q_score").as("q_score"), col("n_docs"))
       .orderBy("cluster_id")
-    new Managed(out, m.handles)
   }
 }

@@ -148,7 +148,8 @@ object Evaluation {
     // persist is what stops the by-label and by-pred rollups each
     // re-running the (possibly corpus-sized) scoring subtree; the
     // frame itself is |classes|^2 rows at any corpus scale
-    val conf = confusion(scored, labelCol, predCol).persist()
+    val conf = graft.sources.CacheScope.persist(
+      confusion(scored, labelCol, predCol))
     val byLabel = conf.groupBy(col("label").as("cls"))
       .agg(sum("n").as("n_label"),
         sum(when(col("label") === col("pred"), col("n")).otherwise(0L))

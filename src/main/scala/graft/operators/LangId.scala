@@ -141,7 +141,8 @@ object LangId {
       * inside every consuming subtree.
       */
     def persisted(): NbModel = {
-      val d = delta.persist(); val s = langStats.persist()
+      val d = graft.sources.CacheScope.persist(delta)
+      val s = graft.sources.CacheScope.persist(langStats)
       d.count(); s.count()
       NbModel(d, s, buckets, n, wordFeats, classes)
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.CacheScope
 
 /** CCNet-style language-model perplexity filtering (Wenzek et al.
   * 2019): score every document by its negative log-likelihood under a
@@ -97,7 +98,8 @@ object Perplexity {
       * Eager — both frames are materialized before return.
       */
     def persisted(): LmModel = {
-      val p = pairLp.persist(); val c = ctxLp.persist()
+      val p = CacheScope.persist(pairLp)
+      val c = CacheScope.persist(ctxLp)
       p.count(); c.count()
       LmModel(p, c, buckets)
     }
@@ -183,20 +185,14 @@ object Perplexity {
     * (≤ the ~8.3M-value range at B=4096, in practice a few thousand),
     * so its single-partition running-sum window is over a bounded
     * frame — the `dsirSelect` band argument — and the corpus itself
-    * is never globally sorted or ntile'd.
+    * is never globally sorted or ntile'd. The scored corpus persists
+    * ([[graft.sources.CacheScope]]): it feeds both the histogram pass
+    * and the final tagging pass.
     */
   def terciles(raw: DataFrame, target: DataFrame,
-      buckets: Int = 4096): DataFrame =
-    tercilesManaged(raw, target, buckets).df
-
-  /** [[terciles]] with the internally persisted score frame exposed
-    * for release (the scored corpus feeds both the histogram pass and
-    * the final tagging pass; see [[Dedup.Managed]]).
-    */
-  def tercilesManaged(raw: DataFrame, target: DataFrame,
-      buckets: Int = 4096): Dedup.Managed = {
-    val s = score(raw, target, buckets)
-      .select("doc_id", "nll_per_tok").persist()
+      buckets: Int = 4096): DataFrame = {
+    val s = CacheScope.persist(score(raw, target, buckets)
+      .select("doc_id", "nll_per_tok"))
     val hist = s.groupBy("nll_per_tok").agg(count(lit(1)).as("c"))
     val cum = hist.withColumn("cum",
       sum("c").over(Window.orderBy("nll_per_tok")
@@ -207,11 +203,10 @@ object Perplexity {
         .as("t1"),
       min(when(col("cum") >= expr("(2 * n + 2) div 3"), col("nll_per_tok")))
         .as("t2"))
-    val out = s.crossJoin(broadcast(cuts))
+    s.crossJoin(broadcast(cuts))
       .select(col("doc_id"), col("nll_per_tok"),
         when(col("nll_per_tok") <= col("t1"), lit("head"))
           .when(col("nll_per_tok") <= col("t2"), lit("middle"))
           .otherwise(lit("tail")).as("bucket"))
-    new Dedup.Managed(out, Seq(s))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.CacheScope
+
 /** Approximate-nearest-neighbor / similarity-search operators over an
   * embedding table (`vec_id, embedding array<float>, label`) — the
   * BASELINE.json extension family (no analog in the reference).
@@ -681,39 +683,27 @@ object Similarity {
     * [[lshTopK]] convention) to skip the one-job count() trainer.
     * Returns the survivor set (vec_id, cell, label).
     *
-    * CACHE LIFETIME: this convenience form discards the persist handle
-    * of the internal assigned-cells frame — the cache lives until the
-    * session's next `catalog.clearCache()` (the Bench harness does this
-    * per run). Long-lived pipelines should call
-    * [[semanticDedupManaged]] and `close()` after the final action.
+    * CACHE LIFETIME: the assigned-cells frame is consumed THREE times
+    * (both self-join sides + the survivor anti-join); Spark's
+    * ReuseExchange covers the self-join but the third consumption
+    * re-plans the assignment, so the frame persists through
+    * [[graft.sources.CacheScope]] — k-means assignment is the
+    * operator's dominant scalar cost and the cached rows are (id,
+    * d floats, norm, label, cell), no text.
     */
   def semanticDedup(embs: DataFrame, nCells: Int = 0,
       threshold: Double = 0.35, iters: Int = 2,
-      corpusN: Long = -1L): DataFrame =
-    semanticDedupManaged(embs, nCells, threshold, iters, corpusN).df
-
-  /** [[semanticDedup]] with its internal persist exposed for release —
-    * see [[Dedup.Managed]]. The assigned-cells frame is consumed THREE
-    * times (both self-join sides + the survivor anti-join); Spark's
-    * ReuseExchange covers the self-join but the third consumption
-    * re-plans the assignment, so the frame persists — k-means
-    * assignment is the operator's dominant scalar cost and the cached
-    * rows are (id, d floats, norm, label, cell), no text.
-    */
-  def semanticDedupManaged(embs: DataFrame, nCells: Int = 0,
-      threshold: Double = 0.35, iters: Int = 2,
-      corpusN: Long = -1L): Dedup.Managed = {
+      corpusN: Long = -1L): DataFrame = {
     val k = if (nCells > 0) nCells
       else chooseCells(if (corpusN >= 0L) corpusN else embs.count())
     val cents = centFrame(embs.sparkSession,
       trainIvfCentroids(embs, k, iters))
     // the payload rides the assignment aggregate, so `label` never
     // joins back over the whole corpus later
-    val cells = assignMax(prepared(embs), cents,
+    val cells = CacheScope.persist(assignMax(prepared(embs), cents,
         Seq("embedding", "norm", "label"))
       .select(col("vec_id"), col("embedding"), col("norm"), col("label"),
-        col("cell"))
-      .cache()
+        col("cell")))
     def tagged(t: String) = cells.select(
       col("vec_id").as(s"${t}_id"), col("embedding").as(s"${t}_emb"),
       col("norm").as(s"${t}_norm"), col("cell"))
@@ -721,11 +711,10 @@ object Similarity {
       .filter(col("a_id") < col("b_id"))
       .filter(pairSim("a", "b") >= threshold)
       .select(col("b_id").as("vec_id")).distinct()
-    val out = cells.join(drops, Seq("vec_id"), "left_anti")
+    cells.join(drops, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"),
         col("label").cast("long").as("label"))
       .orderBy("vec_id")
-    new Dedup.Managed(out, Seq(cells))
   }
 
   /** IVF top-k with multi-cell probing: the corpus lives in its rk=1
@@ -1172,20 +1161,7 @@ object Similarity {
     */
   def nnDescentRound(embs: DataFrame, graph: DataFrame,
       k: Int = 5, sorted: Boolean = true,
-      outputPartitions: Int = 1): DataFrame =
-    nnDescentRoundManaged(embs, graph, k, sorted, outputPartitions).df
-
-  /** [[nnDescentRound]] with its internal edge-list persist exposed
-    * for release (the [[semanticDedupManaged]] contract — round-18
-    * ADVICE: the convenience form's cache lives until the session's
-    * next `catalog.clearCache()`, which the Bench/Verify harnesses run
-    * per query but a composing library caller may never run; the
-    * [[nnDescent]] loop releases each round's handle as soon as the
-    * round's output is materialized).
-    */
-  def nnDescentRoundManaged(embs: DataFrame, graph: DataFrame,
-      k: Int = 5, sorted: Boolean = true,
-      outputPartitions: Int = 1): Dedup.Managed = {
+      outputPartitions: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // cached: the candidate rule reads the edge list FOUR times (fwd,
     // rev, and both sides of the 2-hop self-join) — with an in-plan
@@ -1193,10 +1169,9 @@ object Similarity {
     // reference (measured round 17: the standalone chained query ran
     // ~2× the mining cost at x32; the simhashPairs sigs.cache()
     // precedent). The frame is n·k ids — tiny at any corpus size.
-    // Bench/Verify clear caches between queries; the nnDescent loop
-    // feeds an already-materialized RDD, for which this re-cache is
-    // a no-op-sized overlay.
-    val g = graph.select(col("vec_id"), col("neighbor_id")).cache()
+    // The nnDescent loop feeds an already-materialized RDD, for which
+    // this re-cache is a no-op-sized overlay, and releases it per round.
+    val g = CacheScope.persist(graph.select(col("vec_id"), col("neighbor_id")))
     val fwd = g
     val rev = g.select(col("neighbor_id").as("vec_id"),
       col("vec_id").as("neighbor_id"))
@@ -1222,32 +1197,24 @@ object Similarity {
       cands.join(q, Seq("vec_id")).join(c, Seq("neighbor_id"))
         .select(col("vec_id"), col("neighbor_id"),
           pairSim("q", "c").as("sim")), k, dedupe = true)
-    val shaped =
-      if (sorted)
-        graft.sources.Sinks.exportSorted(out, Seq("vec_id", "rank"),
-          outputPartitions)
-      else out
-    new Dedup.Managed(shaped, Seq(g))
+    if (sorted)
+      graft.sources.Sinks.exportSorted(out, Seq("vec_id", "rank"),
+        outputPartitions)
+    else out
   }
 
-  /** [[nnDescent]]'s result: the refined graph, the number of
+  /** [[nnDescent]]'s result: the refined graph and the number of
     * refinement rounds actually run (≤ maxRounds — a fixpoint stops
-    * early), and the cache handles backing the final graph.
+    * early).
     *
     * CACHE LIFETIME (round-18 ADVICE): the loop releases every
     * superseded round's block cache AND each round's internal
-    * edge-list persist before returning, so the only live handle is
-    * the final graph's — which [[graph]] READS FROM, so it must stay
-    * cached until the caller's last action over it. A long-lived
-    * pipeline calls [[close]] after that action; the registered
-    * bench/verify consumers instead rely on the harness's per-query
-    * `catalog.clearCache()` (documented at the registration sites) —
-    * either discipline bounds live cache to one n·k edge list.
+    * edge-list persist before returning, so the only live cache is
+    * the final graph's — which [[graph]] READS FROM, so it belongs to
+    * the enclosing [[graft.sources.CacheScope]] and is released with
+    * the query. Live cache stays bounded to one n·k edge list.
     */
-  final class NnDescentResult(val graph: DataFrame, val rounds: Int,
-      private val handles: Seq[DataFrame]) {
-    def close(): Unit = handles.foreach(_.unpersist(false))
-  }
+  final case class NnDescentResult(graph: DataFrame, rounds: Int)
 
   /** NN-descent TO CONVERGENCE — the operator a pipeline actually
     * runs (the single-round form is the building block; Dong et al.'s
@@ -1289,21 +1256,20 @@ object Similarity {
     var stop = false
     val stale = scala.collection.mutable.ArrayBuffer[DataFrame]()
     while (!stop && rounds < maxRounds) {
-      val round = nnDescentRoundManaged(embs, reroot(cur), k, sorted = false)
       // ONE action lands the round's cache blocks AND counts the
       // improved edges (round-18 optimization: the previous
       // materialize-then-anti-join shape ran the stop rule as a
       // separate job per round; since `next` is cache-marked, the
       // anti-join's scan of it lands the blocks as a side effect).
-      // `total` then reads the landed cache.
-      val next = round.df.select("vec_id", "neighbor_id", "sim", "rank")
-        .cache()
-      val improved = next
-        .join(cur, Seq("vec_id", "neighbor_id"), "left_anti").count()
-      // the round's output blocks are landed — its internal edge-list
-      // persist is dead weight from here (round-18 ADVICE: the
-      // unmanaged form orphaned one cache entry per round)
-      round.close()
+      // `total` then reads the landed cache. Once the blocks are
+      // landed the round's internal edge-list persist is dead weight
+      // (round-18 ADVICE: it orphaned one cache entry per round), so
+      // the round runs in its own scope.
+      val (next, improved) = CacheScope.run {
+        val n = nnDescentRound(embs, reroot(cur), k, sorted = false)
+          .select("vec_id", "neighbor_id", "sim", "rank").cache()
+        (n, n.join(cur, Seq("vec_id", "neighbor_id"), "left_anti").count())
+      }
       rounds += 1
       val total = math.max(next.count(), 1L)
       stale += cur
@@ -1313,7 +1279,7 @@ object Similarity {
     // release superseded rounds only AFTER the loop: the final graph's
     // RDD root reads its own cache, not its predecessors'
     stale.foreach(_.unpersist(false))
-    new NnDescentResult(reroot(cur), rounds, Seq(cur))
+    NnDescentResult(reroot(CacheScope.persist(cur)), rounds)
   }
 
   /** kNN-graph label propagation (one round): every vector's label is
@@ -1452,22 +1418,17 @@ object Similarity {
     * ([[embHealth]]'s), the calibration itself is arithmetic over the
     * ≤ 10-row histogram. Output: one row (tau_micro, mode_bucket).
     */
-  def calibratedTauMicro(embs: DataFrame, epsPm: Long = 0L): DataFrame =
-    calibratedTauMicroManaged(embs, epsPm).df
-
-  /** [[calibratedTauMicro]] with its internal persist exposed for
-    * release — see [[Dedup.Managed]] (the sibling calibrations'
-    * discipline, applied here per round-18 review): the ≤ 10-row
-    * histogram is consumed by THREE aggregates (total, mode, gap
-    * scan) — and twice more when [[graphDedupSurvivorsCalibrated]]
-    * broadcasts the τ frame into its edge filter and output — each of
-    * which would otherwise re-run the n-row partner join.
-    */
-  def calibratedTauMicroManaged(embs: DataFrame,
-      epsPm: Long = 0L): Dedup.Managed = {
+  def calibratedTauMicro(embs: DataFrame, epsPm: Long = 0L): DataFrame = {
     require(epsPm >= 0L && epsPm <= 10000L,
       s"epsPm must be in [0,10000], got $epsPm")
-    val hist = randomPairBuckets(embs).select("bucket", "n_pairs").cache()
+    // persisted (the sibling calibrations' discipline, applied here per
+    // round-18 review): the ≤ 10-row histogram is consumed by THREE
+    // aggregates (total, mode, gap scan) — and twice more when
+    // graphDedupSurvivorsCalibrated broadcasts the τ frame into its
+    // edge filter and output — each of which would otherwise re-run
+    // the n-row partner join
+    val hist = CacheScope.persist(
+      randomPairBuckets(embs).select("bucket", "n_pairs"))
     val tot = hist.agg(coalesce(sum("n_pairs"), lit(0L)).as("n_total"))
     val mode = hist
       .agg(max(struct(col("n_pairs"), (-col("bucket")).as("nb"))).as("m"))
@@ -1475,7 +1436,7 @@ object Similarity {
     val grid = embs.sparkSession.range(0, 11).select(col("id").as("cand"))
     val shares = grid.join(hist, col("cand") === col("bucket"), "left")
       .select(col("cand"), coalesce(col("n_pairs"), lit(0L)).as("np"))
-    val out = shares.crossJoin(broadcast(tot)).crossJoin(broadcast(mode))
+    shares.crossJoin(broadcast(tot)).crossJoin(broadcast(mode))
       .filter(col("cand") > col("mode_bucket") &&
         col("np") * lit(10000L) <= lit(epsPm) * col("n_total"))
       .agg(min(col("cand")).as("tb"),
@@ -1484,7 +1445,6 @@ object Similarity {
         coalesce(col("tb") * lit(200000L) - lit(1000000L), lit(1000001L))
           .as("tau_micro"),
         coalesce(col("mb"), lit(-1L)).as("mode_bucket"))
-    new Dedup.Managed(out, Seq(hist))
   }
 
   /** [[graphDedupSurvivors]] at the CALIBRATED τ — the percolation-
@@ -2190,36 +2150,23 @@ object Similarity {
     *
     * All integer outputs (truncating per-myriad recall), so the
     * DuckDB oracle replays every config exactly. The truth leg and
-    * the per-config rankers share the internal caches for the run
-    * (convenience-form lifetime — the [[semanticDedup]] convention).
+    * the per-config rankers share two internal caches for the query —
+    * the npMax candidate frame (`pairs` — one LUT array per query row,
+    * materially the largest cache in the module) and the brute-truth
+    * frame, each consumed once per config; both persist through
+    * [[graft.sources.CacheScope]] (round-19 ADVICE).
     */
   def ivfPqRefinedSweep(embs: DataFrame,
       configs: Seq[(Int, Int)] = Seq((1, 30), (2, 30), (4, 30), (8, 30),
         (8, 120), (8, 240)),
       nQueries: Int = 50, k: Int = 10, nCells: Int = 8,
-      iters: Int = 2): DataFrame =
-    ivfPqRefinedSweepManaged(embs, configs, nQueries, k, nCells, iters).df
-
-  /** [[ivfPqRefinedSweep]] with the internal caches handed back for
-    * release — see [[Dedup.Managed]]. The shared npMax candidate frame
-    * (`pairs` — one LUT array per query row, materially the largest
-    * cache in the module) and the brute-truth frame are each consumed
-    * once per config, so the convenience form's session-scoped
-    * lifetime leaks them until the next clearCache; callers that run
-    * the sweep inside a longer session should `close()` after the
-    * final action (round-19 ADVICE).
-    */
-  def ivfPqRefinedSweepManaged(embs: DataFrame,
-      configs: Seq[(Int, Int)] = Seq((1, 30), (2, 30), (4, 30), (8, 30),
-        (8, 120), (8, 240)),
-      nQueries: Int = 50, k: Int = 10, nCells: Int = 8,
-      iters: Int = 2): Dedup.Managed = {
+      iters: Int = 2): DataFrame = {
     require(configs.nonEmpty, "need at least one (nprobe, kCand) config")
     val (pq, cents) = trainPqAndIvf(embs, nCells, iters)
     val m = pq.size
     val ksub = pq.head.size
-    val truth = bruteForceTopK(embs, nQueries, k)
-      .select(col("query_id"), col("neighbor_id")).cache()
+    val truth = CacheScope.persist(bruteForceTopK(embs, nQueries, k)
+      .select(col("query_id"), col("neighbor_id")))
     // ONE shared ADC pass at npMax (round-18 optimization): every
     // corpus vector lives in exactly ONE cell (assignMax rk = 1), so a
     // (query, vector) candidate pair occurs at most once and carries
@@ -2241,11 +2188,10 @@ object Similarity {
         pqLut(pqVd(col("embedding")), pq).as("lut"))
     val c = ivfPqLists(embs, pq, cents)
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-    val pairs = broadcast(qall).join(c, Seq("cell"))
+    val pairs = CacheScope.persist(broadcast(qall).join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("qrk"), col("neighbor_id"),
-        pqAdc(col("lut"), col("codes"), m, ksub).as("adc"))
-      .cache()
+        pqAdc(col("lut"), col("codes"), m, ksub).as("adc")))
     configs.foreach { case (np, kc) =>
       require(np >= 1 && kc >= k,
         s"need nprobe >= 1 and kCand >= k, got ($np, $kc)") }
@@ -2324,7 +2270,7 @@ object Similarity {
           col(s"nc_${npList.head}"))) { (acc, np) =>
       acc.when(col("nprobe") === np.toLong, col(s"nc_$np"))
     }.otherwise(lit(0L))
-    val out = configRows
+    configRows
       .join(hits, Seq("nprobe", "k_cand"), "left")
       .crossJoin(broadcast(nCand))
       .select(col("nprobe"), col("k_cand"),
@@ -2334,7 +2280,6 @@ object Similarity {
           coalesce(col("n_hits"), lit(0L)) * lit(10000L),
           lit(nQueries.toLong * k)).as("recall_pm"))
       .orderBy("nprobe", "k_cand")
-    new Dedup.Managed(out, Seq(pairs, truth))
   }
 
   /** Deterministic ±1 sign matrix for [[randomProject]]: sign(j, i)

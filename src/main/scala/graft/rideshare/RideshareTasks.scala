@@ -95,16 +95,18 @@ object RideshareTasks {
       .agg(avg(col("trip_length").cast("double")).as("average_trip_length"))
       .orderBy(col("average_trip_length").desc)
 
-  /** T4c — earnings per mile: the two per-time_of_day aggregates joined
-    * on the shared key, then the ratio. Reference `codes/task4.py:86-95`.
-    * Both sides are ≤4 rows post-agg, so the join broadcasts.
+  /** T4c — earnings per mile: the T4a and T4b averages per time_of_day,
+    * then their ratio. Reference `codes/task4.py:86-95` joins the two
+    * aggregates; both averages come from ONE aggregate here, so the
+    * input is scanned once and the query has a single plan.
     */
   def earningsPerMile(enriched: DataFrame): DataFrame =
-    avgDriverPayByTimeOfDay(enriched)
-      .join(avgTripLengthByTimeOfDay(enriched), Seq("time_of_day"))
+    enriched
+      .groupBy("time_of_day")
+      .agg(avg(col("driver_total_pay").cast("double")).as("pay"),
+        avg(col("trip_length").cast("double")).as("len"))
       .select(col("time_of_day"),
-        (col("average_driver_total_pay") / col("average_trip_length"))
-          .as("average_earning_per_mile"))
+        (col("pay") / col("len")).as("average_earning_per_mile"))
 
   /** T5a — January-only average wait per day of month, ascending.
     * Reference `codes/task5.py:71-80`. The month filter sits below the

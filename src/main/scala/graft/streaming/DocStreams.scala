@@ -494,14 +494,16 @@ object DocStreams {
     * an unpersisted index would re-evaluate per micro-batch — and
     * refreshing them is a restart, the standard static-side contract
     * of stream-static joins. Returns the running query; callers own
-    * its lifecycle.
+    * its lifecycle — and, through [[graft.sources.CacheScope]], the
+    * artifacts' persists: a scope that closes under a running query
+    * makes each micro-batch recompute them.
     */
   def startIngestPipeline(spark: org.apache.spark.sql.SparkSession,
       srcDir: String, corpus: DataFrame, target: DataFrame,
       sinkDir: String, checkpointDir: String, maxNll: Long,
       minWords: Int = 20)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val bandIndex = bandRows(corpus).persist()
+    val bandIndex = graft.sources.CacheScope.persist(bandRows(corpus))
     val lm = graft.operators.Perplexity.model(target).persisted()
     bandIndex.count()
     val in = spark.readStream

@@ -15,14 +15,10 @@ import graft.sources.Sinks
   * `spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
   *
   * The mix is the rideshare T1–T7 outputs with RideshareApp's actions,
-  * less two kinds of query that compile new code on some runs whatever
-  * the cache size:
-  *   - the `show`/`take` samples: a codegen'd limit stage names its
-  *     counter `_limit_counter_N` from a JVM-global id (Spark's
-  *     `BaseLimitExec`), so its source differs on every call;
-  *   - T4c `earningsPerMile`: AQE broadcasts whichever of its two joined
-  *     aggregates finishes first, so it has two plans, and a run can meet
-  *     the second one for the first time.
+  * less the `show`/`take` samples, which compile new code on every run
+  * whatever the cache size: a codegen'd limit stage names its counter
+  * `_limit_counter_N` from a JVM-global id (Spark's `BaseLimitExec`), so
+  * its source differs on every call.
   *
   * Order-independent: the cache is JVM-wide and other suites fill it,
   * so the spec empties it first and counts compiles as deltas of
@@ -77,6 +73,7 @@ class CodegenCacheSpec extends AnyFunSuite with SparkSpec {
         RideshareTasks.topRoutesByProfit(enriched),
         RideshareTasks.avgDriverPayByTimeOfDay(enriched),
         RideshareTasks.avgTripLengthByTimeOfDay(enriched),
+        RideshareTasks.earningsPerMile(enriched),
         RideshareTasks.daysWithAvgWaitOver(enriched),
         RideshareTasks.lowVolumeBoroughSlots(enriched),
         RideshareTasks.eveningCountsByBorough(enriched),

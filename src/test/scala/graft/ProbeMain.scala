@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
   */
 object ProbeMain {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.1"
     def t[A](tag: String)(f: => A): A = {

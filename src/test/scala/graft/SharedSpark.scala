@@ -12,8 +12,16 @@ object SharedSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Plans the session holds cached (lazy persists count at once). */
+  def cachedPlans: Int = graft.sources.CacheScope.held(spark)._1
+
+  /** RDDs the session holds persisted (a cached plan's, once it ran). */
+  def persistedRdds: Int = graft.sources.CacheScope.held(spark)._2
 }
 
 trait SparkSpec {
   def spark: SparkSession = SharedSpark.spark
+  def cachedPlans: Int = SharedSpark.cachedPlans
+  def persistedRdds: Int = SharedSpark.persistedRdds
 }

@@ -4,6 +4,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 import graft.SharedSpark
+import graft.sources.CacheScope
 
 /** The decontamination screen vs an in-memory brute-force oracle on
   * generated corpora — random duplication patterns and short-doc edge
@@ -85,10 +86,13 @@ object DecontamProps extends Properties("decontam") {
         val benchDf = df(bench, 1000L)
         val plain = Decontam.survivors(trainDf, benchDf, 3, 2)
           .collect().map(_.getLong(0)).toSeq
-        val m = Decontam.bloomSurvivorsManaged(trainDf, benchDf, 3, 2, fpp)
-        val viaBloom = m.df.collect().map(_.getLong(0)).toSeq
-        m.close()
-        viaBloom == plain && m.released
+        val before = SharedSpark.cachedPlans
+        val (viaBloom, held) = CacheScope.run {
+          val got = Decontam.bloomSurvivors(trainDf, benchDf, 3, 2, fpp)
+            .collect().map(_.getLong(0)).toSeq
+          (got, SharedSpark.cachedPlans > before)
+        }
+        viaBloom == plain && held && SharedSpark.cachedPlans == before
     }
 
   property("rareBigramRate matches a brute-force corpus frequency count") =

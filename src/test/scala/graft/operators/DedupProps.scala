@@ -3,7 +3,10 @@ package graft.operators
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SharedSpark
+import graft.sources.CacheScope
 
 /** Structural invariants of the dedup family on generated corpora —
   * duplication patterns the fixed fixtures don't reach.
@@ -58,30 +61,35 @@ object DedupProps extends Properties("dedup") {
       // keeps J >= t - 5e-7, so screening at t - 1e-6 drops only pairs
       // the verify drops. Compare both paths on the same corpus.
       val df = docsDf(texts)
-      def run(pf: Boolean) = {
-        val m = Dedup.minhashPairsManaged(df, 0.5, lengthPrefilter = pf)
-        val rows = m.df.collect()
+      def run(pf: Boolean) = CacheScope.run {
+        Dedup.minhashPairs(df, 0.5, lengthPrefilter = pf).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        m.close()
-        rows
       }
       run(true) == run(false)
     }
 
-  property("managed miners release their internal persists on close") =
+  property("miners release their internal persists with their scope") =
     forAll(genCorpus) { texts =>
       val df = docsDf(texts)
-      val mh = Dedup.minhashPairsManaged(df)
-      val sh = Dedup.simhashPairsManaged(df)
-      val ng = Dedup.ngramJaccardPairsManaged(df, 0.5)
-      // localThreshold = 0 forces the distributed label-propagation
-      // path, whose edge/label persists are the ones worth releasing
-      val cl = Dedup.clustersManaged(df, mh.df, localThreshold = 0)
-      // materialize everything, then release
-      cl.df.collect(); sh.df.collect(); ng.df.collect()
-      val open = !mh.released || !sh.released || !ng.released
-      mh.close(); sh.close(); ng.close(); cl.close()
-      open && mh.released && sh.released && ng.released && cl.released
+      val before = SharedSpark.cachedPlans
+      // each miner registers at least one persist of its own
+      def persists(build: => DataFrame): (DataFrame, Boolean) = {
+        val n = SharedSpark.cachedPlans
+        val d = build
+        (d, SharedSpark.cachedPlans > n)
+      }
+      val open = CacheScope.run {
+        val (mh, mhOpen) = persists(Dedup.minhashPairs(df))
+        val (sh, shOpen) = persists(Dedup.simhashPairs(df))
+        val (ng, ngOpen) = persists(Dedup.ngramJaccardPairs(df, 0.5))
+        // localThreshold = 0 forces the distributed label-propagation
+        // path, whose edge/label persists are the ones worth releasing
+        val (cl, clOpen) = persists(Dedup.clusters(df, mh, localThreshold = 0))
+        // materialize everything, then release with the scope
+        cl.collect(); sh.collect(); ng.collect()
+        mhOpen && shOpen && ngOpen && clOpen
+      }
+      open && SharedSpark.cachedPlans == before
     }
 
   property("incremental screen == self-join miner restricted to cross pairs") =

@@ -46,13 +46,18 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("incremental screen releases its internal persist") {
     import org.apache.spark.sql.functions.col
-    val m = Dedup.minhashPairsIncrementalManaged(
-      docs.filter(col("doc_id") % 2 === 1),
-      docs.filter(col("doc_id") % 2 === 0))
-    m.df.collect()
-    assert(!m.released)
-    m.close()
-    assert(m.released)
+    // the test above ran the same plans with no scope open and left
+    // them cached; a scope adopts a cached plan it persists, so start
+    // from an empty cache to see this scope's own persists
+    spark.catalog.clearCache()
+    val before = cachedPlans
+    graft.sources.CacheScope.run {
+      Dedup.minhashPairsIncremental(
+        docs.filter(col("doc_id") % 2 === 1),
+        docs.filter(col("doc_id") % 2 === 0)).collect()
+      assert(cachedPlans > before)
+    }
+    assert(cachedPlans === before)
   }
 
   test("blocked word-set Jaccard catches exact AND permuted dups") {
@@ -254,12 +259,15 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val loose = Dedup.containmentPairs(d2, thresholdPm = 7000L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(loose.contains((0L, 3L, 7777L)))
-    // managed handle releases its persists
-    val m = Dedup.containmentPairsManaged(d)
-    m.df.collect()
-    assert(!m.released)
-    m.close()
-    assert(m.released)
+    // its scope releases its persists (from an empty cache: the
+    // unscoped calls above left the same plans cached)
+    spark.catalog.clearCache()
+    val before = cachedPlans
+    graft.sources.CacheScope.run {
+      Dedup.containmentPairs(d).collect()
+      assert(cachedPlans > before)
+    }
+    assert(cachedPlans === before)
   }
 
   test("containmentSurvivors drops the contained (smaller) side, superset keeps") {

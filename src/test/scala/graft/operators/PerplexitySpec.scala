@@ -114,11 +114,14 @@ class PerplexitySpec extends AnyFunSuite with SparkSpec {
     val raw = (0L until 30L).map(i => i -> doc())
     val target = Seq.fill(4)(doc()).zipWithIndex
       .map { case (t, i) => (1000L + i, t) }
-    val m = Perplexity.tercilesManaged(df(raw), df(target))
-    val rows = m.df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    m.close()
-    assert(m.released)
+    val before = cachedPlans
+    val rows = graft.sources.CacheScope.run {
+      val got = Perplexity.terciles(df(raw), df(target)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      assert(cachedPlans > before)
+      got
+    }
+    assert(cachedPlans === before)
     assert(rows.length === 30)
     val byBucket = rows.groupBy(_._3)
     // every head nll <= every middle nll <= every tail nll

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.sources.CacheScope
 
 /** Laws for the embedding-space hygiene family: semantic
   * decontamination (Decontam.semanticHits / semanticSurvivors, the
@@ -222,14 +223,15 @@ class SemanticDecontamSpec extends AnyFunSuite with SparkSpec {
       (1L, Seq(0.9f, 0.1f, 0f, 0f), 0),
       (2L, Seq(0f, 1f, 0f, 0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val res = Similarity.nnDescent(embs, k = 2, maxRounds = 5,
-      minImprovedPm = 0L, bits = 1)
-    assert(res.rounds === 1, "fixpoint must stop after round 1")
-    def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
-    assert(edges(res.graph) ===
-      edges(Similarity.knnGraph(embs, k = 2, bits = 1)))
-    res.close()
+    CacheScope.run {
+      val res = Similarity.nnDescent(embs, k = 2, maxRounds = 5,
+        minImprovedPm = 0L, bits = 1)
+      assert(res.rounds === 1, "fixpoint must stop after round 1")
+      def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
+      assert(edges(res.graph) ===
+        edges(Similarity.knnGraph(embs, k = 2, bits = 1)))
+    }
   }
 
   test("nnDescent at a fixed round budget equals the hand-chained " +
@@ -242,15 +244,16 @@ class SemanticDecontamSpec extends AnyFunSuite with SparkSpec {
       (3L, Seq(0f, 1f, 0f, 0f), 1),
       (4L, Seq(0f, 0.9f, 0.1f, 0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val looped = Similarity.nnDescent(embs, k = 2, maxRounds = 2,
-      minImprovedPm = 0L, bits = 1)
-    val chained = Similarity.nnDescentRound(embs,
-      Similarity.nnDescentRound(embs,
-        Similarity.knnGraph(embs, k = 2, bits = 1), k = 2), k = 2)
-    def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
-    assert(edges(looped.graph) === edges(chained))
-    looped.close()
+    CacheScope.run {
+      val looped = Similarity.nnDescent(embs, k = 2, maxRounds = 2,
+        minImprovedPm = 0L, bits = 1)
+      val chained = Similarity.nnDescentRound(embs,
+        Similarity.nnDescentRound(embs,
+          Similarity.knnGraph(embs, k = 2, bits = 1), k = 2), k = 2)
+      def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
+      assert(edges(looped.graph) === edges(chained))
+    }
   }
 
   test("nnDescent: minImprovedPm = 10000 stops after one round " +
@@ -261,17 +264,19 @@ class SemanticDecontamSpec extends AnyFunSuite with SparkSpec {
       (1L, Seq(0.95f, 0.05f, 0f, 0f), 0),
       (2L, Seq(0f, 1f, 0f, 0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val one = Similarity.nnDescent(embs, k = 2, maxRounds = 7,
-      minImprovedPm = 10000L, bits = 1)
-    assert(one.rounds === 1)
-    one.close()
-    val zero = Similarity.nnDescent(embs, k = 2, maxRounds = 0, bits = 1)
-    assert(zero.rounds === 0)
-    def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
-    assert(edges(zero.graph) ===
-      edges(Similarity.knnGraph(embs, k = 2, bits = 1)))
-    zero.close()
+    CacheScope.run {
+      val one = Similarity.nnDescent(embs, k = 2, maxRounds = 7,
+        minImprovedPm = 10000L, bits = 1)
+      assert(one.rounds === 1)
+    }
+    CacheScope.run {
+      val zero = Similarity.nnDescent(embs, k = 2, maxRounds = 0, bits = 1)
+      assert(zero.rounds === 0)
+      def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
+      assert(edges(zero.graph) ===
+        edges(Similarity.knnGraph(embs, k = 2, bits = 1)))
+    }
   }
 
   test("probeBuckets2: 1 + b + b(b-1)/2 distinct probes, every one " +

@@ -308,15 +308,18 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(Similarity.chooseCells(100L, target = 10L) === 10)
   }
 
-  test("semanticDedup auto-sizes cells and released handle is clean") {
-    val m = Similarity.semanticDedupManaged(embs, threshold = 0.9,
-      corpusN = 4L)
-    val got = m.df.collect().map(r => r.getLong(0)).toSeq
+  test("semanticDedup auto-sizes cells and its scope releases the cache") {
+    val before = cachedPlans
+    val got = graft.sources.CacheScope.run {
+      val rows = Similarity.semanticDedup(embs, threshold = 0.9,
+        corpusN = 4L).collect().map(r => r.getLong(0)).toSeq
+      assert(cachedPlans > before)
+      rows
+    }
     // at k = chooseCells(4) = 1 every vector shares one cell; v1 is
     // still v0's only >= 0.9 twin, so the survivor set is unchanged
     assert(got === Seq(0L, 2L, 3L))
-    m.close()
-    assert(m.released)
+    assert(cachedPlans === before)
   }
 
   test("quantize: int8 range, exact extremes, error certificate bound") {

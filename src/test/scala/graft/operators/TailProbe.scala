@@ -11,7 +11,7 @@ import graft.sources.Tables
 object TailProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.documents(spark, d)
 

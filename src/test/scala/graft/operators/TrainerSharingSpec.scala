@@ -10,8 +10,9 @@ import graft.SparkSpec
   *     across the two concurrent Lloyd trainers and still returns the
   *     exact models the sequential convenience forms produce;
   *   - nothing stays persisted after the trainers return;
-  *   - [[Similarity.ivfPqRefinedSweepManaged]] hands back its internal
-  *     caches (the npMax candidate frame + brute truth) for release.
+  *   - [[Similarity.ivfPqRefinedSweep]] registers its internal caches
+  *     (the npMax candidate frame + brute truth) with the query's
+  *     [[graft.sources.CacheScope]], which releases them.
   */
 class TrainerSharingSpec extends AnyFunSuite with SparkSpec {
 
@@ -43,19 +44,15 @@ class TrainerSharingSpec extends AnyFunSuite with SparkSpec {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
-  test("ivfPqRefinedSweepManaged: managed output matches the convenience " +
-    "form and close() releases every handle") {
-    spark.catalog.clearCache()
+  test("ivfPqRefinedSweep: its scope releases both internal caches") {
     val v = vecs
-    val m = Similarity.ivfPqRefinedSweepManaged(v,
-      configs = Seq((1, 10), (2, 10)), nQueries = 5, k = 10, nCells = 8)
-    val got = m.df.collect().map(_.toString).toSeq
-    m.close()
-    assert(m.released)
-    val plain = Similarity.ivfPqRefinedSweep(v,
-      configs = Seq((1, 10), (2, 10)), nQueries = 5, k = 10, nCells = 8)
-      .collect().map(_.toString).toSeq
-    assert(got === plain)
-    spark.catalog.clearCache()
+    val before = cachedPlans
+    graft.sources.CacheScope.run {
+      Similarity.ivfPqRefinedSweep(v,
+        configs = Seq((1, 10), (2, 10)), nQueries = 5, k = 10, nCells = 8)
+        .collect()
+      assert(cachedPlans >= before + 2)
+    }
+    assert(cachedPlans === before)
   }
 }
