@@ -6,7 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DuckDB oracle the driver replays on the same parquet tables.
   *
   * Determinism contract (what makes the driver's hash compare stable):
-  *   - every query ends in a total ORDER BY (tie-broken down to a unique key),
+  *   - every query ends in a total order (tie-broken down to a unique key)
+  *     that the query applies itself: library operators return unordered
+  *     frames, so the entry ends in `orderBy` or, over a miner's output,
+  *     [[graft.sources.Sinks.exportSorted]],
   *   - output column names are lowercase and identical to the oracle's,
   *   - output types match the oracle's (month/day cast to INT, counts BIGINT),
   *   - doubles are either summed exactly and rounded at a digit position

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CacheScope, Tables}
+import graft.sources.{CacheScope, Sinks, Tables}
 
 /** Scaling-curve harness: measures how the pair-miner / ANN family
   * grows with corpus size — the empirical backing for every "scale-
@@ -376,9 +376,9 @@ object ScalingBench {
       q.name -> q.fn
     }
     val fixedSrc: (SparkSession, String) => DataFrame = (s, d) =>
-      graft.operators.Dedup.ngramJaccardPairs(
+      Sinks.exportSorted(graft.operators.Dedup.ngramJaccardPairs(
         Tables.documents(s, d).withColumn("source",
-          regexp_replace(col("source"), "~\\d+$", "")))
+          regexp_replace(col("source"), "~\\d+$", ""))), Seq("doc_a", "doc_b"))
     // τ=0.6 twin of dedup_embedding_cosine: at τ=0.3 on d=64 unit
     // vectors, ~0.75% of ALL pairs qualify (measured on the base
     // corpus — the random-cosine floor, sd≈1/√d), so the OUTPUT is
@@ -386,7 +386,8 @@ object ScalingBench {
     // true-pair density is ~0 and the measurement isolates the
     // algorithm: bucketing + probe + verify, expected ~linear.
     val embCos06: (SparkSession, String) => DataFrame = (s, d) =>
-      graft.operators.Similarity.nearDupPairs(Tables.embeddings(s, d), 0.6)
+      Sinks.exportSorted(graft.operators.Similarity.nearDupPairs(
+        Tables.embeddings(s, d), 0.6), Seq("vec_a", "vec_b"))
     // round 15 (verdict ask #3): the GROWING-CELLS regime — both
     // routers under their own corpus-driven sizing (chooseCells ~
     // n/64 flat cells; chooseCells2 the balanced two-level split of

@@ -539,12 +539,9 @@ object CorpusAnalogs {
           lit(" from 10."), (col("doc_id") % 256).cast("string"),
           lit(".0."), (col("doc_id") % 250).cast("string")).as("text"))
         // fanOut before the four regex passes (round 19, guide §2.5 —
-        // the single-row-group scan ran them on one core), and the
-        // export tail via exportSorted: a trailing orderBy on this
-        // MAP-ONLY chain re-executes the whole regex projection in the
-        // range-partitioner's sampling job (the knnGraph export
-        // lesson); repartition(1)+sortWithinPartitions is the same
-        // total order (doc_id is unique) with the map run once
+        // the single-row-group scan ran them on one core); exportSorted
+        // rather than orderBy, whose sampling job would re-run the
+        // regex map
         graft.sources.Sinks.exportSorted(
           Scrub.scrubPii(graft.sources.Par.fanOut(injected))
             .select("doc_id", "n_emails", "n_phones", "n_ips", "clean"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.operators.{Curation, Decontam}
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Registry entries + DuckDB oracles for the decontamination /
   * corpus-composition operators (graft.operators.Decontam) — the
@@ -84,9 +84,9 @@ object DecontamAnalogs {
     Q("decontam_hits",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Decontam.overlapScreen(
+        Sinks.exportSorted(Decontam.overlapScreen(
           docs.filter(col("doc_id") % 50 =!= 0),
-          docs.filter(col("doc_id") % 50 === 0))
+          docs.filter(col("doc_id") % 50 === 0)), Seq("train_id", "bench_id"))
       },
       Some(hitsSql)),
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup, Evaluation, Multimodal, Similarity}
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** LLM-training-data pipeline operators (BASELINE.json north star) over
   * the `documents` / `embeddings` tables, each paired with an exactly-
@@ -1269,7 +1269,8 @@ object ExtraAnalogs {
 
     // LSH candidate pairs (any shared band) verified at Jaccard >= 0.5.
     Q("dedup_minhash_pairs",
-      (s, d) => Dedup.minhashPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(Dedup.minhashPairs(Tables.documents(s, d)),
+        Seq("doc_a", "doc_b")),
       Some {
         val bandJoin = (0 until 4).map { b =>
           s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1308,10 +1309,10 @@ object ExtraAnalogs {
         val oldB = graft.sources.ModelStore.ensureFrame(s,
           s"target/models/mh_bands_${dirKey(d)}",
           Dedup.minhashBandTable(docs.filter(col("doc_id") % 10 =!= 3)))
-        Dedup.minhashPairsIncremental(
+        Sinks.exportSorted(Dedup.minhashPairsIncremental(
           docs.filter(col("doc_id") % 10 === 3),
           docs.filter(col("doc_id") % 10 =!= 3),
-          oldBands = Some(oldB))
+          oldBands = Some(oldB)), Seq("new_id", "old_id"))
       },
       Some {
         val bandJoin = (0 until 4).map { b =>
@@ -1345,7 +1346,7 @@ object ExtraAnalogs {
     Q("dedup_clusters",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Dedup.clusters(docs, Dedup.minhashPairs(docs))
+        Dedup.clusters(docs, Dedup.minhashPairs(docs)).orderBy("doc_id")
       },
       Some(dClustersSql)),
 
@@ -1361,6 +1362,7 @@ object ExtraAnalogs {
       (s, d) => {
         val docs = Tables.documents(s, d)
         Dedup.clusters(docs, Dedup.minhashPairs(docs), localThreshold = 0)
+          .orderBy("doc_id")
       },
       Some(dClustersSql)),
 
@@ -1428,7 +1430,8 @@ object ExtraAnalogs {
 
     // Blocked pairwise word-set Jaccard within (lang, source).
     Q("dedup_ngram_jaccard",
-      (s, d) => Dedup.ngramJaccardPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.ngramJaccardPairs(Tables.documents(s, d)), Seq("doc_a", "doc_b")),
       Some("""WITH ws AS (
         |  SELECT doc_id, lang, source,
         |         list_distinct(string_split(text, ' ')) AS ws
@@ -1457,7 +1460,9 @@ object ExtraAnalogs {
     // the whole selection (histogram, mode, gap rule) plus the
     // unblocked same-(lang,source) join the blocked miner equals.
     Q("dedup_ngram_calibrated",
-      (s, d) => Dedup.ngramJaccardPairsCalibrated(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.ngramJaccardPairsCalibrated(Tables.documents(s, d)),
+        Seq("doc_a", "doc_b")),
       Some(s"""WITH ${dJacCal("documents")}""".stripMargin)),
 
     // The calibration in its DISCRIMINATING regime: the same operator
@@ -1470,8 +1475,8 @@ object ExtraAnalogs {
     // (J ≥ 0.68 on this id layout) with threshold_micro = 300000
     // riding, and the oracle replays fixture + selection end-to-end.
     Q("dedup_ngram_cal_clustered",
-      (s, d) => Dedup.ngramJaccardPairsCalibrated(
-        templateDocs(Tables.documents(s, d))),
+      (s, d) => Sinks.exportSorted(Dedup.ngramJaccardPairsCalibrated(
+        templateDocs(Tables.documents(s, d))), Seq("doc_a", "doc_b")),
       Some(s"""WITH $dTemplateDocs,
         |${dJacCal("tdocs")}""".stripMargin)),
 
@@ -1481,11 +1486,7 @@ object ExtraAnalogs {
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),
           explode(TextFunctions.winnowFingerprints(col("text"))).as("fp"))
-        // repartition(1) + single-partition sort, not orderBy: the
-        // range partitioner's sampling job would run the fingerprint
-        // pipeline twice; the exploded (id, fp) pairs are 16 bytes a
-        // row, so one sort task is the cheaper total order
-        .repartition(1).sortWithinPartitions("doc_id", "fp"),
+        .transform(Sinks.exportSorted(_, Seq("doc_id", "fp"))),
       Some(s"""WITH $tokCte, $winnowCte
         |SELECT doc_id, unnest(fps) AS fp FROM fp ORDER BY 1, 2""".stripMargin)),
 
@@ -1496,7 +1497,8 @@ object ExtraAnalogs {
     // substring miner's guard: a boilerplate fingerprint shared by d
     // docs would otherwise induce a d^2 candidate bucket).
     Q("dedup_winnow_pairs",
-      (s, d) => Dedup.winnowPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.winnowPairs(Tables.documents(s, d)), Seq("doc_a", "doc_b")),
       Some(s"""WITH $tokCte, $winnowCte,
         |e AS (SELECT doc_id, unnest(fps) AS fp FROM fp),
         |rare AS (SELECT fp FROM e GROUP BY fp HAVING count(*) <= 128),
@@ -1521,7 +1523,8 @@ object ExtraAnalogs {
     // AND verify, including the df<=128 hot-fingerprint cap on the
     // candidate join.
     Q("dedup_containment",
-      (s, d) => Dedup.containmentPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.containmentPairs(Tables.documents(s, d)), Seq("doc_a", "doc_b")),
       Some(s"""WITH $tokCte, $winnowCte,
         |e AS (SELECT doc_id, unnest(fps) AS fp FROM fp),
         |rare AS (SELECT fp FROM e GROUP BY fp HAVING count(*) <= 128),
@@ -1727,7 +1730,8 @@ object ExtraAnalogs {
     // hot-gram cap; positions are 1-based here vs posexplode's 0-based,
     // which cancels — diag and island keys only ever difference them.
     Q("dedup_substring",
-      (s, d) => Dedup.substringPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.substringPairs(Tables.documents(s, d)), Seq("doc_a", "doc_b")),
       Some(s"""WITH $tokCte,
         |g AS (SELECT doc_id, list_transform(range(1, len(w) - 6),
         |  i -> ${dWordHash60((0 until 8).map(k => s"w[i+$k]").mkString(" || ' ' || "))}) AS hs
@@ -1915,7 +1919,8 @@ object ExtraAnalogs {
     // oracle can be an INDEPENDENT brute-force O(n²) Hamming join — a
     // genuinely different algorithm that must agree pair-for-pair.
     Q("dedup_simhash_pairs",
-      (s, d) => Dedup.simhashPairs(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.simhashPairs(Tables.documents(s, d)), Seq("doc_a", "doc_b")),
       Some(s"""WITH hs AS (
         |  SELECT doc_id, list_transform(
         |    list_distinct(string_split(text, ' ')), x -> ${dWordHash60("x")}) AS hs
@@ -1937,7 +1942,9 @@ object ExtraAnalogs {
     // The oracle replays the selection and cuts the independent brute
     // Hamming join at least(radius, 3).
     Q("dedup_simhash_calibrated",
-      (s, d) => Dedup.simhashPairsCalibrated(Tables.documents(s, d)),
+      (s, d) => Sinks.exportSorted(
+        Dedup.simhashPairsCalibrated(Tables.documents(s, d)),
+        Seq("doc_a", "doc_b")),
       Some(s"""WITH ${dHamCal("documents")}""".stripMargin)),
 
     // The same operator in its DISCRIMINATING regime, over the shared
@@ -1947,15 +1954,17 @@ object ExtraAnalogs {
     // gap-found + geometry-cap in one output (radius 11 riding, pairs
     // cut at hamming <= 3).
     Q("dedup_simhash_cal_clustered",
-      (s, d) => Dedup.simhashPairsCalibrated(
-        templateDocs(Tables.documents(s, d))),
+      (s, d) => Sinks.exportSorted(Dedup.simhashPairsCalibrated(
+        templateDocs(Tables.documents(s, d))), Seq("doc_a", "doc_b")),
       Some(s"""WITH $dTemplateDocs,
         |${dHamCal("tdocs")}""".stripMargin)),
 
     // Embedding near-dup pairs: corpus-sized random-hyperplane bucket
     // + Hamming-1 multi-probe blocking, cosine >= 0.3 verify.
     Q("dedup_embedding_cosine",
-      (s, d) => Similarity.nearDupPairs(Tables.embeddings(s, d), 0.3),
+      (s, d) => Sinks.exportSorted(
+        Similarity.nearDupPairs(Tables.embeddings(s, d), 0.3),
+        Seq("vec_a", "vec_b")),
       Some(s"""WITH $dLshPrefix,
         |${dProbes("ap")}
         |SELECT * FROM (
@@ -3883,10 +3892,10 @@ object ExtraAnalogs {
     // Composed curation pipeline: dedup survivorship + quality gate +
     // language tag in ONE Catalyst plan (single shuffle).
     Q("pipeline_curate",
-      // single-task export sort (see the pair-miner tails): an orderBy
-      // sampling pass would re-run every post-window scalar gate
-      (s, d) => Curation.curate(Tables.documents(s, d))
-        .repartition(1).sortWithinPartitions("doc_id"),
+      // exportSorted, not orderBy: an orderBy sampling pass would
+      // re-run every post-window scalar gate
+      (s, d) => Sinks.exportSorted(Curation.curate(Tables.documents(s, d)),
+        Seq("doc_id")),
       Some {
         val q = dQuality
         s"""WITH $tokCte, g AS (
@@ -3967,11 +3976,10 @@ object ExtraAnalogs {
     Q("pipeline_curate_full",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Curation.curateFull(
+        Sinks.exportSorted(Curation.curateFull(
           docs.filter(col("doc_id") % 50 =!= 0),
           docs.filter(col("doc_id") % 50 === 0),
-          maxRepetition = 0.06)
-          .repartition(1).sortWithinPartitions("doc_id")
+          maxRepetition = 0.06), Seq("doc_id"))
       },
       Some {
         val q = dQuality
@@ -4144,8 +4152,9 @@ object ExtraAnalogs {
     // fold-back matches Java's wrapping Long), and mines the same
     // blocks.
     Q("mm_dhash_pairs",
-      (s, d) => Multimodal.dhashPairs(
+      (s, d) => Sinks.exportSorted(Multimodal.dhashPairs(
         Multimodal.dhashFixtures(s, Tables.documents(s, d)).toDF()),
+        Seq("doc_a", "doc_b")),
       Some(s"""WITH $dDhashCte,
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -4394,8 +4403,9 @@ object ExtraAnalogs {
     // HUGEINT hash assembly with two's-complement fold-back -> the
     // identical block mine-and-verify.
     Q("mm_audio_fp_pairs",
-      (s, d) => Multimodal.audioFpPairs(
+      (s, d) => Sinks.exportSorted(Multimodal.audioFpPairs(
         Multimodal.envelopeFixtures(s, Tables.documents(s, d))),
+        Seq("doc_a", "doc_b")),
       Some(s"""WITH $dAudioFpCte,
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,

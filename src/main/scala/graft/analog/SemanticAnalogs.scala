@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.operators.{Decontam, Evaluation, Similarity}
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Registry entries + DuckDB oracles for the EMBEDDING-SPACE hygiene
   * operators: semantic decontamination (the paraphrase-leakage screen
@@ -199,8 +199,7 @@ object SemanticAnalogs {
         val embs = Tables.embeddings(s, d)
         val r2 = Similarity.nnDescentRound(embs,
             Similarity.nnDescentRound(embs,
-              Similarity.knnGraph(embs, k = 10, sorted = false),
-              k = 10, sorted = false), k = 10, sorted = false)
+              Similarity.knnGraph(embs, k = 10), k = 10), k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -258,8 +257,7 @@ object SemanticAnalogs {
     Q("eval_knngraph2_metrics",
       (s, d) => {
         val embs = Tables.embeddings(s, d)
-        val g2 = Similarity.knnGraph(embs, k = 10, sorted = false,
-            probeHamming = 2)
+        val g2 = Similarity.knnGraph(embs, k = 10, probeHamming = 2)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -296,8 +294,7 @@ object SemanticAnalogs {
       (s, d) => {
         val embs = Tables.embeddings(s, d)
         val r = Similarity.nnDescentRound(embs,
-            Similarity.knnGraph(embs, k = 10, sorted = false,
-              probeHamming = 2), k = 10, sorted = false)
+            Similarity.knnGraph(embs, k = 10, probeHamming = 2), k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -333,7 +330,7 @@ object SemanticAnalogs {
     Q("eval_knngraph_clustered_metrics",
       (s, d) => {
         val cemb = clusteredEmbs(Tables.embeddings(s, d))
-        val g = Similarity.knnGraph(cemb, k = 10, sorted = false)
+        val g = Similarity.knnGraph(cemb, k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -362,8 +359,7 @@ object SemanticAnalogs {
       (s, d) => {
         val cemb = clusteredEmbs(Tables.embeddings(s, d))
         val refined = Similarity.nnDescentRound(cemb,
-            Similarity.knnGraph(cemb, k = 10, sorted = false),
-            k = 10, sorted = false)
+            Similarity.knnGraph(cemb, k = 10), k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -383,8 +379,7 @@ object SemanticAnalogs {
     Q("eval_knngraph2_clustered_metrics",
       (s, d) => {
         val cemb = clusteredEmbs(Tables.embeddings(s, d))
-        val g2 = Similarity.knnGraph(cemb, k = 10, sorted = false,
-            probeHamming = 2)
+        val g2 = Similarity.knnGraph(cemb, k = 10, probeHamming = 2)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -417,8 +412,7 @@ object SemanticAnalogs {
       (s, d) => {
         val cemb = clusteredEmbs(Tables.embeddings(s, d))
         val r = Similarity.nnDescentRound(cemb,
-            Similarity.knnGraph(cemb, k = 10, sorted = false,
-              probeHamming = 2), k = 10, sorted = false)
+            Similarity.knnGraph(cemb, k = 10, probeHamming = 2), k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))
@@ -672,7 +666,9 @@ object SemanticAnalogs {
     // the threshold (the frame SemDeDup-style pruning / NN-descent /
     // label propagation consume).
     Q("sim_knn_graph",
-      (s, d) => Similarity.knnGraph(Tables.embeddings(s, d), k = 5),
+      (s, d) => Sinks.exportSorted(
+        Similarity.knnGraph(Tables.embeddings(s, d), k = 5),
+        Seq("vec_id", "rank")),
       Some(s"""WITH $dLshPrefix,
         |${dProbes("qp")},
         |p AS (
@@ -694,8 +690,8 @@ object SemanticAnalogs {
     Q("sim_nndescent_topk",
       (s, d) => {
         val embs = Tables.embeddings(s, d)
-        Similarity.nnDescentRound(embs,
-          Similarity.knnGraph(embs, k = 5, sorted = false), k = 5)
+        Sinks.exportSorted(Similarity.nnDescentRound(embs,
+          Similarity.knnGraph(embs, k = 5), k = 5), Seq("vec_id", "rank"))
       },
       Some(s"""WITH $dLshPrefix,
         |${dNnDescent(5)}
@@ -720,7 +716,7 @@ object SemanticAnalogs {
         graft.sources.ModelStore.ensureFrame(s,
           s"target/models/knnd_${ExtraAnalogs.dirKey(d)}/edges",
           Similarity.nnDescentRound(e,
-            Similarity.knnGraph(e, k = 5, sorted = false), k = 5),
+            Similarity.knnGraph(e, k = 5), k = 5),
           fingerprintData = Some(e))
           .orderBy("vec_id", "rank")
       },
@@ -763,7 +759,7 @@ object SemanticAnalogs {
         val g = graft.sources.ModelStore.ensureFrame(s,
           s"target/models/knnd_${ExtraAnalogs.dirKey(d)}/edges",
           Similarity.nnDescentRound(e,
-            Similarity.knnGraph(e, k = 5, sorted = false), k = 5),
+            Similarity.knnGraph(e, k = 5), k = 5),
           fingerprintData = Some(e))
         Similarity.knnOutliersFromGraph(g, e, k = 5, pm = 500)
       },
@@ -806,8 +802,7 @@ object SemanticAnalogs {
       (s, d) => {
         val embs = Tables.embeddings(s, d)
         val refined = Similarity.nnDescentRound(embs,
-            Similarity.knnGraph(embs, k = 10, sorted = false),
-            k = 10, sorted = false)
+            Similarity.knnGraph(embs, k = 10), k = 10)
           .filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("neighbor_id"),
             col("rank"))

@@ -92,7 +92,7 @@ object Curation {
       lit(1.0) - dis2.cast("double") / tot2.cast("double"))
       .otherwise(lit(0.0)), 6)
     val contaminatedIds = broadcast(
-      graft.operators.Decontam.overlapCore(docs, bench, n, minShared)
+      graft.operators.Decontam.overlapScreen(docs, bench, n, minShared)
         .select(col("train_id").as("doc_id")).distinct()
         .withColumn("contaminated", lit(true)))
     docs

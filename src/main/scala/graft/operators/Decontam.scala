@@ -54,21 +54,6 @@ object Decontam {
     */
   def overlapScreen(train: DataFrame, bench: DataFrame, n: Int = 3,
       minShared: Int = 2, broadcastBench: Boolean = true): DataFrame =
-    // repartition(1) + single-partition sort, not orderBy: the range
-    // partitioner's sampling job re-executes the broadcast-join side
-    // of the screen (no exchange above the scan to reuse), and the hit
-    // list is a vanishing fraction of the corpus — the pair-miner tail
-    // argument verbatim
-    overlapCore(train, bench, n, minShared, broadcastBench)
-      .repartition(1).sortWithinPartitions("train_id", "bench_id")
-
-  /** The screen without the export tail — what composing operators
-    * ([[survivors]], [[graft.operators.Curation.curateFull]]) consume:
-    * a sorted single-partition hit list inside a larger plan would
-    * serialize the downstream join onto one task.
-    */
-  private[operators] def overlapCore(train: DataFrame, bench: DataFrame,
-      n: Int, minShared: Int, broadcastBench: Boolean = true): DataFrame =
     overlapOnGrams(gramHashes(train, "train_id", n),
       gramHashes(bench, "bench_id", n), minShared, broadcastBench)
 
@@ -86,7 +71,7 @@ object Decontam {
         tokens(col("text")), n)).as("h"))
 
   /** The pair verify over pre-computed gram tables — shared by the
-    * broadcast-join path ([[overlapCore]]) and the Bloom-prescreened
+    * broadcast-join path ([[overlapScreen]]) and the Bloom-prescreened
     * path ([[bloomSurvivors]]), so the two can't diverge.
     */
   private def overlapOnGrams(tg: DataFrame, bg: DataFrame,
@@ -140,7 +125,7 @@ object Decontam {
     // The broadcast anti-join streams the sorted side and preserves
     // its order — the export total order survives, fully distributed
     train.select("doc_id").orderBy("doc_id")
-      .join(broadcast(overlapCore(train, bench, n, minShared)
+      .join(broadcast(overlapScreen(train, bench, n, minShared)
         .select(col("train_id").as("doc_id"))),
         Seq("doc_id"), "left_anti")
 

@@ -161,16 +161,6 @@ object Dedup {
       .withColumn("jaccard", round(inter.cast("double") / union, 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-      // total order via a SINGLE-partition sort, not orderBy: a range
-      // exchange first SAMPLES its child — re-executing the expensive
-      // join+verify pipeline twice. repartition(1), NOT coalesce(1):
-      // coalesce is a narrow dependency that would collapse the whole
-      // join+verify stage (the quadratic-in-bucket part) into ONE
-      // task; the round-robin exchange keeps it parallel and shuffles
-      // only the vanishing-fraction pair list into the one-task sort
-      // (the reference exports single CSVs, so one output partition is
-      // the right final shape at any scale)
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
   }
 
   /** The corpus-side band table (doc_id, sz, pos, band) — the STORED
@@ -258,9 +248,6 @@ object Dedup {
       .withColumn("jaccard", round(inter.cast("double") / union, 6))
       .filter(col("jaccard") >= threshold)
       .select("new_id", "old_id", "jaccard")
-      // single-partition export sort of the vanishing pair list — the
-      // minhashPairs tail argument verbatim (its `repartition(1)` note)
-      .repartition(1).sortWithinPartitions("new_id", "old_id")
   }
 
   /** Blocked pairwise n-gram Jaccard: self-join within (lang, source,
@@ -347,11 +334,6 @@ object Dedup {
       .withColumn("jaccard", round(inter.cast("double") / union, 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-      // repartition(1) + single-partition sort (see minhashPairs): no
-      // range-sampling double-execution, and — unlike coalesce(1) —
-      // the blocked join+verify stays parallel upstream of the
-      // exchange; only the surviving pair list crosses it
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
   }
 
   /** PERCOLATION-SAFE Jaccard threshold for the word-set near-dup
@@ -598,7 +580,7 @@ object Dedup {
     * buckets per block index, and the XOR-popcount verify runs inside
     * codegen per candidate. Survivor pairs (a vanishing fraction at a
     * sane sketch width) are deduped (a pair agreeing on k blocks
-    * appears k times) and single-partition sorted for the export tail.
+    * appears k times).
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val nBlocks = maxHamming + 1
@@ -627,10 +609,6 @@ object Dedup {
       // a pair sharing k blocks survives k times; hamming is determined
       // by the pair, so the distinct collapses exact duplicates only
       .select("doc_a", "doc_b", "hamming").distinct()
-      // repartition(1) + single-partition sort (see minhashPairs): no
-      // range-sampling double-execution, and only the surviving pair
-      // list crosses the single-task exchange
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
   }
 
   /** Winnowing near-dup pairs (MOSS shape): docs sharing ≥ `minShared`
@@ -644,8 +622,8 @@ object Dedup {
     * Scale shape: explode to (doc_id, 8-byte fingerprint) — measured
     * bucket occupancy is small and hash-bounded (winnow mins are
     * biased low but tie-broken by the full 60-bit value) — equi-join,
-    * count per pair, filter. Same cached-input / export-tail
-    * conventions as the other miners.
+    * count per pair, filter. Same cached-input convention as the
+    * other miners.
     *
     * `maxDf` is the hot-fingerprint cap ([[substringPairs]]'s guard,
     * same key discipline): a fingerprint carried by more than `maxDf`
@@ -670,8 +648,6 @@ object Dedup {
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      // repartition(1) + single-partition sort (see minhashPairs)
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
   }
 
   /** Hot-key cap shared by the winnow-fingerprint miners: drop every
@@ -734,9 +710,6 @@ object Dedup {
       maxDf: Long = 128L): DataFrame =
     containmentVerified(docs, k, win, minShared, thresholdPm, maxDf)
       .select("doc_a", "doc_b", "containment_pm")
-      // export tail: single sorted file (see minhashPairs); the
-      // surviving pair list is threshold-vanishing
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
 
   /** Shared core of [[containmentPairs]] / [[containmentSurvivors]]:
     * verified over-threshold pairs WITH both shingle-set sizes
@@ -858,9 +831,6 @@ object Dedup {
       .groupBy("doc_a", "doc_b")
       .agg(max(col("run_len")).as("max_run"),
         count(lit(1)).as("n_runs"))
-      // export tail: only the surviving pair list crosses the
-      // single-task exchange (see minhashPairs)
-      .repartition(1).sortWithinPartitions("doc_a", "doc_b")
 
   /** Positional gram anchors (doc_id, pos, h) — one row per token
     * position (minus the trailing gram−1), 24 bytes each, no text.
@@ -1009,20 +979,9 @@ object Dedup {
     * Deterministic: labels converge to min reachable doc_id, so the
     * result is iteration-order independent (DuckDB verifies via a
     * recursive transitive-closure CTE).
-    *
-    * `sorted = true` (the oracle/export convention — the reference
-    * exports single ordered CSVs) ends in a corpus-wide `orderBy
-    * ("doc_id")`: a global range sort of every doc_id purely for
-    * output determinism. A pipeline composing the labels into further
-    * joins/aggregations should pass `sorted = false` — the label
-    * frame's value is its content, the total order is pure export
-    * cost (the same argument as the pair miners' repartition(1)
-    * tails, which only ever sort the vanishing-fraction pair list).
     */
   def clusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20,
-      localThreshold: Int = 100000, sorted: Boolean = true): DataFrame = {
-    def exportOrder(df: DataFrame): DataFrame =
-      if (sorted) df.orderBy("doc_id") else df
+      localThreshold: Int = 100000): DataFrame = {
     // fast path: an LSH pair graph is normally a vanishing fraction of
     // the corpus — when it fits the driver comfortably, union-find
     // locally and broadcast the mapping instead of iterating jobs.
@@ -1054,10 +1013,10 @@ object Dedup {
       val spark = docs.sparkSession
       import spark.implicits._
       val mapDf = broadcast(mapping.toDF("doc_id", "root"))
-      return exportOrder(docs.select(col("doc_id"))
+      return docs.select(col("doc_id"))
         .join(mapDf, Seq("doc_id"), "left")
         .select(col("doc_id"),
-          coalesce(col("root"), col("doc_id")).as("cluster_id")))
+          coalesce(col("root"), col("doc_id")).as("cluster_id"))
     }
 
     // both edge orientations from ONE scan of the miner subtree
@@ -1089,12 +1048,13 @@ object Dedup {
         .join(labels.withColumnRenamed("doc_id", "src"), "src")
         .select(col("dst").as("doc_id"), col("cluster_id"),
           lit(null).cast("long").as("old"))
-      val next = labels
+      // persisted in the caller's scope: the last round's cache backs
+      // the returned labels
+      val next = CacheScope.persist(labels
         .select(col("doc_id"), col("cluster_id"), col("cluster_id").as("old"))
         .union(viaNbr)
         .groupBy("doc_id")
-        .agg(min("cluster_id").as("cluster_id"), min("old").as("old"))
-        .cache()
+        .agg(min("cluster_id").as("cluster_id"), min("old").as("old")))
       converged = next.filter(col("cluster_id") < col("old")).isEmpty
       if (cached != null) cached.unpersist()
       cached = next
@@ -1109,12 +1069,9 @@ object Dedup {
       labels = docs.sparkSession.createDataFrame(pruned.rdd, pruned.schema)
       i += 1
     }
-    // the last round's cache backs the returned labels: the query owns
-    // it from here
-    Option(cached).foreach(CacheScope.persist)
     val untouched = docs.select(col("doc_id"), col("doc_id").as("cluster_id"))
       .join(edgeIds, Seq("doc_id"), "left_anti")
-    exportOrder(untouched.union(labels))
+    untouched.union(labels)
   }
 
   /** Quality-aware dedup completion — the keep-BEST policy (the
@@ -1134,8 +1091,7 @@ object Dedup {
     *
     * Output: one row per cluster (cluster_id, doc_id = the survivor,
     * q_score, n_docs). Scale shape: [[clusters]]' labels
-    * (unsorted — the total order here is per-cluster, not corpus-
-    * wide) join the (doc_id, score) projection, then ONE hash
+    * join the (doc_id, score) projection, then ONE hash
     * aggregate with map-side combine: `max(struct(score, −doc_id))`
     * carries the argmax through the partial/final pair — no
     * corpus-wide window, no per-cluster sort; the shuffle moves one
@@ -1143,8 +1099,7 @@ object Dedup {
     */
   def bestSurvivors(docs: DataFrame, pairs: DataFrame, score: Column,
       maxIters: Int = 20, localThreshold: Int = 100000): DataFrame = {
-    val labels = clusters(docs, pairs, maxIters, localThreshold,
-      sorted = false)
+    val labels = clusters(docs, pairs, maxIters, localThreshold)
     val labeled = docs
       .select(col("doc_id"), score.cast("long").as("q_score"))
       .join(labels, Seq("doc_id"))

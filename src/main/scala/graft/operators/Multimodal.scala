@@ -271,9 +271,7 @@ object Multimodal {
     * shape at 64 bits — nBlocks = maxHamming + 1 equal blocks, any
     * pair within the threshold MUST agree on one whole block), then
     * the XOR-popcount verify inside codegen per candidate. Survivors
-    * dedup (a pair agreeing on k blocks appears k times) and
-    * single-partition sort for the export tail — only the vanishing
-    * pair list crosses the single-task exchange.
+    * dedup (a pair agreeing on k blocks appears k times).
     */
   /** (doc_id, dhash, blk, bval): the exploded Manku block keys —
     * shared by the batch pair miner and the streaming ingest screen
@@ -304,36 +302,26 @@ object Multimodal {
           .bitwiseAND(lit(mask))): _*)).as(Seq("blk", "bval")))
   }
 
-  def dhashPairs(hashes: DataFrame, maxHamming: Int = 3,
-      outputPartitions: Int = 1): DataFrame =
-    hammingPairs(hashes, "dhash", maxHamming, outputPartitions)
+  def dhashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(hashes, "dhash", maxHamming)
 
   /** Near-dup pairs within `maxHamming` bits over ANY 64-bit
     * fingerprint column — the generic mine-and-verify behind
     * [[dhashPairs]] (images) and [[audioFpPairs]] (audio).
-    *
-    * This family is OUTPUT-LINEAR, not vanishing (near-identical
-    * assets recur at corpus rates — mm_dhash_pairs measured tail-exp
-    * 1.0 / 874 k pairs at x8), so at scale the default single-file
-    * export sort is the straggler: pass `outputPartitions > 1` for
-    * the bucketed sorted layout ([[graft.sources.Sinks.exportSorted]]);
-    * registered queries keep the deterministic single-file default.
     */
   def hammingPairs(hashes: DataFrame, hashCol: String,
-      maxHamming: Int = 3, outputPartitions: Int = 1): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     val blocks = hammingBlocks(hashes, hashCol, maxHamming)
     val a = blocks.select(col("blk"), col("bval"),
       col("doc_id").as("doc_a"), col("dhash").as("hash_a"))
     val b = blocks.select(col("blk"), col("bval"),
       col("doc_id").as("doc_b"), col("dhash").as("hash_b"))
-    val pairs = a.join(b, Seq("blk", "bval"))
+    a.join(b, Seq("blk", "bval"))
       .filter(col("doc_a") < col("doc_b"))
       .withColumn("hamming",
         bit_count(col("hash_a").bitwiseXOR(col("hash_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming").distinct()
-    graft.sources.Sinks.exportSorted(pairs, Seq("doc_a", "doc_b"),
-      outputPartitions)
   }
 
   /** Parse a PCM or G.711 WAV payload: RIFF/WAVE magic, then a real
@@ -1048,9 +1036,8 @@ object Multimodal {
     * fingerprints — [[hammingPairs]] on the `fp` column: the image
     * miner's exact-recall block geometry, unchanged.
     */
-  def audioFpPairs(fps: DataFrame, maxHamming: Int = 3,
-      outputPartitions: Int = 1): DataFrame =
-    hammingPairs(fps, "fp", maxHamming, outputPartitions)
+  def audioFpPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(fps, "fp", maxHamming)
 
   // ---- Video scene-cut detection over sampled frames ---------------------
   // The keyframe-extraction primitive for video training data: decode

@@ -1006,7 +1006,7 @@ object Similarity {
     */
   def nearDupPairs(embs: DataFrame, threshold: Double = 0.35,
       bits: Int = 0, corpusN: Long = -1L,
-      outputPartitions: Int = 1, probeHamming: Int = 1): DataFrame = {
+      probeHamming: Int = 1): DataFrame = {
     require(probeHamming == 1 || probeHamming == 2,
       s"probeHamming must be 1 or 2, got $probeHamming")
     val nb = if (bits > 0) bits
@@ -1018,22 +1018,11 @@ object Similarity {
       .select(col("a_id"), col("a_emb"), col("a_norm"),
         explode(probes).as("bucket"))
     val b = side(bucketed, "b", col("bucket"))
-    val pairs = a.join(b, Seq("bucket"))
+    a.join(b, Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id").as("vec_a"), col("b_id").as("vec_b"),
         pairSim("a", "b").as("sim"))
       .filter(col("sim") >= threshold)
-    // default = single-partition sort (see Dedup.minhashPairs for the
-    // full rationale): no range-sampling double-execution, and the
-    // quadratic verify stays parallel with only the pair list crossing
-    // the exchange. BUT this miner's output is only vanishing at a
-    // strict threshold: at τ=0.3 on d=64 unit vectors ~0.75% of ALL
-    // pairs clear the random-cosine floor (SCALING.md), so the output
-    // is Θ(n²) and the one-task sort is the straggler — callers in
-    // that regime pass outputPartitions > 1 for the bucketed sorted
-    // layout (Sinks.exportSorted).
-    graft.sources.Sinks.exportSorted(pairs, Seq("vec_a", "vec_b"),
-      outputPartitions)
   }
 
   /** The k-NN GRAPH: every vector's top-k bucket-mates by cosine —
@@ -1061,22 +1050,9 @@ object Similarity {
     * zero-padded to 20 digits inside the heap so its lexicographic
     * label order IS numeric order. Total work ~n·target, output
     * ≤ n·k rows.
-    *
-    * `sorted = true` (the export/oracle convention) ends in the
-    * single-partition export sort ([[graft.sources.Sinks.exportSorted]])
-    * — NOT `orderBy`, whose range-partitioner sampling job re-executes
-    * the whole mining pipeline a second time (measured round 17: the
-    * standalone query's x16→x32 tail exponent read ~2.0 while its
-    * aggregate consumers — which Catalyst's EliminateSorts protected —
-    * stayed at ~0.4; the sort tail, not the miner, was the quadratic).
-    * Composing callers (propagation, outliers, the NN-descent loop)
-    * pass `sorted = false`: a mid-pipeline repartition(1) would
-    * single-task the edge stream, and unlike a trailing orderBy it is
-    * NOT optimizer-removable under an aggregate.
     */
   def knnGraph(embs: DataFrame, k: Int = 5, bits: Int = 0,
-      corpusN: Long = -1L, sorted: Boolean = true,
-      probeHamming: Int = 1, outputPartitions: Int = 1): DataFrame = {
+      corpusN: Long = -1L, probeHamming: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(probeHamming == 1 || probeHamming == 2,
       s"probeHamming must be 1 or 2, got $probeHamming")
@@ -1093,14 +1069,10 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("q_norm"),
         explode(probes).as("bucket"))
     val c = side(bucketed, "c", col("bucket"))
-    val out = heapTopK(q.join(c, Seq("bucket"))
+    heapTopK(q.join(c, Seq("bucket"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id").as("vec_id"), col("c_id").as("neighbor_id"),
         pairSim("q", "c").as("sim")), k)
-    if (sorted)
-      graft.sources.Sinks.exportSorted(out, Seq("vec_id", "rank"),
-        outputPartitions)
-    else out
   }
 
   /** Bounded-heap per-vector top-k over a (vec_id, neighbor_id, sim)
@@ -1153,15 +1125,9 @@ object Similarity {
     * nothing corpus-quadratic at any n. The embeddings join back by
     * vec_id (hash equi-joins); at deployment the graph is the stored
     * artifact and this is one batch pass over it.
-    *
-    * `sorted` is [[knnGraph]]'s export-tail convention: true for the
-    * exported/stored form, false for composing callers (the
-    * [[nnDescent]] loop re-ranks this output every round — a
-    * per-round repartition(1) would single-task each iteration).
     */
   def nnDescentRound(embs: DataFrame, graph: DataFrame,
-      k: Int = 5, sorted: Boolean = true,
-      outputPartitions: Int = 1): DataFrame = {
+      k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // cached: the candidate rule reads the edge list FOUR times (fwd,
     // rev, and both sides of the 2-hop self-join) — with an in-plan
@@ -1193,14 +1159,10 @@ object Similarity {
       .withColumnRenamed("q_id", "vec_id")
     val c = side(embs, "c")
       .withColumnRenamed("c_id", "neighbor_id")
-    val out = heapTopK(
+    heapTopK(
       cands.join(q, Seq("vec_id")).join(c, Seq("neighbor_id"))
         .select(col("vec_id"), col("neighbor_id"),
           pairSim("q", "c").as("sim")), k, dedupe = true)
-    if (sorted)
-      graft.sources.Sinks.exportSorted(out, Seq("vec_id", "rank"),
-        outputPartitions)
-    else out
   }
 
   /** [[nnDescent]]'s result: the refined graph and the number of
@@ -1245,31 +1207,31 @@ object Similarity {
       s"minImprovedPm must be in [0,10000], got $minImprovedPm")
     val spark = embs.sparkSession
     def materialize(df: DataFrame): DataFrame = {
-      val pruned = df.select("vec_id", "neighbor_id", "sim", "rank").cache()
+      val pruned = CacheScope.persist(
+        df.select("vec_id", "neighbor_id", "sim", "rank"))
       pruned.count() // land the blocks so the re-root reads the cache
       pruned
     }
     def reroot(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
-    var cur = materialize(knnGraph(embs, k, bits, corpusN, sorted = false))
+    var cur = materialize(knnGraph(embs, k, bits, corpusN))
     var rounds = 0
     var stop = false
     val stale = scala.collection.mutable.ArrayBuffer[DataFrame]()
     while (!stop && rounds < maxRounds) {
-      // ONE action lands the round's cache blocks AND counts the
-      // improved edges (round-18 optimization: the previous
+      // The round's internal edge-list persist is redundant here (its
+      // input is the previous round's cached RDD), so the round is
+      // built in its own scope, which drops that persist before
+      // anything plans against it; `next` is persisted in the
+      // caller's scope. ONE action then lands `next`'s blocks AND
+      // counts the improved edges (round-18 optimization: the previous
       // materialize-then-anti-join shape ran the stop rule as a
-      // separate job per round; since `next` is cache-marked, the
-      // anti-join's scan of it lands the blocks as a side effect).
-      // `total` then reads the landed cache. Once the blocks are
-      // landed the round's internal edge-list persist is dead weight
-      // (round-18 ADVICE: it orphaned one cache entry per round), so
-      // the round runs in its own scope.
-      val (next, improved) = CacheScope.run {
-        val n = nnDescentRound(embs, reroot(cur), k, sorted = false)
-          .select("vec_id", "neighbor_id", "sim", "rank").cache()
-        (n, n.join(cur, Seq("vec_id", "neighbor_id"), "left_anti").count())
-      }
+      // separate job per round). `total` then reads the landed cache.
+      val next = CacheScope.persist(
+        CacheScope.run(nnDescentRound(embs, reroot(cur), k))
+          .select("vec_id", "neighbor_id", "sim", "rank"))
+      val improved =
+        next.join(cur, Seq("vec_id", "neighbor_id"), "left_anti").count()
       rounds += 1
       val total = math.max(next.count(), 1L)
       stale += cur
@@ -1279,7 +1241,7 @@ object Similarity {
     // release superseded rounds only AFTER the loop: the final graph's
     // RDD root reads its own cache, not its predecessors'
     stale.foreach(_.unpersist(false))
-    NnDescentResult(reroot(CacheScope.persist(cur)), rounds)
+    NnDescentResult(reroot(cur), rounds)
   }
 
   /** kNN-graph label propagation (one round): every vector's label is
@@ -1297,7 +1259,7 @@ object Similarity {
   def labelPropagate(embs: DataFrame, k: Int = 5, bits: Int = 0,
       corpusN: Long = -1L): DataFrame =
     labelPropagateFromGraph(
-      knnGraph(embs, k, bits, corpusN, sorted = false), embs)
+      knnGraph(embs, k, bits, corpusN), embs)
 
   /** [[labelPropagate]] served from a PREBUILT graph — the deployment
     * form: the kNN edge list is the stored artifact
@@ -1358,13 +1320,13 @@ object Similarity {
   def graphDedupSurvivors(embs: DataFrame, tau: Double, k: Int = 5,
       bits: Int = 0, corpusN: Long = -1L, maxIters: Int = 20,
       localThreshold: Int = 100000): DataFrame = {
-    val pairs = knnGraph(embs, k, bits, corpusN, sorted = false)
+    val pairs = knnGraph(embs, k, bits, corpusN)
       .filter(col("sim") >= tau)
       .select(least(col("vec_id"), col("neighbor_id")).as("doc_a"),
         greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
       .distinct()
     val labels = Dedup.clusters(embs.select(col("vec_id").as("doc_id")),
-      pairs, maxIters, localThreshold, sorted = false)
+      pairs, maxIters, localThreshold)
     embs
       .join(labels.filter(col("doc_id") === col("cluster_id"))
         .select(col("doc_id").as("vec_id")), Seq("vec_id"))
@@ -1472,14 +1434,14 @@ object Similarity {
       k: Int = 5, bits: Int = 0, corpusN: Long = -1L, maxIters: Int = 20,
       localThreshold: Int = 100000): DataFrame = {
     val tauF = calibratedTauMicro(embs, epsPm).select("tau_micro")
-    val pairs = knnGraph(embs, k, bits, corpusN, sorted = false)
+    val pairs = knnGraph(embs, k, bits, corpusN)
       .crossJoin(broadcast(tauF))
       .filter(round(col("sim") * lit(1e6)).cast("long") >= col("tau_micro"))
       .select(least(col("vec_id"), col("neighbor_id")).as("doc_a"),
         greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
       .distinct()
     val labels = Dedup.clusters(embs.select(col("vec_id").as("doc_id")),
-      pairs, maxIters, localThreshold, sorted = false)
+      pairs, maxIters, localThreshold)
     embs
       .join(labels.filter(col("doc_id") === col("cluster_id"))
         .select(col("doc_id").as("vec_id")), Seq("vec_id"))
@@ -1511,7 +1473,7 @@ object Similarity {
   def knnOutliers(embs: DataFrame, k: Int = 5, pm: Int = 500,
       bits: Int = 0, corpusN: Long = -1L): DataFrame =
     knnOutliersFromGraph(
-      knnGraph(embs, k, bits, corpusN, sorted = false), embs, k, pm)
+      knnGraph(embs, k, bits, corpusN), embs, k, pm)
 
   /** [[knnOutliers]] served from a PREBUILT graph — the deployment
     * form (the [[labelPropagateFromGraph]] precedent): the kNN edge

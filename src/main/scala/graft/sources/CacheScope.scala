@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * persist belongs to the query, not to the operator that made it.
   *
   *   - [[persist]] caches a frame and records it in the innermost scope
-  *     open on the calling thread;
+  *     open on the calling thread; a frame whose plan is already cached
+  *     stays with the owner that cached it;
   *   - [[run]] unpersists exactly what was recorded in it when its
   *     block exits, normally or by exception;
   *   - with no scope open, [[persist]] records nothing and keeps no
@@ -28,9 +29,11 @@ import org.apache.spark.storage.StorageLevel
   * lineage, never read stale.
   *
   * Persists an operator both makes and releases before it returns (the
-  * Lloyd/PQ trainers, iterative loop caches) stay plain
-  * `persist`/`unpersist` pairs; only a cache the returned plan reads
-  * goes through here.
+  * Lloyd/PQ trainers) stay plain `persist`/`unpersist` pairs; only a
+  * cache the returned plan reads goes through here. A loop whose last
+  * round's cache backs the returned plan (`Dedup.clusters`,
+  * `Similarity.nnDescent`) persists every round here and unpersists
+  * the superseded rounds itself.
   */
 object CacheScope {
 
@@ -40,11 +43,15 @@ object CacheScope {
 
   /** Cache `df` (MEMORY_AND_DISK, Spark's `persist()` default) unless
     * its plan is already cached, and record it in the innermost open
-    * scope. Returns `df`, so it chains where `.cache()` did.
+    * scope only when this call cached it: a plan cached before (by an
+    * outer scope, or by an owner outside every scope) stays with its
+    * owner. Returns `df`, so it chains where `.cache()` did.
     */
   def persist(df: DataFrame): DataFrame = {
-    if (df.storageLevel == StorageLevel.NONE) df.persist()
-    open.get.headOption.foreach(_ += df)
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist()
+      open.get.headOption.foreach(_ += df)
+    }
     df
   }
 

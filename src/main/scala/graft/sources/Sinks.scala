@@ -28,42 +28,24 @@ object Sinks {
       .parquet(path)
   }
 
-  /** Final export shape for the pair miners — caller-selected
-    * (round-14 verdict ask #5).
+  /** The export order of a registry entry: one partition, sorted by
+    * `sortCols`. Library operators return unordered frames; the entry
+    * that needs its oracle's row order ends here (or in `orderBy`).
     *
-    * `partitions = 1` (every registered query): round-robin
-    * `repartition(1)` + one-task sort — a deterministic single sorted
-    * file. Right when the pair list is a VANISHING fraction of the
-    * corpus (the LSH/banded text miners), and `repartition` rather
-    * than `coalesce` so the quadratic verify stage stays parallel and
-    * only the tiny pair list crosses into the one sort task; rather
-    * than `orderBy` because a range exchange first SAMPLES its child,
-    * re-executing the join+verify pipeline twice.
-    *
-    * `partitions > 1`: hash-partition by the LEADING sort column and
-    * sort within each bucket — the OUTPUT-LINEAR miners' scale shape.
-    * When true pairs grow with the corpus (mm_dhash_pairs measured
-    * tail-exponent 1.0 with 874 k pairs at x8 — SCALING.md session 4),
-    * a single-task final sort is the straggler at 100 TB no matter how
-    * parallel the mining was; this shape trades the global total order
-    * for `partitions` parallel sorted writers while keeping every pair
-    * of one leading key in exactly one internally-sorted file (the
-    * bucketed layout downstream merges or scans per-key without a
-    * shuffle). Determinism note: which FILE a key lands in is fixed by
-    * the hash, but there is no cross-file total order — callers that
-    * need byte-stable single-file output (the oracle gate) stay at 1.
+    * A round-robin `repartition(1)` then a one-task sort, rather than
+    * `orderBy`: a range exchange first samples its child, which runs
+    * the upstream join+verify pipeline twice. Rather than
+    * `coalesce(1)`: coalesce is a narrow dependency that would collapse
+    * the upstream stage itself into one task; the exchange keeps it
+    * parallel and moves only the output rows into the sort task. So
+    * this shape suits an output that is a small fraction of its input
+    * (a pair list, a hit list, a k-row-per-vector graph); it is the one
+    * place a range sort for unbounded outputs will go.
     */
-  def exportSorted(df: DataFrame, sortCols: Seq[String],
-      partitions: Int = 1): DataFrame = {
+  def exportSorted(df: DataFrame, sortCols: Seq[String]): DataFrame = {
     require(sortCols.nonEmpty, "exportSorted: need at least one sort column")
-    require(partitions >= 1,
-      s"exportSorted: partitions must be >= 1, got $partitions")
     import org.apache.spark.sql.functions.col
-    val cols = sortCols.map(col)
-    if (partitions == 1)
-      df.repartition(1).sortWithinPartitions(cols: _*)
-    else
-      df.repartition(partitions, cols.head).sortWithinPartitions(cols: _*)
+    df.repartition(1).sortWithinPartitions(sortCols.map(col): _*)
   }
 
   /** Reference operator S4: console sink (`show`). */

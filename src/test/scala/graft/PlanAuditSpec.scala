@@ -25,6 +25,60 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
+  /** The exchange `repartition(1)` plans: Sinks.exportSorted's, whose
+    * one task must only ever sort a registry entry's final output. */
+  private val singleRepartition = "Exchange SinglePartition, REPARTITION_BY_NUM"
+
+  test("a single-partition repartition only feeds the final export sort") {
+    // library operators return unordered frames and the registry entry
+    // applies the order; the same exchange anywhere else funnels the
+    // rest of the plan through one task
+    val offenders = plans.filter { case (_, p) =>
+      val lines = p.linesIterator.toIndexedSeq
+      val root = if (lines.head.startsWith("AdaptiveSparkPlan")) 1 else 0
+      val at = lines.indices.filter(lines(_).contains(singleRepartition))
+      at.size > 1 || at.exists(i => i != root + 1 ||
+        !lines(root).dropWhile(" +-".contains(_)).startsWith("Sort "))
+    }.keys.toSeq.sorted
+    assert(offenders.isEmpty,
+      s"single-partition repartition below the top in: $offenders")
+  }
+
+  test("library miners plan no single-partition repartition") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Decontam, Dedup, Multimodal, Similarity}
+    import graft.sources.{CacheScope, Tables}
+    CacheScope.run {
+      val docs = Tables.documents(spark, sfDir)
+      val embs = Tables.embeddings(spark, sfDir)
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      val even = docs.filter(col("doc_id") % 2 === 0)
+      val mh = Dedup.minhashPairs(docs)
+      val knn = Similarity.knnGraph(embs)
+      val miners = Seq(
+        "minhashPairs" -> mh,
+        "minhashPairsIncremental" -> Dedup.minhashPairsIncremental(odd, even),
+        "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(docs),
+        "simhashPairs" -> Dedup.simhashPairs(docs),
+        "winnowPairs" -> Dedup.winnowPairs(docs),
+        "containmentPairs" -> Dedup.containmentPairs(docs),
+        "substringPairs" -> Dedup.substringPairs(docs),
+        "clusters" -> Dedup.clusters(docs, mh),
+        "overlapScreen" -> Decontam.overlapScreen(odd, even),
+        "nearDupPairs" -> Similarity.nearDupPairs(embs),
+        "knnGraph" -> knn,
+        "nnDescentRound" -> Similarity.nnDescentRound(embs, knn),
+        "dhashPairs" -> Multimodal.dhashPairs(
+          Multimodal.dhashFixtures(spark, docs).toDF()),
+        "audioFpPairs" -> Multimodal.audioFpPairs(
+          Multimodal.envelopeFixtures(spark, docs)))
+      val offenders = miners.collect { case (name, df)
+        if df.queryExecution.executedPlan.toString
+          .contains(singleRepartition) => name }
+      assert(offenders.isEmpty, s"ordered miner output from: $offenders")
+    }
+  }
+
   test("no query falls back to an interpreted Python/UDF operator") {
     val bad = Seq("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
     val offenders = plans.filter { case (_, p) => bad.exists(p.contains) }.keys

@@ -138,7 +138,7 @@ object ProbeMain {
         for (i <- 1 to 2) {
           spark.catalog.clearCache()
           t(s"bruteTopK#$i")(noop(Similarity.bruteForceTopK(e, 50, 10)))
-          t(s"knnGraph#$i")(noop(Similarity.knnGraph(e, k = 10, sorted = false)))
+          t(s"knnGraph#$i")(noop(Similarity.knnGraph(e, k = 10)))
           val r = t(s"nnDescent3-build#$i")(
             Similarity.nnDescent(e, k = 10, maxRounds = 3, minImprovedPm = 0L))
           t(s"nnDescent3-exec#$i")(noop(r.graph))

@@ -14,8 +14,8 @@ import graft.sources.CacheScope
   * the session's cached plans and persisted RDDs as it found them: a
   * persist that outlives its operator goes through `CacheScope.persist`,
   * so the scope releases it. The suite starts from an empty cache, since
-  * a scope adopts a plan an earlier suite left cached, and compares
-  * deltas.
+  * a plan an earlier suite left cached is not the scope's to release and
+  * would hide whether the query releases its own, and compares deltas.
   */
 class RegistrySmokeSpec extends AnyFunSuite with SparkSpec
     with BeforeAndAfterAll {

@@ -24,7 +24,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("minhash LSH finds the exact dup but not the permuted one") {
     val got = Dedup.minhashPairs(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
     // d0/d1 share all shingles (jaccard 1.0); d2's reversed order shares
     // none of d0's 2-grams, so banding never pairs them. d3 sits exactly
     // at the 0.5 threshold ({a b, b g} of {a b, b g, g d|g e}) and a
@@ -40,15 +41,16 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val got = Dedup.minhashPairsIncremental(
       docs.filter(col("doc_id") % 2 === 1),
       docs.filter(col("doc_id") % 2 === 0)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
     assert(got === Seq((1L, 0L, 1.0), (3L, 0L, 0.5)))
   }
 
   test("incremental screen releases its internal persist") {
     import org.apache.spark.sql.functions.col
     // the test above ran the same plans with no scope open and left
-    // them cached; a scope adopts a cached plan it persists, so start
-    // from an empty cache to see this scope's own persists
+    // them cached; a scope never records a plan someone else cached, so
+    // start from an empty cache to see this scope's own persists
     spark.catalog.clearCache()
     val before = cachedPlans
     graft.sources.CacheScope.run {
@@ -62,7 +64,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("blocked word-set Jaccard catches exact AND permuted dups") {
     val got = Dedup.ngramJaccardPairs(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
     assert(got === Seq((0L, 1L, 1.0), (0L, 2L, 1.0), (1L, 2L, 1.0)))
   }
 
@@ -89,7 +92,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("clusters collapse pair graph to min-id survivors, singletons keep their id") {
     val got = Dedup.clusters(docs, Dedup.minhashPairs(docs)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     // pairs (0,1),(0,3),(1,3) → component {0,1,3} labeled 0;
     // d2 (permuted) and d4 (distinct) stay their own clusters
     assert(got === Seq((0L, 0L), (1L, 0L), (2L, 2L), (3L, 0L), (4L, 4L)))
@@ -107,7 +110,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       .toDF("doc_a", "doc_b", "jaccard")
     def labels(localThreshold: Int) =
       Dedup.clusters(chainDocs, pairs, localThreshold = localThreshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val driver = labels(100000)     // union-find fast path
     val distributed = labels(0)     // forced min-label iteration
     assert(distributed === driver)

@@ -587,16 +587,9 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     for (k <- 0 until 10)
       assert(mined.contains((2L * k, 2L * k + 1)), s"twin $k unmined")
-    assert(Multimodal.dhashPairs(hashes).collect().toSeq ===
-      Multimodal.dhashPairs(hashes).collect().toSeq)
-    // the partitioned export variant (output-linear scale shape)
-    // mines the identical pair SET — only the final layout differs
-    val fx = Multimodal.dhashFixtures(spark,
-      spark.range(20).select(col("id").as("doc_id"))).toDF()
-    val part = Multimodal.dhashPairs(fx, outputPartitions = 3)
-    assert(part.rdd.getNumPartitions === 3)
-    assert(part.collect().map(_.toSeq).toSet ===
-      Multimodal.dhashPairs(fx).collect().map(_.toSeq).toSet)
+    def pairs() = Multimodal.dhashPairs(hashes).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(pairs() === pairs())
   }
 
   test("wavSamples: parseWav is exactly the fold of the decoded samples") {

@@ -411,23 +411,6 @@ class SemanticDecontamSpec extends AnyFunSuite with SparkSpec {
     assert(rows.toSeq === Seq((0L, 1000000L)), s"got ${rows.toSeq}")
   }
 
-  test("knnGraph: outputPartitions > 1 keeps the bucketed layout " +
-    "(partition count) with identical edge content") {
-    val s = spark; import s.implicits._
-    val embs = (0L until 12L).map(i =>
-        (i, Seq(math.cos(i * 0.5).toFloat, math.sin(i * 0.5).toFloat,
-          0f, 0f), 0))
-      .toDF("vec_id", "embedding", "label")
-    val one = Similarity.knnGraph(embs, k = 2, bits = 1)
-    val many = Similarity.knnGraph(embs, k = 2, bits = 1,
-      outputPartitions = 3)
-    assert(one.rdd.getNumPartitions === 1)
-    assert(many.rdd.getNumPartitions === 3)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    assert(rows(many) === rows(one))
-  }
-
   test("heapTopK boundary: a negative neighbor id raises instead of " +
     "silently inverting tie order") {
     val s = spark; import s.implicits._

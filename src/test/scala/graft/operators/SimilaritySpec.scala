@@ -255,8 +255,11 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("caller-supplied corpusN skips the count with IDENTICAL buckets/results") {
     val n = embs.count()
-    assert(Similarity.nearDupPairs(embs, 0.3, corpusN = n).collect().toSeq ===
-      Similarity.nearDupPairs(embs, 0.3).collect().toSeq)
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
+    assert(pairs(Similarity.nearDupPairs(embs, 0.3, corpusN = n)) ===
+      pairs(Similarity.nearDupPairs(embs, 0.3)))
     assert(Similarity.lshTopK(embs, nQueries = 2, k = 2, corpusN = n)
       .collect().toSeq ===
       Similarity.lshTopK(embs, nQueries = 2, k = 2).collect().toSeq)

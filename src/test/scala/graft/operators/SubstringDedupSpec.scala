@@ -31,7 +31,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkSpec {
   private def pairs(minRun: Int = 12) =
     Dedup.substringPairs(docs, gram = 8, minRun = minRun).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
+      .toSeq.sorted
 
   test("finds exact shared runs with their maximal length") {
     assert(pairs() === Seq(

@@ -102,7 +102,7 @@ object SubstringProps extends Properties("substring") {
       val got = Dedup.substringPairs(toDf(docs), gram = Gram,
         minRun = MinRun, maxDf = 1000000L).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSeq
+        .toSeq.sorted
       val want = referencePairs(docs)
       if (got != want) println(s"docs=$docs\n got=$got\nwant=$want")
       got == want

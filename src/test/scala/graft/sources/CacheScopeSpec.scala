@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
 /** [[CacheScope]] laws: a scope releases exactly the persists recorded
-  * in it, on normal exit and on exception, and a persist made with no
-  * scope open is recorded nowhere.
+  * in it, on normal exit and on exception; a persist made with no scope
+  * open is recorded nowhere, and a plan someone else already cached is
+  * never recorded, so a scope cannot release a cache it does not own.
   */
 class CacheScopeSpec extends AnyFunSuite with SparkSpec {
 
@@ -76,13 +77,28 @@ class CacheScopeSpec extends AnyFunSuite with SparkSpec {
     } finally df.unpersist(blocking = true)
   }
 
-  test("persisting an already-cached plan records it without re-caching") {
+  test("a plan cached outside the scope outlives the scope") {
+    val df = frame()
+    try {
+      df.persist()
+      val before = cachedPlans
+      CacheScope.run {
+        CacheScope.persist(df)
+        CacheScope.persist(df)
+        assert(cachedPlans === before)
+      }
+      assert(cached(df))
+      assert(cachedPlans === before)
+    } finally df.unpersist(blocking = true)
+  }
+
+  test("an inner scope leaves a plan the outer scope cached") {
     val df = frame()
     CacheScope.run {
-      val before = cachedPlans
       CacheScope.persist(df)
-      CacheScope.persist(df)
-      assert(cachedPlans === before + 1)
+      // a composed operator persisting the same plan again
+      CacheScope.run(CacheScope.persist(df))
+      assert(cached(df))
     }
     assert(!cached(df))
   }

@@ -138,33 +138,17 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
     assert(scan.contains("PartitionFilters"))
   }
 
-  test("exportSorted: partitioned shape keeps the row set, sorts within buckets, co-locates keys") {
+  test("exportSorted: one partition, totally ordered, same rows") {
     val s = spark; import s.implicits._
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    // a dhash-pairs-shaped frame with repeated leading keys
+    // a dhash-pairs-shaped frame with repeated leading keys, spread
+    // over several input partitions
     val pairs = (0L until 60L).map(i => (i % 7, i, i % 4))
-      .toDF("doc_a", "doc_b", "hamming")
+      .toDF("doc_a", "doc_b", "hamming").repartition(4)
     val single = Sinks.exportSorted(pairs, Seq("doc_a", "doc_b"))
-    val multi = Sinks.exportSorted(pairs, Seq("doc_a", "doc_b"), 4)
-    // law 1: same row SET as the deterministic single-file shape
-    assert(multi.collect().map(_.toSeq).toSet ===
-      single.collect().map(_.toSeq).toSet)
-    // law 2: exactly the requested writer parallelism
-    assert(multi.rdd.getNumPartitions === 4)
-    // law 3: every partition is internally sorted by (doc_a, doc_b)
-    // and owns its leading keys exclusively (hash partitioning — a
-    // downstream per-key scan touches exactly one file)
-    val byPid = multi.withColumn("pid", spark_partition_id())
-      .collect().map(r => (r.getInt(3), (r.getLong(0), r.getLong(1))))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    byPid.values.foreach(rows => assert(rows === rows.sorted))
-    val owners = byPid.toSeq.flatMap { case (pid, rows) =>
-      rows.map(_._1).distinct.map(_ -> pid) }
-    assert(owners.groupBy(_._1).values.forall(_.map(_._2).distinct.size == 1),
-      "a leading key appeared in two partitions")
-    // single-file default unchanged: one partition, totally ordered
     assert(single.rdd.getNumPartitions === 1)
     val srows = single.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(srows === srows.sorted)
+    assert(srows.sorted ===
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
   }
 }
