@@ -1,6 +1,6 @@
 package graft.rideshare
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +10,19 @@ import org.apache.spark.sql.functions._
   * body it reproduces. All are lazy plans; the caller picks the action.
   */
 object RideshareTasks {
+
+  /** The output order of an aggregate bounded by its key domain (4
+    * times of day, 31 days, about 7 boroughs × 4): one task sorts it.
+    * `orderBy` plans a range exchange, which adds a sampling job and a
+    * stage of its own: 2 single-task jobs per action to order at most
+    * 28 rows. `coalesce(1)` is narrow, so it collapses only the
+    * post-shuffle final aggregate into the sort task, and that
+    * aggregate reads at most one row per group from each map task.
+    * `Sinks.exportSorted` would keep a round-robin exchange (saving one
+    * job, not two) and sorts by ascending column names only.
+    */
+  private def sortedInOneTask(cols: Column*)(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols: _*)
 
   /** T2a — trip counts per (business, month). Reference
     * `codes/task2.py:77-80`. Partial aggregation (map-side combine) makes
@@ -85,7 +98,7 @@ object RideshareTasks {
       .groupBy("time_of_day")
       .agg(avg(col("driver_total_pay").cast("double"))
         .as("average_driver_total_pay"))
-      .orderBy(col("average_driver_total_pay").desc)
+      .transform(sortedInOneTask(col("average_driver_total_pay").desc))
 
   /** T4b — average trip length per time_of_day. Reference
     * `codes/task4.py:80-82`. */
@@ -93,7 +106,7 @@ object RideshareTasks {
     enriched
       .groupBy("time_of_day")
       .agg(avg(col("trip_length").cast("double")).as("average_trip_length"))
-      .orderBy(col("average_trip_length").desc)
+      .transform(sortedInOneTask(col("average_trip_length").desc))
 
   /** T4c — earnings per mile: the T4a and T4b averages per time_of_day,
     * then their ratio. Reference `codes/task4.py:86-95` joins the two
@@ -119,7 +132,7 @@ object RideshareTasks {
       .groupBy("day")
       .agg(avg(col("request_to_pickup").cast("double"))
         .as("average_waiting_time"))
-      .orderBy("day")
+      .transform(sortedInOneTask(col("day")))
 
   /** T5b — days whose average wait exceeds the threshold. The reference
     * crossed to pandas for this (`codes/task5.py:86-92`); we keep it in
@@ -140,7 +153,7 @@ object RideshareTasks {
       .count()
       .withColumnRenamed("count", "trip_count")
       .filter(col("trip_count") > 0 && col("trip_count") < 1000)
-      .orderBy("Pickup_Borough", "time_of_day")
+      .transform(sortedInOneTask(col("Pickup_Borough"), col("time_of_day")))
 
   /** T6b — evening-only counts per pickup borough, the literal
     * time_of_day column re-attached after the group-by. Reference
@@ -154,7 +167,7 @@ object RideshareTasks {
       .withColumnRenamed("count", "trip_count")
       .withColumn("time_of_day", lit("evening"))
       .select("Pickup_Borough", "time_of_day", "trip_count")
-      .orderBy("Pickup_Borough")
+      .transform(sortedInOneTask(col("Pickup_Borough")))
 
   /** T6c — Brooklyn→Staten Island trips: the conjunctive filter feeding
     * both the count and the 3-column sample. Reference

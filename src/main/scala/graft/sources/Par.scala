@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scale-adaptive compute fan-out (optimization guide §2.5 "input
@@ -35,6 +39,22 @@ import org.apache.spark.sql.execution.exchange.Exchange
   * chain — where building the RDD runs no job — is probed for its
   * split count.
   *
+  * The probe counts only splits that hold data. A split is not a unit
+  * of work: a parquet split reads only the row groups whose midpoint
+  * falls inside it, so a single-row-group file planned as 4 splits
+  * still runs on one core (the other 3 read nothing), and a
+  * `getNumPartitions >= cores` test passes it through unfanned. With
+  * the local split floor of 256 KB ([[graft.GraftSession]]) any
+  * single-row-group file above about 0.75 MB splits this way. So a
+  * parquet split counts only when one of its files keeps a row group
+  * under Spark's own midpoint filter
+  * (`ParquetFooterReader.buildFilter`, read through its footer); a
+  * split of another format counts when it holds any bytes, and a
+  * partition that comes from no file scan always counts. The footers
+  * are read on the driver and no job runs. They are not read at all
+  * when the chain has fewer partitions than cores, and the count stops
+  * at the core count.
+  *
   * Value safety: a keyless repartition only re-buckets rows, so it is
   * result-identical for every downstream whose arithmetic is
   * order-free — the house integer-exact discipline (micro-nat grids,
@@ -66,9 +86,35 @@ object Par {
         exec.exists(_.isInstanceOf[Exchange]))
       df
     // narrow scan-rooted chain: toRdd builds lineage without running a
-    // job, and its partition count IS the scan's split count — the
-    // starvation signal
-    else if (df.rdd.getNumPartitions >= target) df
+    // job, and its partitions are the scan's splits
+    else if (dataSplitsReach(exec, df.rdd.getNumPartitions, target)) df
     else df.repartition(target)
   }
+
+  /** Whether at least `target` of a narrow chain's `splits` partitions
+    * hold data: each file-scan split that holds none is taken off.
+    */
+  private def dataSplitsReach(exec: SparkPlan, splits: Int,
+      target: Int): Boolean = splits >= target && {
+    val scans = exec.collect { case s: FileSourceScanExec => s }
+    val parts = scans.map(s => s -> s.inputRDD.partitions.collect {
+      case p: FilePartition => p })
+    val need = target - (splits - parts.map(_._2.length).sum)
+    need <= 0 || parts.iterator.flatMap { case (scan, ps) =>
+      val holds = holdsData(scan)
+      ps.iterator.filter(p => p.files.exists(holds))
+    }.take(need).size == need
+  }
+
+  /** The scan's test of whether one file's split reads any row. */
+  private def holdsData(scan: FileSourceScanExec): PartitionedFile => Boolean =
+    scan.relation.fileFormat match {
+      case _: ParquetFileFormat =>
+        val conf = scan.session.sessionState
+          .newHadoopConfWithOptions(scan.relation.options)
+        f => f.length > 0 && !ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(f.toPath, conf),
+          ParquetFooterReader.buildFilter(conf, f, false)).getBlocks.isEmpty
+      case _ => _.length > 0
+    }
 }

@@ -2,8 +2,8 @@ package graft.rideshare
 
 import java.time.{LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -130,6 +130,68 @@ class RideshareTasksSpec extends AnyFunSuite with SparkSpec {
     assert(bsi.count() === 2)
     assert(rowsOf(bsi.limit(1)).head ===
       Seq("Brooklyn", "Staten Island", "Park Slope"))
+  }
+
+  /** A trips CSV of about 1.3 MB, big enough that the session's split
+    * floor cuts it into one split per core. Every summed value is a
+    * multiple of 0.25 and every sum stays far below 2^51, so each
+    * partial sum is exact. Re-splitting a scan changes the order in
+    * which a double sum adds its n terms, and any order lands within
+    * (n−1)·ε·Σ|x| of the exact sum (ε = 2^-53): a relative error of at
+    * most (n−1)·ε·Σ|x| / |Σx|. Here every partial sum is exact, so the
+    * bound is 0 and any split gives the same bits; no tolerance is
+    * needed. Averages are one division of exact operands. Each sort
+    * key is unique or, for the averages, distinct per time of day, so
+    * the order has no ties.
+    */
+  private lazy val splitCsv: String = {
+    val tods = Array("morning", "afternoon", "evening", "night")
+    val lines = (0 until 17000).map { i =>
+      val date = epoch(2023, 1 + i % 5, 1 + (i / 5) % 28)
+      Seq(if (i % 10 == 0) "Lyft" else "Uber", 1 + i % 7, 1 + (i / 7) % 7,
+        1.0 + (i % 4) * 1.5 + (i % 13) * 0.25,
+        60.0 + (i % 31) * 20 + (i % 11) * 0.5, 1.0, 1.0, 1.0, tods(i % 4),
+        date, 1.0, 5.0 + (i % 4) * 3.5 + (i % 17) * 0.25,
+        (i % 9) * 0.5 - 1.0, 1.0, 1.0).mkString(",")
+    }
+    val path = java.nio.file.Files.createTempDirectory("rideshare_split")
+      .resolve("rideshare_data.csv")
+    java.nio.file.Files.write(path, (RideshareSchema.tripSchema.fieldNames
+      .mkString(",") +: lines).mkString("\n").getBytes("UTF-8"))
+    path.toString
+  }
+
+  /** The tasks that order a bounded aggregate, with their sort keys. */
+  private val sortedTasks: Seq[(String, DataFrame => DataFrame, Seq[Column])] = Seq(
+    ("T4a", RideshareTasks.avgDriverPayByTimeOfDay,
+      Seq(col("average_driver_total_pay").desc)),
+    ("T4b", RideshareTasks.avgTripLengthByTimeOfDay,
+      Seq(col("average_trip_length").desc)),
+    ("T5a", RideshareTasks.januaryDailyAvgWait, Seq(col("day"))),
+    ("T5b", RideshareTasks.daysWithAvgWaitOver(_), Seq(col("day"))),
+    ("T6a", RideshareTasks.lowVolumeBoroughSlots,
+      Seq(col("Pickup_Borough"), col("time_of_day"))),
+    ("T6b", RideshareTasks.eveningCountsByBorough, Seq(col("Pickup_Borough"))))
+
+  test("a 1.3 MB trips CSV scans on every core") {
+    val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(splitCsv))
+    assert(bytes > 1200000L && bytes < 1400000L, bytes)
+    assert(RideshareSchema.readTrips(spark, splitCsv).rdd.getNumPartitions ===
+      spark.sparkContext.defaultParallelism)
+  }
+
+  test("bounded aggregates sort in one task: no range exchange, same rows and order") {
+    val trips = RideshareSchema.readTrips(spark, splitCsv)
+    val split = Enrich.enrich(trips, zones)
+    val single = Enrich.enrich(trips.coalesce(1), zones)
+    sortedTasks.foreach { case (name, task, keys) =>
+      val got = task(split)
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("rangepartitioning"), s"$name:\n$plan")
+      val want = rowsOf(task(single).orderBy(keys: _*))
+      assert(want.nonEmpty, name)
+      assert(rowsOf(got) === want, name)
+    }
   }
 
   test("T7: pivot by business with explicit values and fillna(0)") {

@@ -34,6 +34,30 @@ class ParSpec extends AnyFunSuite with SparkSpec {
       === (0L until 64L).toArray)
   }
 
+  test("fanOut counts only splits holding data: a split single-row-group file still fans out") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("par_fanout_rg").toString + "/t"
+    // incompressible hex text: one ~300 KB file, one row group
+    (0L until 4000L).map(i => (i, (0 until 2).map(j =>
+      java.util.UUID.nameUUIDFromBytes(s"$i/$j".getBytes).toString).mkString))
+      .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length === 1 && files.head.length > 250000L, files.map(_.length).toSeq)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, 64L * 1024)
+    try {
+      val df = spark.read.parquet(dir).select(col("doc_id"), md5(col("text")))
+      val target = spark.sparkContext.defaultParallelism
+      assert(df.rdd.getNumPartitions > target)
+      val out = Par.fanOut(df)
+      assert(out.rdd.getNumPartitions === target)
+      assert(out.select("doc_id").collect().map(_.getLong(0)).sorted
+        === (0L until 4000L).toArray)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("fanOut is reference-identity on exchange-bearing plans (no probe, no extra shuffle)") {
     val agg = onePartParquet().groupBy("text").agg(count(lit(1)).as("n"))
     assert(Par.fanOut(agg) eq agg)
