@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.CacheScope
+import Harness.jsonStr
 
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line on stdout
@@ -35,14 +35,13 @@ object Bench {
   val MaxErrorsInline = 3
   val InlineErrorChars = 60
 
-
-  private[graft] def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
+  /** An error message as a JSON string, control chars blanked to
+    * spaces: each stays one byte, so [[InlineErrorChars]] bounds the
+    * inline entries, and the line and the BENCHQ file keep the bytes
+    * they have always had.
+    */
+  private def errorJson(e: String): String =
+    jsonStr(e.map(c => if (c < ' ') ' ' else c))
 
   /** The driver-parsed stdout line. Every field is either scalar or
     * bounded ([[MaxErrorsInline]]) — its length must NOT grow with the
@@ -53,9 +52,9 @@ object Bench {
     val failedJson = failures.map(f => jsonStr(f._1))
       .take(MaxErrorsInline).mkString("[", ",", "]")
     val errorsJson = failures.take(MaxErrorsInline)
-      .map { case (n, e) => jsonStr(n) + ":" + jsonStr(e.take(InlineErrorChars)) }
+      .map { case (n, e) => jsonStr(n) + ":" + errorJson(e.take(InlineErrorChars)) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","core_total":$coreTotal,"extension_total":${total - coreTotal},"n_runs":$nRuns,"n_failed":${failures.size},"failed":$failedJson,"errors":$errorsJson,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","core_total":$coreTotal,"extension_total":${total - coreTotal},"n_runs":$nRuns,"n_failed":${failures.size},"failed":$failedJson,"errors":$errorsJson,"sf":${jsonStr(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -63,22 +62,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // Timed action: write to the no-op sink, NOT count(). Under count()
-    // Catalyst legally deletes the measured work for projection-only
-    // pipelines (EliminateSorts drops a trailing orderBy, ColumnPruning
-    // drops every projected expression), so text_*/mm_* queries would
-    // bench as bare parquet row-counts. The noop sink consumes every
-    // row and column, forcing full evaluation while writing nothing.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // dev-only subset knob (the ScalingBench convention): the driver
-    // never sets it, so its runs time the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val queries = SparkEntry.queries.filter { case (n, _) => Harness.selected(n) }
 
     // queries that ALWAYS get the widest sample (3N runs), regardless
     // of observed spread: dedup_incremental's FIRST run builds its
@@ -194,13 +178,9 @@ object Bench {
       // cost into the first measured run — the log makes that visible.
       // Each query releases its persists in its own scope (scopes are
       // per thread, so the pooled warmup below keeps them apart).
-      def warmExec(n: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      def warmExec(n: String, fn: (SparkSession, String) => DataFrame,
           dir: String): Unit =
-        try CacheScope.run(exec(fn(spark, dir))) catch {
-          case t: Throwable => System.err.println(
-            s"warmup failed: $n @ $dir: ${t.getClass.getSimpleName}: " +
-              Option(t.getMessage).getOrElse("").take(160))
-        }
+        Harness.warm(n, dir)(Harness.noop(fn(spark, dir)))
       // CONCURRENT warmup (round-18 ask #5): warmup exists to absorb
       // JIT/codegen/classloader ramp, not to measure — so its queries
       // need not run one at a time. At sf0.001 each query is
@@ -212,27 +192,15 @@ object Bench {
       // from the pool — two ensureFrame calls racing on one artifact
       // dir (sim_nndescent_loaded + emb_outliers_loaded share theirs)
       // could interleave a parquet overwrite — and warm serially
-      // below, exactly as before. SPARK_GRAFT_WARMUP_THREADS=1
-      // restores the fully serial order.
-      val warmThreads = math.max(1,
-        sys.env.get("SPARK_GRAFT_WARMUP_THREADS")
-          .flatMap(_.toIntOption).getOrElse(8))
-      def warmMany(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-          dir: String): Unit =
-        if (warmThreads <= 1 || qs.sizeIs <= 1)
-          qs.foreach { case (n, fn) => warmExec(n, fn, dir) }
-        else {
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(warmThreads)
-          try {
-            val tasks = qs.map { case (n, fn) =>
-              pool.submit(new Runnable {
-                def run(): Unit = warmExec(n, fn, dir)
-              })
-            }
-            tasks.foreach(_.get())
-          } finally pool.shutdown()
-        }
+      // below, exactly as before.
+      def warmMany(qs: Seq[(String, (SparkSession, String) => DataFrame)],
+          dir: String): Unit = {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+        try qs.map { case (n, fn) =>
+          pool.submit(new Runnable { def run(): Unit = warmExec(n, fn, dir) })
+        }.foreach(_.get())
+        finally pool.shutdown()
+      }
       (1 to 2).foreach { _ =>
         warmMany(queries.filter { case (n, _) =>
           !singleRun(n) && !artifactWarm(n) }.toSeq, warmupDir)
@@ -274,16 +242,11 @@ object Bench {
       // CacheManager matches re-built plans by canonical form, so
       // without the release the 2nd+ runs of a cached-artifact query
       // time cache hits instead of the operator — and stale blocks
-      // would distort later queries via memory pressure. The clock
-      // stops before the scope releases.
-      def timed(): Double = CacheScope.run {
-        val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)) } catch {
-          case t: Throwable =>
-            err = Some((t.getClass.getSimpleName + ": " +
-              Option(t.getMessage).getOrElse("")).take(160))
-        }
-        (System.nanoTime() - t0) / 1e9
+      // would distort later queries via memory pressure.
+      def timed(): Double = {
+        val r = Harness.run(Harness.noop(fn(spark, sfDir)))
+        if (r.error.nonEmpty) err = r.error
+        r.seconds
       }
       val base =
         if (singleRun(name)) Seq(timed())
@@ -340,7 +303,7 @@ object Bench {
     // times, the FULL error map: stderr, BEFORE the stdout line, so
     // the driver's stdout tail-capture sees only the bounded summary
     val allErrorsJson = failures
-      .map { case (n, e) => jsonStr(n) + ":" + jsonStr(e) }
+      .map { case (n, e) => jsonStr(n) + ":" + errorJson(e) }
       .mkString("{", ",", "}")
     System.err.println(s"""{"bench_queries":$qs}""")
     System.err.println(s"""{"bench_runs":$runsJson}""")

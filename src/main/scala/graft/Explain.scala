@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection runner: dumps the formatted physical plan of each
   * registered query (or the ones named as extra args) so scan pruning
@@ -12,7 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).toSet
-    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Registry.all
       .filter(q => only.isEmpty || only(q.name))
@@ -20,7 +19,7 @@ object Explain {
         println(s"\n===== ${q.name} =====")
         try println(q.fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => println(s"explain failed: $e") }
+        catch { case t: Throwable => println(s"explain failed: ${Harness.errorText(t)}") }
       }
     spark.stop()
   }

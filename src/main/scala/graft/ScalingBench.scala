@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CacheScope, Sinks, Tables}
+import graft.sources.{CacheScope, ModelStore, Sinks, Tables}
+import Harness.jsonStr
 
 /** Scaling-curve harness: measures how the pair-miner / ANN family
   * grows with corpus size — the empirical backing for every "scale-
@@ -37,7 +38,8 @@ import graft.sources.{CacheScope, Sinks, Tables}
   * Usage:
   *   sbt "runMain graft.ScalingBench [baseSfDir] [outRoot]"
   * Env: SPARK_GRAFT_CPUS (default: all processors), SPARK_GRAFT_SCALING_RUNS
-  * (default 2, best-of), SPARK_GRAFT_SCALES (default "1,2,4,8").
+  * (default 2, best-of), SPARK_GRAFT_SCALES (default "1,2,4,8"),
+  * SPARK_GRAFT_ONLY (comma-separated subject names).
   * Stdout: one JSON line (times, counts, exponents). Stderr: the
   * ready-to-paste SCALING.md table.
   */
@@ -491,9 +493,6 @@ object ScalingBench {
       .flatMap(_.toIntOption).getOrElse(2))
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,2,4,8")
       .split(",").map(_.trim.toInt).toSeq
-    // comma-separated subject-name filter for re-measuring one curve
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -503,8 +502,7 @@ object ScalingBench {
     val allSubjects =
       subjects.map { case (n, f) => (n, f, "x") } ++
         zipfSubjects.map { case (n, f) => (n, f, "zipf/x") }
-    val active = if (only.isEmpty) allSubjects
-      else allSubjects.filter { case (n, _, _) => only(n) }
+    val active = allSubjects.filter { case (n, _, _) => Harness.selected(n) }
 
     val prefixes = active.map(_._3).distinct
     scales.foreach { k =>
@@ -527,35 +525,28 @@ object ScalingBench {
           // would silently serve an index built against the dir's
           // PREVIOUS content after an in-place re-synthesis — drop
           // every artifact keyed by this dir so loaded-twin subjects
-          // rebuild against the fresh corpus
+          // rebuild against the fresh corpus (invalidate also drops
+          // each artifact's `.fp` fingerprint)
           val key = graft.analog.ExtraAnalogs.dirKey(dir)
-          def rmRec(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rmRec))
-            f.delete(); ()
-          }
           Option(new java.io.File("target/models").listFiles())
-            .foreach(_.filter(_.getName.endsWith(key)).foreach(rmRec))
+            .foreach(_.filter(_.getName.endsWith(key))
+              .foreach(f => ModelStore.invalidate(spark, f.getPath)))
           java.nio.file.Files.write(marker.toPath,
             baseDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
       }
     }
 
-    def exec(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     // warmup at 1× pays JIT/codegen outside every measurement. TWO
-    // passes by default (SPARK_GRAFT_SCALING_WARMUPS): one execution
-    // per subject is not enough to tier-up the generated code — the
-    // first measured cells (subject-major order, x1 first) were
-    // repeatedly observed 2–4× slow on single-warmup sessions, which
-    // corrupts the curve's low endpoint and hence the exponent.
-    val warmups = math.max(1, sys.env.get("SPARK_GRAFT_SCALING_WARMUPS")
-      .flatMap(_.toIntOption).getOrElse(2))
-    (1 to warmups).foreach { _ =>
-      active.foreach { case (_, fn, p) =>
-        try CacheScope.run(exec(fn(spark, s"$outRoot/$p${scales.head}")))
-        catch { case _: Throwable => () }
+    // passes: one execution per subject is not enough to tier-up the
+    // generated code — the first measured cells (subject-major order,
+    // x1 first) were repeatedly observed 2–4× slow on single-warmup
+    // sessions, which corrupts the curve's low endpoint and hence the
+    // exponent.
+    (1 to 2).foreach { _ =>
+      active.foreach { case (name, fn, p) =>
+        val dir = s"$outRoot/$p${scales.head}"
+        Harness.warm(name, dir)(Harness.noop(fn(spark, dir)))
       }
     }
 
@@ -569,12 +560,10 @@ object ScalingBench {
         // matches re-built plans by canonical form, so without the
         // release the 2nd+ runs time cache hits and best-of-N reports
         // warm minima — the growth exponent then measures cache-scan
-        // growth, not the operator. The clock stops before the release.
-        CacheScope.run {
-          val t0 = System.nanoTime()
-          exec(fn(spark, dir))
-          (System.nanoTime() - t0) / 1e9
-        }
+        // growth, not the operator. A failed cell ends the bench.
+        val r = Harness.run(Harness.noop(fn(spark, dir)))
+        r.error.foreach(e => sys.error(s"$name @ $dir: $e"))
+        r.seconds
       }
       val rows = CacheScope.run(fn(spark, dir).count())
       System.err.println(
@@ -618,18 +607,17 @@ object ScalingBench {
         s"| `$name` | $ts | ${fmtExp(exp)} | **${fmtExp(tailExp)}** | $rs |")
     }
 
-    def jstr(s: String) = "\"" + s + "\""
     def jexp(e: Option[Double]) = e.map(x => f"$x%.3f").getOrElse("null")
     val qjson = summary.map { case (name, m, exp, tailExp) =>
-      jstr(name) + ":{" +
-        "\"times\":{" + scales.map(k => jstr(s"x$k") + ":" + m(k)._1)
+      jsonStr(name) + ":{" +
+        "\"times\":{" + scales.map(k => jsonStr(s"x$k") + ":" + m(k)._1)
           .mkString(",") + "}," +
-        "\"rows\":{" + scales.map(k => jstr(s"x$k") + ":" + m(k)._2)
+        "\"rows\":{" + scales.map(k => jsonStr(s"x$k") + ":" + m(k)._2)
           .mkString(",") + "}," +
         "\"exponent\":" + jexp(exp) + "," +
         "\"tail_exponent\":" + jexp(tailExp) + "}"
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"scaling","base":"$baseDir","scales":[${scales.mkString(",")}],"runs":$runs,"queries":$qjson}""")
+    println(s"""{"metric":"scaling","base":${jsonStr(baseDir)},"scales":[${scales.mkString(",")}],"runs":$runs,"queries":$qjson}""")
     spark.stop()
   }
 }

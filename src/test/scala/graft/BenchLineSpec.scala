@@ -28,14 +28,24 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("mass failure cannot push the line past the clip budget") {
     // worst case: every registered query fails with a max-length
-    // (160-char, the Bench truncation) message containing characters
-    // that double under JSON escaping
-    val failures = Registry.all.map(q =>
-      q.name -> ("\"\\" * 80)) // 160 chars, all escaping to 2 bytes
+    // (160-char, the Bench truncation) message made of characters that
+    // grow under JSON escaping: a quote or backslash escapes to 2
+    // bytes, a control char (exactly escaped) to 6
+    val failures = Registry.all.zipWithIndex.map { case (q, i) =>
+      q.name -> (if (i % 2 == 0) "\u0001\u001f" * 80 // 160 chars
+        else "\"\\" * 80) } // 160 chars
     val line = Bench.stdoutLine(0.0, 0.0, 3, failures, "/root/testdata/sf0.1")
     assert(line.length < clipBudget, s"${line.length} bytes")
     // the full count still reaches the driver even though the error
     // map is capped at MaxErrorsInline entries
     assert(line.contains(s""""n_failed":${Registry.all.size}"""))
+  }
+
+  test("the line stays valid JSON whatever the data dir's name") {
+    val dir = "/data/a \"quoted\" dir\\with\tescapes"
+    val line = Bench.stdoutLine(1.5, 0.5, 3, Seq("q" -> "Err: \u0001x"), dir)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("sf").asText === dir)
+    assert(json.get("errors").get("q").asText === "Err:  x")
   }
 }

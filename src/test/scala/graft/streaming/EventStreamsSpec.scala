@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +52,30 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
         .orderBy("hour", "event_type").collect().map(_.toSeq).toSeq
       assert(streamed === batch)
     } finally query.stop()
+  }
+
+  test("startHourlyPipeline flushes finalized batch windows; a restart appends nothing") {
+    import ss.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_hourly").toFile
+    val (src, sink, ckpt) = (s"$root/src", s"$root/sink", s"$root/ckpt")
+    // two events an hour from 10:00 to 15:30: the 2 h watermark
+    // (15:30 - 2 h) finalizes only the windows that end by 13:30
+    (0 until 12).map(i => Event(i, ts(30 * i), i % 3, Seq("view", "click")(i % 2),
+      i.toDouble)).toDF().withColumn("props", lit("{}")).write.parquet(src)
+    def drain(): Unit = {
+      val q = startHourlyPipeline(spark, src, sink, ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    try {
+      drain()
+      val flushed = spark.read.parquet(sink).collect().toSet
+      val batch = hourly(spark.read.parquet(src)).collect().toSet
+      assert(flushed.nonEmpty && flushed.subsetOf(batch))
+      val lastFlushed = flushed.map(_.getTimestamp(0).getTime).max
+      assert((batch -- flushed).forall(_.getTimestamp(0).getTime > lastFlushed))
+      drain()
+      assert(spark.read.parquet(sink).count() === flushed.size)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
   test("batch session_window: 30-min gap splits u1 into two sessions") {
