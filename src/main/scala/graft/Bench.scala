@@ -245,7 +245,7 @@ object Bench {
       // would distort later queries via memory pressure.
       def timed(): Double = {
         val r = Harness.run(Harness.noop(fn(spark, sfDir)))
-        if (r.error.nonEmpty) err = r.error
+        if (r.error.nonEmpty) err = r.error.map(Harness.errorText)
         r.seconds
       }
       val base =

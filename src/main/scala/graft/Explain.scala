@@ -19,7 +19,7 @@ object Explain {
         println(s"\n===== ${q.name} =====")
         try println(q.fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        catch { case t: Throwable => println(s"explain failed: ${Harness.errorText(t)}") }
+        catch { case t: Throwable => println(s"explain failed: $t") }
       }
     spark.stop()
   }

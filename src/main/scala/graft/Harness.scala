@@ -27,22 +27,25 @@ object Harness {
   def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** One run's wall seconds and, if it threw, its error. */
-  final case class Run(seconds: Double, error: Option[String])
+  /** One run's wall seconds and, if it threw, what it threw. */
+  final case class Run(seconds: Double, error: Option[Throwable])
 
   /** Runs `body` in one [[CacheScope.run]], so the persists it makes are
     * released after it; the clock stops inside the scope, before the
-    * release. A throw is captured as `Class: message`, capped at 160
-    * chars.
+    * release. A throw is captured whole: each caller decides how much of
+    * it to show.
     */
   def run(body: => Unit): Run = CacheScope.run {
     val t0 = System.nanoTime()
     val error =
       try { body; None }
-      catch { case t: Throwable => Some(errorText(t)) }
+      catch { case t: Throwable => Some(t) }
     Run((System.nanoTime() - t0) / 1e9, error)
   }
 
+  /** An error as `Class: message`, capped at 160 chars: the short form
+    * for a bounded output line or a log line.
+    */
   def errorText(t: Throwable): String =
     (t.getClass.getSimpleName + ": " + Option(t.getMessage).getOrElse(""))
       .take(160)
@@ -52,8 +55,8 @@ object Harness {
     * one-time cost (an artifact build) into the first measured run.
     */
   def warm(name: String, dir: String)(body: => Unit): Unit =
-    run(body).error.foreach(e =>
-      System.err.println(s"warmup failed: $name @ $dir: $e"))
+    run(body).error.foreach(t =>
+      System.err.println(s"warmup failed: $name @ $dir: ${errorText(t)}"))
 
   /** JSON string literal: escapes the quote, the backslash and every
     * control char (< 0x20), so any string yields a parseable line.

@@ -562,7 +562,7 @@ object ScalingBench {
         // warm minima — the growth exponent then measures cache-scan
         // growth, not the operator. A failed cell ends the bench.
         val r = Harness.run(Harness.noop(fn(spark, dir)))
-        r.error.foreach(e => sys.error(s"$name @ $dir: $e"))
+        r.error.foreach(throw _)
         r.seconds
       }
       val rows = CacheScope.run(fn(spark, dir).count())

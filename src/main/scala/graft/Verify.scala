@@ -28,7 +28,8 @@ object Verify {
         Harness.run {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-        }.error.foreach(e => System.err.println(s"[verify] $name failed: $e"))
+        }.error.foreach(t =>
+          System.err.println(s"[verify] $name failed: ${t.getMessage}"))
         val (plans1, rdds1) = CacheScope.held(spark)
         val leaked = math.max(plans1 - plans0, rdds1 - rdds0)
         if (leaked > 0)

@@ -28,17 +28,20 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("mass failure cannot push the line past the clip budget") {
     // worst case: every registered query fails with a max-length
-    // (160-char, the Bench truncation) message made of characters that
-    // grow under JSON escaping: a quote or backslash escapes to 2
-    // bytes, a control char (exactly escaped) to 6
-    val failures = Registry.all.zipWithIndex.map { case (q, i) =>
-      q.name -> (if (i % 2 == 0) "\u0001\u001f" * 80 // 160 chars
-        else "\"\\" * 80) } // 160 chars
+    // (160-char, the Bench truncation) message containing characters
+    // that double under JSON escaping
+    val failures = Registry.all.map(q =>
+      q.name -> ("\"\\" * 80)) // 160 chars, all escaping to 2 bytes
     val line = Bench.stdoutLine(0.0, 0.0, 3, failures, "/root/testdata/sf0.1")
     assert(line.length < clipBudget, s"${line.length} bytes")
     // the full count still reaches the driver even though the error
     // map is capped at MaxErrorsInline entries
     assert(line.contains(s""""n_failed":${Registry.all.size}"""))
+    // control chars would escape exactly to 6 bytes each; Bench blanks
+    // them, so an all-control-char failure set stays in budget too
+    val ctrl = Registry.all.map(q => q.name -> ("\u0001\u001f" * 80))
+    val ctrlLine = Bench.stdoutLine(0.0, 0.0, 3, ctrl, "/root/testdata/sf0.1")
+    assert(ctrlLine.length < clipBudget, s"${ctrlLine.length} bytes")
   }
 
   test("the line stays valid JSON whatever the data dir's name") {

@@ -73,6 +73,10 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
       assert(flushed.nonEmpty && flushed.subsetOf(batch))
       val lastFlushed = flushed.map(_.getTimestamp(0).getTime).max
       assert((batch -- flushed).forall(_.getTimestamp(0).getTime > lastFlushed))
+      // and none is held back: the 10:00, 11:00 and 12:00 windows (a
+      // view and a click row each) are all in the sink
+      assert(flushed === batch.filter(_.getTimestamp(0).before(ts(180))))
+      assert(flushed.size === 6)
       drain()
       assert(spark.read.parquet(sink).count() === flushed.size)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
