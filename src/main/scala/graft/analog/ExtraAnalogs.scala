@@ -550,7 +550,7 @@ object ExtraAnalogs {
     s"CASE ${cases.mkString(" ")} ELSE '${ms.last._1}' END"
   }
 
-  /** Operand-order-exact double dot product — Similarity.cosine's fold. */
+  /** Operand-order-exact double dot product — Similarity.dot's fold. */
   private[analog] def dDot(a: String, b: String) =
     s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(" +
       s"range(1, len($a)+1), i -> $a[i]*$b[i])), (x,y) -> x+y)"

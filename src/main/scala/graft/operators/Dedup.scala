@@ -1009,7 +1009,10 @@ object Dedup {
           if (ra < rb) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val mapping = parent.keys.map(x => (x, find(x))).toSeq
+      // a snapshot of the keys: `find` writes into `parent`, and a
+      // write can grow the table under a live key iterator, which then
+      // skips keys (those docs would fall back to their own id)
+      val mapping = parent.keys.toList.map(x => (x, find(x)))
       val spark = docs.sparkSession
       import spark.implicits._
       val mapDf = broadcast(mapping.toDF("doc_id", "root"))

@@ -38,12 +38,19 @@ object Similarity {
   def dot(x: Column, y: Column): Column =
     graft.expressions.VectorExpressions.vecDot(x, y)
 
-  /** Element-exact double cosine between two float-array columns
-    * (self-contained form; the join operators below use [[prepared]]
-    * inputs instead to avoid recomputing norms per pair).
+  /** A vector's norm, `sqrt(a·a)` — materialized once per row by
+    * [[prepared]], so a pair score pays one fold, not three.
     */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  def norm(emb: Column): Column = sqrt(dot(emb, emb))
+
+  /** THE pair score: cosine of two vectors from their [[norm]]s,
+    * rounded at 6 dp — the DuckDB-parity contract (the oracle rounds
+    * identically, so a last-bit FP difference never reaches a result).
+    * Every ranker, router, screen and verify in this module and in
+    * graft.streaming scores through this one definition.
+    */
+  def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
 
   /** Random-hyperplane LSH family (Charikar SimHash for cosine).
     *
@@ -163,23 +170,78 @@ object Similarity {
     array(bucket +: (singles ++ doubles): _*)
   }
 
+  /** The probe set of a `probeHamming` radius — [[probeBuckets]] at 1,
+    * [[probeBuckets2]] at 2; any other value rejects here, before the
+    * caller runs a job.
+    */
+  private def hammingProbes(probeHamming: Int): (Column, Int) => Column = {
+    require(probeHamming == 1 || probeHamming == 2,
+      s"probeHamming must be 1 or 2, got $probeHamming")
+    if (probeHamming == 1) probeBuckets else probeBuckets2
+  }
+
+  /** Stream-side multi-probe prelude: each row's `bucket` (the low
+    * `bits` of its sign sketch) exploded into itself plus every
+    * Hamming-1 neighbor — a narrow (bits+1)-way explode, no state. The
+    * static side stays keyed by its single build-time bucket
+    * ([[buildIndex]]), so an equi-join on `bucket` is the probe.
+    */
+  private[graft] def probed(df: DataFrame, bits: Int): DataFrame =
+    df.withColumn("bucket", signBucket(col("embedding"), bits))
+      .withColumn("bucket", explode(probeBuckets(col("bucket"), bits)))
+
   /** Embeddings with the norm materialized once per row — the per-pair
     * cosine is then a single codegen'd loop plus one divide. The float
     * array itself travels through joins/broadcasts uncast (half the
     * bytes of a double array); VecDot widens per element.
     */
-  private def prepared(embs: DataFrame): DataFrame =
-    embs.withColumn("norm",
-      sqrt(dot(col("embedding"), col("embedding"))))
+  private[graft] def prepared(embs: DataFrame): DataFrame =
+    embs.withColumn("norm", norm(col("embedding")))
 
+  /** [[cosine]] between two [[side]]-tagged frames' columns. */
   private def pairSim(a: String, b: String): Column =
-    round(dot(col(s"${a}_emb"), col(s"${b}_emb")) /
-      (col(s"${a}_norm") * col(s"${b}_norm")), 6)
+    cosine(col(s"${a}_emb"), col(s"${b}_emb"), col(s"${a}_norm"),
+      col(s"${b}_norm"))
 
   private def side(embs: DataFrame, tag: String, extra: Column*): DataFrame =
     prepared(embs).select(
       col("vec_id").as(s"${tag}_id") +: col("embedding").as(s"${tag}_emb") +:
         col("norm").as(s"${tag}_norm") +: extra: _*)
+
+  /** The exact rankers' tail over a scored (query_id, …, neighbor_id,
+    * sim) frame: per query, rows ordered by (sim DESC, neighbor_id ASC)
+    * — the tie rule every ranker and oracle shares — the first `k`
+    * numbered as a long `rank`, the frame's columns kept, ordered by
+    * (query_id, rank).
+    */
+  private def exactTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select((scored.columns :+ "rank").map(col): _*)
+      .orderBy("query_id", "rank")
+  }
+
+  /** The bounded-heap rankers' tail over a (query_id, neighbor_id, …)
+    * frame: per query the [[graft.expressions.TopKAgg]] top-`k` of
+    * `score` (ties to the lower neighbor_id: the id is zero-padded, so
+    * lexicographic label order is numeric order), exploded best-first
+    * to (query_id, neighbor_id, out(score), rank), ordered by
+    * (query_id, rank). `out` maps the heap's double score back to the
+    * caller's output column.
+    */
+  private def heapRanked(scored: DataFrame, score: Column, k: Int)(
+      out: Column => Column): DataFrame =
+    scored.groupBy("query_id")
+      .agg(graft.expressions.TopKAgg.topK(
+        score, format_string("%012d", col("neighbor_id")), k).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("query_id"),
+        col("t.label").cast("long").as("neighbor_id"),
+        out(col("t.score")),
+        (col("pos") + 1).cast("long").as("rank"))
+      .orderBy("query_id", "rank")
 
   /** Queryable ANN index frame: (vec_id, embedding, norm, bucket) —
     * what a deployment persists (bucketed by `bucket`) and what the
@@ -263,15 +325,9 @@ object Similarity {
     // fanned; the exchange only pays when the deferred projection is
     // heavy, e.g. shingle arrays).
     val c = side(embs, "c")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
+    exactTopK(broadcast(q).join(c, col("q_id") =!= col("c_id"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
-        pairSim("q", "c").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), k)
   }
 
   /** Exact cosine top-k of an explicit query frame against an
@@ -326,18 +382,9 @@ object Similarity {
     if (guard) requireBroadcastable(queries, maxQueries, "cosineTopKBetween")
     val q = side(queries, "q")
     val c = side(corpus, "c")
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
+    heapRanked(broadcast(q).join(c, col("q_id") =!= col("c_id"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
-        pairSim("q", "c").as("sim"))
-      .groupBy("query_id")
-      .agg(graft.expressions.TopKAgg.topK(
-        col("sim"), format_string("%012d", col("neighbor_id")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"),
-        col("t.label").cast("long").as("neighbor_id"),
-        col("t.score").as("sim"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), col("sim"), k)(_.as("sim"))
   }
 
   /** MMR diversified rerank (Carbonell & Goldstein, SIGIR 1998): the
@@ -392,16 +439,10 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("q_norm"),
         explode(probeBuckets(col("bucket"), b)).as("bucket"))
     val c = side(bucketed, "c", col("bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).join(c, Seq("bucket"))
+    exactTopK(broadcast(q).join(c, Seq("bucket"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
-        pairSim("q", "c").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), k)
   }
 
   /** Near-dup screen COMPLETION — what a curation pipeline keeps: every
@@ -473,15 +514,31 @@ object Similarity {
     * exchange — which is already the shape the aggregate was
     * supposed to buy.
     */
-  private def assignRanked(prep: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vec_id")
+  private def assignRanked(prep: DataFrame, cents: DataFrame): DataFrame =
+    rankCentroids(prep.crossJoin(broadcast(cents)))
+
+  /** The centroid ranking every router shares, over (vector, centroid)
+    * pair rows: `cent_sim` = [[cosine]] of the vector (`emb`, `nrm`)
+    * and the centroid (`cent_emb`, `cent_norm`), `rk` = row_number
+    * per `id` by (cent_sim DESC, cent_id ASC).
+    */
+  private def rankCentroids(pairs: DataFrame, id: String = "vec_id",
+      emb: String = "embedding", nrm: String = "norm"): DataFrame = {
+    val w = Window.partitionBy(id)
       .orderBy(col("cent_sim").desc, col("cent_id"))
-    prep.crossJoin(broadcast(cents))
+    pairs
       .withColumn("cent_sim",
-        round(dot(col("embedding"), col("cent_emb")) /
-          (col("norm") * col("cent_norm")), 6))
+        cosine(col(emb), col("cent_emb"), col(nrm), col("cent_norm")))
       .withColumn("rk", row_number().over(w))
   }
+
+  /** The rk=1 FINE centroid of each vector among its own coarse cell's
+    * ([[centFrame2]] rows equi-joined on `cell`) — the two-level
+    * router's second step, shared by the trainer and [[ivf2Cells]].
+    */
+  private def assignFine(cells: DataFrame, fine: DataFrame): DataFrame =
+    rankCentroids(cells.join(broadcast(fine), Seq("cell")))
+      .filter(col("rk") === 1)
 
   /** The rk=1 slice of [[assignRanked]] with `payload` columns riding
     * through (see the WindowGroupLimit note there: this window+filter
@@ -514,54 +571,42 @@ object Similarity {
       .orderBy(col("_sk"), col("vec_id"))
 
   def trainIvfCentroids(embs: DataFrame, nCells: Int = 8,
-      iters: Int = 2): Seq[Array[Long]] = {
-    // training is EAGER (each round collects k×d model longs), so a
-    // scoped persist is leak-free: without it every round re-scans the
-    // corpus and re-runs the scale/norm transforms — once for the
-    // assignment side, once for the sum side
-    val scaled = scaledFrame(embs).persist()
-    try trainIvfCentroidsOn(embs, scaled, nCells, iters)
-    finally scaled.unpersist(false)
-  }
-
-  /** [[trainIvfCentroids]] over a CALLER-persisted `(vec_id, vi)` frame
-    * (see [[scaledFrame]]) — the shared form [[trainPqAndIvf]] uses.
-    * CacheManager dedups persists by canonical plan, so when the PQ and
-    * IVF trainers each persisted their own copy of the identical scaled
-    * projection, the second persist was a no-op on the SAME cache entry
-    * and whichever trainer's finally-unpersist fired first dropped it
-    * mid-training for the other (round-19 ADVICE). The caller owning
-    * the one persist/unpersist pair makes the lifetime cover both.
-    */
-  private def trainIvfCentroidsOn(embs: DataFrame, scaled: DataFrame,
-      nCells: Int, iters: Int): Seq[Array[Long]] = {
+      iters: Int = 2): Seq[Array[Long]] = CacheScope.run {
+    // training is EAGER (each round collects k×d model longs), so the
+    // trainer's own scope releases its caches before it returns:
+    // without them every round re-scans the corpus and re-runs the
+    // scale/norm transforms — once for the assignment side, once for
+    // the sum side. A projection an outer scope already caches stays
+    // with that scope ([[scaledFrame]]).
     val spark = embs.sparkSession
-    val prep = prepared(embs).persist()
-    try {
-      var cents: Seq[Array[Long]] = seedOrdered(scaled)
-        .limit(nCells).collect()
-        .map(_.getSeq[Long](1).toArray).toSeq
-      for (_ <- 0 until iters) {
-        val asg = assignMax(prep, centFrame(spark, cents))
-        val sums = asg.join(scaled, "vec_id")
-          .select(col("cell"), posexplode(col("vi")).as(Seq("dim", "x")))
-          .groupBy("cell", "dim").agg(sum(col("x")).as("s"))
-          .groupBy("cell").agg(transform(
-            array_sort(collect_list(struct(col("dim"), col("s")))),
-            t => t.getField("s")).as("cv"))
-          .collect()
-          .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
-        cents = (0 until nCells).map(i => sums.getOrElse(i, cents(i)))
-      }
-      cents
-    } finally prep.unpersist(false)
+    val scaled = CacheScope.persist(scaledFrame(embs))
+    val prep = CacheScope.persist(prepared(embs))
+    var cents: Seq[Array[Long]] = seedOrdered(scaled)
+      .limit(nCells).collect()
+      .map(_.getSeq[Long](1).toArray).toSeq
+    for (_ <- 0 until iters) {
+      val asg = assignMax(prep, centFrame(spark, cents))
+      val sums = asg.join(scaled, "vec_id")
+        .select(col("cell"), posexplode(col("vi")).as(Seq("dim", "x")))
+        .groupBy("cell", "dim").agg(sum(col("x")).as("s"))
+        .groupBy("cell").agg(transform(
+          array_sort(collect_list(struct(col("dim"), col("s")))),
+          t => t.getField("s")).as("cv"))
+        .collect()
+        .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
+      cents = (0 until nCells).map(i => sums.getOrElse(i, cents(i)))
+    }
+    cents
   }
 
   /** The scaled-integer projection both Lloyd trainers iterate over —
-    * ONE canonical builder so [[trainPqAndIvf]] can persist it once
-    * for the pair (see [[trainIvfCentroidsOn]]).
+    * ONE canonical builder, so a caller that trains several models
+    * over one corpus ([[trainPqAndIvf]], [[trainIvfTwoLevel]]) caches
+    * it once in its own [[graft.sources.CacheScope]]: CacheManager
+    * matches plans by canonical form, so each trainer's persist of it
+    * finds that cache, leaves it to its owner, and reads it.
     */
-  private def scaledFrame(embs: DataFrame): DataFrame =
+  private[operators] def scaledFrame(embs: DataFrame): DataFrame =
     embs.select(col("vec_id"), scaledInts(col("embedding")).as("vi"))
 
   /** IVF cell assignment under TRAINED centroids ([[trainIvfCentroids]]).
@@ -763,17 +808,10 @@ object Similarity {
       .filter(col("rk") <= nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"), col("cent_id").as("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).join(c, Seq("cell"))
+    exactTopK(broadcast(q).join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), k)
   }
 
   // ---- Two-level IVF (coarse quantizer + per-cell fine cells) -----------
@@ -830,20 +868,15 @@ object Similarity {
     require(nL1 >= 1 && nL2 >= 1 && iters >= 0,
       s"bad nL1=$nL1 / nL2=$nL2 / iters=$iters")
     val spark = embs.sparkSession
-    // ONE scaled persist shared by the L1 trainer and the L2 loop
-    // (round 19, the trainPqAndIvf sharing applied here): the
-    // convenience-form trainIvfCentroids built, persisted and DROPPED
-    // the identical canonical projection, which this method then
-    // re-persisted and recomputed from the scan.
-    val scaled = scaledFrame(embs).persist()
-    val l1 = trainIvfCentroidsOn(embs, scaled, nL1, iters)
-    // eager training loop — the scoped persists are released in
-    // finally (the trainIvfCentroids rationale); the payload rides
-    // the assignment window, no join back
-    val prepCells = assignMax(prepared(embs), centFrame(spark, l1),
-        Seq("embedding", "norm"))
-      .persist()
-    try {
+    CacheScope.run {
+      // ONE scaled cache for the L1 trainer and the L2 loop
+      // ([[scaledFrame]]); the eager loop's scope releases both caches
+      // before returning, and the payload rides the assignment
+      // window, no join back
+      val scaled = CacheScope.persist(scaledFrame(embs))
+      val l1 = trainIvfCentroids(embs, nL1, iters)
+      val prepCells = CacheScope.persist(assignMax(prepared(embs),
+        centFrame(spark, l1), Seq("embedding", "norm")))
       val wSeed = Window.partitionBy("cell")
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       val seeds = prepCells.select(col("vec_id"), col("cell"))
@@ -856,15 +889,7 @@ object Similarity {
       var cents: IndexedSeq[Array[Long]] = (0 until nL1 * nL2)
         .map(i => seeds.getOrElse(i.toLong, l1(i / nL2)))
       for (_ <- 0 until iters) {
-        val wv = Window.partitionBy("vec_id")
-          .orderBy(col("cent_sim").desc, col("cent_id"))
-        val asg = prepCells
-          .join(broadcast(centFrame2(spark, cents, nL2)), Seq("cell"))
-          .withColumn("cent_sim",
-            round(dot(col("embedding"), col("cent_emb")) /
-              (col("norm") * col("cent_norm")), 6))
-          .withColumn("rk", row_number().over(wv))
-          .filter(col("rk") === 1)
+        val asg = assignFine(prepCells, centFrame2(spark, cents, nL2))
           .select(col("vec_id"), col("cent_id").as("c2"))
         val sums = asg.join(scaled, "vec_id")
           .select(col("c2"), posexplode(col("vi")).as(Seq("dim", "x")))
@@ -878,9 +903,6 @@ object Similarity {
           .map(i => sums.getOrElse(i.toLong, cents(i)))
       }
       (l1, cents)
-    } finally {
-      prepCells.unpersist(false)
-      scaled.unpersist(false)
     }
   }
 
@@ -904,16 +926,8 @@ object Similarity {
   def ivf2Cells(embs: DataFrame, l1: Seq[Array[Long]],
       l2: Seq[Array[Long]], nL2: Int): DataFrame = {
     val spark = embs.sparkSession
-    val wv = Window.partitionBy("vec_id")
-      .orderBy(col("cent_sim").desc, col("cent_id"))
-    assignMax(prepared(embs), centFrame(spark, l1),
-        Seq("embedding", "norm"))
-      .join(broadcast(centFrame2(spark, l2, nL2)), Seq("cell"))
-      .withColumn("cent_sim",
-        round(dot(col("embedding"), col("cent_emb")) /
-          (col("norm") * col("cent_norm")), 6))
-      .withColumn("rk", row_number().over(wv))
-      .filter(col("rk") === 1)
+    assignFine(assignMax(prepared(embs), centFrame(spark, l1),
+        Seq("embedding", "norm")), centFrame2(spark, l2, nL2))
       .select(col("cent_id").as("c2"), col("vec_id"),
         col("embedding"), col("norm"))
   }
@@ -968,27 +982,15 @@ object Similarity {
       .filter(col("rk") <= nprobe1)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"), col("cent_id").as("cell"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cent_sim").desc, col("cent_id"))
-    val qKeys = qL1.join(broadcast(cf2), Seq("cell"))
-      .withColumn("cent_sim",
-        round(dot(col("q_emb"), col("cent_emb")) /
-          (col("q_norm") * col("cent_norm")), 6))
-      .withColumn("rk", row_number().over(wq))
+    val qKeys = rankCentroids(qL1.join(broadcast(cf2), Seq("cell")),
+        "query_id", "q_emb", "q_norm")
       .filter(col("rk") <= nprobe2)
       .select(col("query_id"), col("q_emb"), col("q_norm"),
         col("cent_id").as("c2"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(qKeys).join(corpus, Seq("c2"))
+    exactTopK(broadcast(qKeys).join(corpus, Seq("c2"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), k)
   }
 
   /** Embedding near-dup pairs: candidates share a bucket or sit one
@@ -1007,16 +1009,13 @@ object Similarity {
   def nearDupPairs(embs: DataFrame, threshold: Double = 0.35,
       bits: Int = 0, corpusN: Long = -1L,
       probeHamming: Int = 1): DataFrame = {
-    require(probeHamming == 1 || probeHamming == 2,
-      s"probeHamming must be 1 or 2, got $probeHamming")
+    val probes = hammingProbes(probeHamming)
     val nb = if (bits > 0) bits
       else chooseBits(if (corpusN >= 0L) corpusN else embs.count())
-    val probes = if (probeHamming == 1) probeBuckets(col("bucket"), nb)
-      else probeBuckets2(col("bucket"), nb)
     val bucketed = embs.withColumn("bucket", signBucket(col("embedding"), nb))
     val a = side(bucketed, "a", col("bucket"))
       .select(col("a_id"), col("a_emb"), col("a_norm"),
-        explode(probes).as("bucket"))
+        explode(probes(col("bucket"), nb)).as("bucket"))
     val b = side(bucketed, "b", col("bucket"))
     a.join(b, Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
@@ -1054,20 +1053,17 @@ object Similarity {
   def knnGraph(embs: DataFrame, k: Int = 5, bits: Int = 0,
       corpusN: Long = -1L, probeHamming: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(probeHamming == 1 || probeHamming == 2,
-      s"probeHamming must be 1 or 2, got $probeHamming")
-    val nb = if (bits > 0) bits
-      else chooseBits(if (corpusN >= 0L) corpusN else embs.count())
     // probeHamming = 2 is the mining-side recall knob ([[nearDupPairs]]'s
     // H2 arm): ~8× candidates at the bit cap buy back the neighbors
     // bucket boundaries hid WITHOUT any re-ranking round — graded
     // against the refinement ladder by eval_knngraph2_metrics
-    val probes = if (probeHamming == 1) probeBuckets(col("bucket"), nb)
-      else probeBuckets2(col("bucket"), nb)
+    val probes = hammingProbes(probeHamming)
+    val nb = if (bits > 0) bits
+      else chooseBits(if (corpusN >= 0L) corpusN else embs.count())
     val bucketed = embs.withColumn("bucket", signBucket(col("embedding"), nb))
     val q = side(bucketed, "q", col("bucket"))
       .select(col("q_id"), col("q_emb"), col("q_norm"),
-        explode(probes).as("bucket"))
+        explode(probes(col("bucket"), nb)).as("bucket"))
     val c = side(bucketed, "c", col("bucket"))
     heapTopK(q.join(c, Seq("bucket"))
       .filter(col("q_id") =!= col("c_id"))
@@ -1645,18 +1641,10 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
     val c = codeTable.select(col("vec_id").as("c_id"),
       col("scale").as("c_scale"), col("qv").as("c_qv"))
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
+    heapRanked(broadcast(q).join(c, col("q_id") =!= col("c_id"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
-        sqScore(col("q_qv"), col("c_qv"), col("c_scale")).as("qscore"))
-      .groupBy("query_id")
-      .agg(graft.expressions.TopKAgg.topK(col("qscore").cast("double"),
-        format_string("%012d", col("neighbor_id")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"),
-        col("t.label").cast("long").as("neighbor_id"),
-        col("t.score").cast("long").as("qscore"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+        sqScore(col("q_qv"), col("c_qv"), col("c_scale")).as("qscore")),
+      col("qscore").cast("double"), k)(_.cast("long").as("qscore"))
   }
 
   // ---- Attribute-filtered search -----------------------------------------
@@ -1678,18 +1666,12 @@ object Similarity {
     val q = side(embs.filter(col("vec_id") < nQueries), "q",
       col("label").as("q_label"))
     val c = side(embs, "c", col("label").as("c_label"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q)
+    exactTopK(broadcast(q)
       .join(c, col("q_id") =!= col("c_id") &&
         col("q_label") === col("c_label"))
       .select(col("q_id").as("query_id"),
         col("q_label").cast("long").as("label"),
-        col("c_id").as("neighbor_id"), pairSim("q", "c").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "label", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        col("c_id").as("neighbor_id"), pairSim("q", "c").as("sim")), k)
   }
 
   // ---- Product quantization (PQ) ----------------------------------------
@@ -1739,68 +1721,58 @@ object Similarity {
     * state, corpus never collected.
     */
   def pqTrain(embs: DataFrame, m: Int = PqSub, ksub: Int = PqK,
-      iters: Int = 2): Seq[Seq[Array[Long]]] = {
-    val scaled = scaledFrame(embs).persist()
-    try pqTrainOn(scaled, m, ksub, iters)
-    finally scaled.unpersist(false)
-  }
-
-  /** [[pqTrain]] over a CALLER-persisted `(vec_id, vi)` frame — the
-    * shared-cache-entry form [[trainPqAndIvf]] uses (see
-    * [[trainIvfCentroidsOn]] for the CacheManager dedup mechanism).
-    */
-  private def pqTrainOn(scaled: DataFrame, m: Int, ksub: Int,
-      iters: Int): Seq[Seq[Array[Long]]] = {
+      iters: Int = 2): Seq[Seq[Array[Long]]] = CacheScope.run {
+    // eager like trainIvfCentroids: its scope releases the caches it
+    // made before returning, and leaves a scaled projection an outer
+    // scope caches ([[scaledFrame]]) to that scope
     require(MaxDim % m == 0, s"MaxDim=$MaxDim not divisible by m=$m")
     val subDim = MaxDim / m
-    val spark = scaled.sparkSession
-    val slices = scaled.select(col("vec_id"), posexplode(
-        array((0 until m).map(s0 =>
-          slice(col("vi"), s0 * subDim + 1, subDim)): _*)).as(Seq("sub", "vs")))
-      .persist()
-    try {
-      var cents: Seq[Seq[Array[Long]]] = {
-        val seeds = seedOrdered(scaled).limit(ksub).collect()
-          .map(_.getSeq[Long](1).toArray).toSeq
-        (0 until m).map(s0 =>
-          seeds.map(v => v.slice(s0 * subDim, (s0 + 1) * subDim)))
-      }
-      for (_ <- 0 until iters) {
-        // rk=1 window, NOT a min(struct(dist, cent_id, vs)) aggregate:
-        // the rank filter compiles to WindowGroupLimit (map-side
-        // per-group top-1 before the exchange), while a struct-typed
-        // aggregation buffer falls back to SortAggregateExec — see the
-        // assignRanked scaladoc for the measured A/B
-        val w = Window.partitionBy("vec_id", "sub")
-          .orderBy(col("dist"), col("cent_id"))
-        val asg = slices
-          .join(broadcast(pqCentFrame(spark, cents)), Seq("sub"))
-          .withColumn("dist", aggregate(
-            zip_with(col("vs"), col("cv"), (x, c) => (x - c) * (x - c)),
-            lit(0L), (acc, x) => acc + x))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-        val sums = asg
-          .select(col("sub"), col("cent_id"), posexplode(col("vs")).as(Seq("dim", "x")))
-          .groupBy("sub", "cent_id", "dim")
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .collect()
-          .groupBy(r => (r.getInt(0), r.getInt(1)))
-        cents = (0 until m).map { s0 =>
-          (0 until ksub).map { c0 =>
-            sums.get((s0, c0)) match {
-              case Some(rows) =>
-                val arr = new Array[Long](subDim)
-                rows.foreach(r =>
-                  arr(r.getInt(2)) = rndDiv(r.getLong(3), r.getLong(4)))
-                arr
-              case None => cents(s0)(c0)
-            }
+    val spark = embs.sparkSession
+    val scaled = CacheScope.persist(scaledFrame(embs))
+    val slices = CacheScope.persist(scaled.select(col("vec_id"),
+      posexplode(array((0 until m).map(s0 =>
+        slice(col("vi"), s0 * subDim + 1, subDim)): _*)).as(Seq("sub", "vs"))))
+    var cents: Seq[Seq[Array[Long]]] = {
+      val seeds = seedOrdered(scaled).limit(ksub).collect()
+        .map(_.getSeq[Long](1).toArray).toSeq
+      (0 until m).map(s0 =>
+        seeds.map(v => v.slice(s0 * subDim, (s0 + 1) * subDim)))
+    }
+    for (_ <- 0 until iters) {
+      // rk=1 window, NOT a min(struct(dist, cent_id, vs)) aggregate:
+      // the rank filter compiles to WindowGroupLimit (map-side
+      // per-group top-1 before the exchange), while a struct-typed
+      // aggregation buffer falls back to SortAggregateExec — see the
+      // assignRanked scaladoc for the measured A/B
+      val w = Window.partitionBy("vec_id", "sub")
+        .orderBy(col("dist"), col("cent_id"))
+      val asg = slices
+        .join(broadcast(pqCentFrame(spark, cents)), Seq("sub"))
+        .withColumn("dist", aggregate(
+          zip_with(col("vs"), col("cv"), (x, c) => (x - c) * (x - c)),
+          lit(0L), (acc, x) => acc + x))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") === 1)
+      val sums = asg
+        .select(col("sub"), col("cent_id"), posexplode(col("vs")).as(Seq("dim", "x")))
+        .groupBy("sub", "cent_id", "dim")
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        .collect()
+        .groupBy(r => (r.getInt(0), r.getInt(1)))
+      cents = (0 until m).map { s0 =>
+        (0 until ksub).map { c0 =>
+          sums.get((s0, c0)) match {
+            case Some(rows) =>
+              val arr = new Array[Long](subDim)
+              rows.foreach(r =>
+                arr(r.getInt(2)) = rndDiv(r.getLong(3), r.getLong(4)))
+              arr
+            case None => cents(s0)(c0)
           }
         }
       }
-      cents
-    } finally slices.unpersist(false)
+    }
+    cents
   }
 
   /** Exact integer squared-L2 between the s0-th subspace slice of the
@@ -1947,18 +1919,9 @@ object Similarity {
       .select(col("vec_id").as("query_id"), pqVd(col("embedding")).as("vd"))
       .select(col("query_id"), pqLut(col("vd"), model).as("lut"))
     val adc = pqAdc(col("lut"), col("codes"), m, ksub)
-    broadcast(q).join(codes, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), adc.as("adc"), col("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.expressions.TopKAgg.topK(
-        -col("adc").cast("double"), format_string("%012d", col("neighbor_id")),
-        k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"),
-        col("t.label").cast("long").as("neighbor_id"),
-        (-col("t.score")).cast("long").as("adc"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+    heapRanked(broadcast(q).join(codes, col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), adc.as("adc"), col("neighbor_id")),
+      -col("adc").cast("double"), k)(s => (-s).cast("long").as("adc"))
   }
 
   /** IVF-PQ top-k — the composed billion-scale ANN architecture
@@ -1994,21 +1957,18 @@ object Similarity {
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    // ONE persist of the shared scaled projection, owned HERE and
-    // released only after BOTH trainers complete (round-19 ADVICE):
-    // the convenience forms each persist the identical canonical plan,
-    // which CacheManager dedups to one entry — so under concurrency
-    // the first trainer to finish would unpersist it out from under
-    // the other, silently re-running the scan every remaining round.
-    val scaled = scaledFrame(embs).persist()
-    try {
-      // the PQ leg keeps pqTrain's own defaults (m/ksub/iters) exactly
-      // as the pre-refactor `Future(pqTrain(embs))` call did; `iters`
-      // parameterizes only the IVF router here
-      val fPq = Future(pqTrainOn(scaled, PqSub, PqK, 2))
-      val cents = trainIvfCentroidsOn(embs, scaled, nCells, iters)
+    // ONE cache of the shared scaled projection, owned by THIS scope
+    // and released only after BOTH trainers complete: each trainer's
+    // own persist of the identical canonical plan finds it and leaves
+    // it here ([[scaledFrame]]), so neither drops it under the other.
+    // The PQ leg keeps pqTrain's defaults (m/ksub/iters); `iters`
+    // parameterizes only the IVF router.
+    CacheScope.run {
+      CacheScope.persist(scaledFrame(embs))
+      val fPq = Future(pqTrain(embs))
+      val cents = trainIvfCentroids(embs, nCells, iters)
       (Await.result(fPq, Duration.Inf), cents)
-    } finally scaled.unpersist(false)
+    }
   }
 
   def ivfPqTopK(embs: DataFrame, nQueries: Int = 50, k: Int = 3,
@@ -2037,19 +1997,10 @@ object Similarity {
         pqVd(col("embedding")).as("vd"))
       .select(col("query_id"), col("cell"), pqLut(col("vd"), model).as("lut"))
     val adc = pqAdc(col("lut"), col("codes"), m, ksub)
-    broadcast(q).join(c, Seq("cell"))
+    heapRanked(broadcast(q).join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), adc.as("adc"), col("neighbor_id"))
-      .groupBy("query_id")
-      .agg(graft.expressions.TopKAgg.topK(
-        -col("adc").cast("double"), format_string("%012d", col("neighbor_id")),
-        k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"),
-        col("t.label").cast("long").as("neighbor_id"),
-        (-col("t.score")).cast("long").as("adc"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+      .select(col("query_id"), adc.as("adc"), col("neighbor_id")),
+      -col("adc").cast("double"), k)(s => (-s).cast("long").as("adc"))
   }
 
   /** Exact rerank of a compressed-domain shortlist (FAISS's refine
@@ -2069,15 +2020,9 @@ object Similarity {
     val c = side(embs, "c")
     val cand = shortlist.select("query_id", "neighbor_id")
       .join(q, col("query_id") === col("q_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(cand).join(c, col("neighbor_id") === col("c_id"))
+    exactTopK(broadcast(cand).join(c, col("neighbor_id") === col("c_id"))
       .select(col("query_id"), col("neighbor_id"),
-        pairSim("q", "c").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-      .orderBy("query_id", "rank")
+        pairSim("q", "c").as("sim")), k)
   }
 
   /** Two-stage IVF-PQ serving — [[ivfPqTopK]]'s ADC shortlist at
@@ -2313,19 +2258,11 @@ object Similarity {
     val q = sk.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("sk").as("q_sk"))
     val c = sk.select(col("vec_id").as("c_id"), col("sk").as("c_sk"))
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
+    heapRanked(broadcast(q).join(c, col("q_id") =!= col("c_id"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
         graft.expressions.VectorExpressions
-          .vecDotLong(col("q_sk"), col("c_sk")).as("qscore"))
-      .groupBy("query_id")
-      .agg(graft.expressions.TopKAgg.topK(col("qscore").cast("double"),
-        format_string("%012d", col("neighbor_id")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"),
-        col("t.label").cast("long").as("neighbor_id"),
-        col("t.score").cast("long").as("qscore"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+          .vecDotLong(col("q_sk"), col("c_sk")).as("qscore")),
+      col("qscore").cast("double"), k)(_.cast("long").as("qscore"))
   }
 
   /** Sketch-propose / exact-refine — [[refineTopK]] composed over the

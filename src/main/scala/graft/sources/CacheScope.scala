@@ -28,12 +28,13 @@ import org.apache.spark.storage.StorageLevel
   * Releasing is always safe: a released cache is recomputed from its
   * lineage, never read stale.
   *
-  * Persists an operator both makes and releases before it returns (the
-  * Lloyd/PQ trainers) stay plain `persist`/`unpersist` pairs; only a
-  * cache the returned plan reads goes through here. A loop whose last
-  * round's cache backs the returned plan (`Dedup.clusters`,
-  * `Similarity.nnDescent`) persists every round here and unpersists
-  * the superseded rounds itself.
+  * An operator whose caches end with it (the eager Lloyd/PQ trainers)
+  * runs in its own [[run]] and caches through [[persist]] too, so a
+  * plan its caller already caches (the trainers' shared scaled
+  * projection) stays with the caller instead of being dropped when the
+  * operator returns. A loop whose last round's cache backs the
+  * returned plan (`Dedup.clusters`, `Similarity.nnDescent`) persists
+  * every round here and unpersists the superseded rounds itself.
   */
 object CacheScope {
 

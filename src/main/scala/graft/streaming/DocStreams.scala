@@ -464,18 +464,13 @@ object DocStreams {
       evalVecIndex: DataFrame, lm: graft.operators.Perplexity.LmModel,
       maxNll: Long, tau: Double = 0.3, bits: Int = 4,
       minWords: Int = 20, minBands: Int = 2): DataFrame = {
-    import graft.expressions.VectorExpressions.vecDot
-    import graft.operators.Similarity
-    val q = embs
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
+    import graft.operators.Similarity.{cosine, prepared, probed}
+    val q = prepared(probed(embs, bits))
     val e = evalVecIndex.select(col("bucket"),
       col("embedding").as("e_emb"), col("norm").as("e_norm"))
     val sdup = q.join(e, Seq("bucket"))
-      .filter(round(vecDot(col("embedding"), col("e_emb")) /
-        (col("norm") * col("e_norm")), 6) >= tau)
+      .filter(cosine(col("embedding"), col("e_emb"), col("norm"),
+        col("e_norm")) >= tau)
       .select("doc_id").distinct().withColumn("_sdup", lit(1))
     ingestVerdictsUrl(docs, urlIndex, bandIndex, lm, maxNll,
         minWords, minBands)

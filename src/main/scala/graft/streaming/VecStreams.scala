@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.TopKAgg
-import graft.expressions.VectorExpressions.vecDot
 import graft.operators.Similarity
+import graft.operators.Similarity.{cosine, prepared, probed}
 
 /** Streaming similarity: arriving embeddings are screened against a
   * static ANN index (Similarity.buildIndex) — stream-static bucket
@@ -21,28 +21,41 @@ object VecStreams {
     * array<struct<score,label>> best-first; label = index vec_id.
     */
   def annScreen(streamEmbs: DataFrame, index: DataFrame, k: Int = 3,
-      bits: Int = 4): DataFrame = {
-    // multi-probe on the STREAM side: each arriving vector probes its
-    // bucket plus every Hamming-1 neighbor — a narrow (bits+1)-way
-    // explode per event, no extra state; the static index stays keyed
-    // by its single build-time bucket.
-    val q = streamEmbs
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
-      .withWatermark("ts", "1 hour")
-    val c = index.select(col("bucket"),
-      col("vec_id").as("cand_id"), col("embedding").as("cand_emb"),
-      col("norm").as("cand_norm"))
-    q.join(c, Seq("bucket"))
+      bits: Int = 4): DataFrame =
+    // multi-probe on the STREAM side (Similarity.probed): no extra
+    // state; the static index stays keyed by its build-time bucket
+    cosineScreen(prepared(probed(streamEmbs, bits))
+      .withWatermark("ts", "1 hour"), index, "bucket", k)
+
+  /** The screens' shared finalization over a scored (ts, vec_id, keys…,
+    * score, cand) stream: per 1-hour event-time window and arriving
+    * vector (and `keys`), the bounded-heap top-k of `score` over the
+    * `cand` labels → (hour, vec_id, keys…, matches). State per window
+    * × arrival is one k-element heap, evicted by the watermark.
+    */
+  private def hourlyTopK(scored: DataFrame, score: Column, k: Int,
+      keys: Column*): DataFrame =
+    scored.groupBy(window(col("ts"), "1 hour") +: col("vec_id") +: keys: _*)
+      .agg(TopKAgg.topK(score, col("cand"), k).as("matches"))
+      .select((Seq(col("window.start").as("hour"), col("vec_id")) ++ keys
+        :+ col("matches")): _*)
+
+  /** A float-index screen ([[annScreen]], [[ivfScreen]],
+    * [[ivf2Screen]]): the watermarked, normed arrivals `q` equi-join
+    * the index on `key`, score each candidate by [[cosine]], and
+    * finalize through [[hourlyTopK]]. Labels are the candidate id as an
+    * UNPADDED string, so the heap breaks a score tie lexicographically
+    * ("10" before "9"), not by the batch rankers' numeric id order.
+    */
+  private def cosineScreen(q: DataFrame, index: DataFrame, key: String,
+      k: Int): DataFrame = {
+    val c = index.select(col(key), col("vec_id").as("cand_id"),
+      col("embedding").as("cand_emb"), col("norm").as("cand_norm"))
+    hourlyTopK(q.join(c, Seq(key))
       .select(col("ts"), col("vec_id"),
-        round(vecDot(col("embedding"), col("cand_emb")) /
-          (col("norm") * col("cand_norm")), 6).as("sim"),
-        col("cand_id").cast("string").as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
-      .agg(TopKAgg.topK(col("sim"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"), col("matches"))
+        cosine(col("embedding"), col("cand_emb"), col("norm"),
+          col("cand_norm")).as("sim"),
+        col("cand_id").cast("string").as("cand")), col("sim"), k)
   }
 
   /** Streaming kNN-CLASSIFY screen — label assignment at ingest, the
@@ -73,24 +86,19 @@ object VecStreams {
     */
   def knnClassifyScreen(streamEmbs: DataFrame, labeledIndex: DataFrame,
       k: Int = 5, bits: Int = 4): DataFrame = {
-    val q = streamEmbs
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
-      .withWatermark("ts", "1 hour")
+    val q = prepared(probed(streamEmbs, bits)).withWatermark("ts", "1 hour")
     val c = labeledIndex.select(col("bucket"),
       concat(lpad(col("vec_id").cast("string"), 20, "0"), lit(":"),
         col("label").cast("long").cast("string")).as("cand"),
       col("embedding").as("cand_emb"), col("norm").as("cand_norm"))
     val topk = q.join(c, Seq("bucket"))
       .select(col("ts"), col("vec_id"),
-        round(vecDot(col("embedding"), col("cand_emb")) /
-          (col("norm") * col("cand_norm")), 6).as("sim"),
+        cosine(col("embedding"), col("cand_emb"), col("norm"),
+          col("cand_norm")).as("sim"),
         col("cand"))
       .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
       .agg(TopKAgg.topK(col("sim"), col("cand"), k).as("m"))
-    def lbl(e: org.apache.spark.sql.Column) =
+    def lbl(e: Column) =
       split(e.getField("label"), ":").getItem(1).cast("long")
     val labels = array_distinct(transform(col("m"), e => lbl(e)))
     val scoredLabels = transform(labels, l => struct(
@@ -126,19 +134,14 @@ object VecStreams {
     */
   def contamScreen(streamEmbs: DataFrame, evalIndex: DataFrame,
       threshold: Double = 0.3, bits: Int = 4): DataFrame = {
-    val q = streamEmbs
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
-      .withWatermark("ts", "1 hour")
+    val q = prepared(probed(streamEmbs, bits)).withWatermark("ts", "1 hour")
     val e = evalIndex.select(col("bucket"),
       col("vec_id").as("eval_id"), col("embedding").as("e_emb"),
       col("norm").as("e_norm"))
     q.join(e, Seq("bucket"))
       .select(col("ts"), col("vec_id"), col("eval_id"),
-        round(vecDot(col("embedding"), col("e_emb")) /
-          (col("norm") * col("e_norm")), 6).as("sim"))
+        cosine(col("embedding"), col("e_emb"), col("norm"), col("e_norm"))
+          .as("sim"))
       .filter(col("sim") >= threshold)
       .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
       .agg(max(struct(col("sim"), (-col("eval_id")).as("neg_eval"))).as("m"),
@@ -171,17 +174,23 @@ object VecStreams {
     * `assignRanked` probe set exactly. Shared by [[ivfScreen]] and
     * [[pqScreen]].
     */
-  private def probeCells(cents: Seq[Array[Long]], nprobe: Int)
-      : org.apache.spark.sql.Column = {
-    val centLit = typedLit(Similarity.centroidModel(cents))
-    def negSim(s: org.apache.spark.sql.Column) =
+  private def probeCells(cents: Seq[Array[Long]], nprobe: Int): Column =
+    explode(bestCids(typedLit(Similarity.centroidModel(cents)), nprobe))
+
+  /** The `n` best centroid ids of a literal model array (entries
+    * (cid, image, norm) as [[Similarity.centroidModel]] builds them)
+    * for the row's `embedding`/`norm`, best first — THE per-row sort
+    * key both routers share: ascending (−[[cosine]], cid).
+    */
+  private def bestCids(model: Column, n: Int): Column = {
+    def negSim(s: Column) =
       when(isnan(s), lit(Double.NegativeInfinity)).otherwise(-s)
-    explode(transform(
-      slice(array_sort(transform(centLit, c => struct(
-        negSim(round(vecDot(col("embedding"), c.getField("_2")) /
-          (col("norm") * c.getField("_3")), 6)).as("ns"),
-        c.getField("_1").as("cid")))), 1, nprobe),
-      t => t.getField("cid")))
+    transform(
+      slice(array_sort(transform(model, c => struct(
+        negSim(cosine(col("embedding"), c.getField("_2"), col("norm"),
+          c.getField("_3"))).as("ns"),
+        c.getField("_1").as("cid")))), 1, n),
+      t => t.getField("cid"))
   }
 
   def ivfScreen(streamEmbs: DataFrame, cells: DataFrame,
@@ -189,20 +198,9 @@ object VecStreams {
     require(cents.nonEmpty, "cents must be non-empty")
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe must be in [1, ${cents.size}], got $nprobe")
-    val q = streamEmbs
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
+    cosineScreen(prepared(streamEmbs)
       .withColumn("cell", probeCells(cents, nprobe))
-      .withWatermark("ts", "1 hour")
-    val c = cells.select(col("cell"), col("vec_id").as("cand_id"),
-      col("embedding").as("cand_emb"), col("norm").as("cand_norm"))
-    q.join(c, Seq("cell"))
-      .select(col("ts"), col("vec_id"),
-        round(vecDot(col("embedding"), col("cand_emb")) /
-          (col("norm") * col("cand_norm")), 6).as("sim"),
-        col("cand_id").cast("string").as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
-      .agg(TopKAgg.topK(col("sim"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"), col("matches"))
+      .withWatermark("ts", "1 hour"), cells, "cell", k)
   }
 
   /** Per-row TWO-LEVEL router — [[probeCells]]'s hierarchical form:
@@ -216,22 +214,12 @@ object VecStreams {
     * held literals — the hierarchy's whole point at large cell counts.
     */
   private def probeCells2(l1: Seq[Array[Long]], l2: Seq[Array[Long]],
-      nL2: Int, nprobe1: Int, nprobe2: Int): org.apache.spark.sql.Column = {
-    def negSim(s: org.apache.spark.sql.Column) =
-      when(isnan(s), lit(Double.NegativeInfinity)).otherwise(-s)
-    def ranked(lit0: org.apache.spark.sql.Column) =
-      array_sort(transform(lit0, c => struct(
-        negSim(round(vecDot(col("embedding"), c.getField("_2")) /
-          (col("norm") * c.getField("_3")), 6)).as("ns"),
-        c.getField("_1").as("cid"))))
-    val cellsArr = transform(
-      slice(ranked(typedLit(Similarity.centroidModel(l1))), 1, nprobe1),
-      t => t.getField("cid"))
+      nL2: Int, nprobe1: Int, nprobe2: Int): Column = {
+    val cellsArr = bestCids(typedLit(Similarity.centroidModel(l1)), nprobe1)
     val fine = filter(typedLit(Similarity.centroidModel(l2)), c =>
       array_contains(cellsArr,
         floor(c.getField("_1").cast("double") / nL2).cast("long")))
-    explode(transform(slice(ranked(fine), 1, nprobe2),
-      t => t.getField("cid")))
+    explode(bestCids(fine, nprobe2))
   }
 
   /** Hierarchically-routed streaming screen — the two-level
@@ -251,20 +239,9 @@ object VecStreams {
     require(nprobe1 >= 1 && nprobe1 <= l1.size,
       s"nprobe1 must be in [1, ${l1.size}], got $nprobe1")
     require(nprobe2 >= 1, s"nprobe2 must be >= 1, got $nprobe2")
-    val q = streamEmbs
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
+    cosineScreen(prepared(streamEmbs)
       .withColumn("c2", probeCells2(l1, l2, nL2, nprobe1, nprobe2))
-      .withWatermark("ts", "1 hour")
-    val c = cells2.select(col("c2"), col("vec_id").as("cand_id"),
-      col("embedding").as("cand_emb"), col("norm").as("cand_norm"))
-    q.join(c, Seq("c2"))
-      .select(col("ts"), col("vec_id"),
-        round(vecDot(col("embedding"), col("cand_emb")) /
-          (col("norm") * col("cand_norm")), 6).as("sim"),
-        col("cand_id").cast("string").as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
-      .agg(TopKAgg.topK(col("sim"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"), col("matches"))
+      .withWatermark("ts", "1 hour"), cells2, "c2", k)
   }
 
   /** COMPRESSED-DOMAIN streaming screen — the IVF-PQ counterpart of
@@ -293,24 +270,16 @@ object VecStreams {
     */
   def filteredScreen(streamEmbs: DataFrame, index: DataFrame, k: Int = 3,
       bits: Int = 4): DataFrame = {
-    val q = streamEmbs
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
-      .withWatermark("ts", "1 hour")
+    val q = prepared(probed(streamEmbs, bits)).withWatermark("ts", "1 hour")
     val c = index.select(col("bucket"), col("label"),
       col("vec_id").as("cand_id"), col("embedding").as("cand_emb"),
       col("norm").as("cand_norm"))
-    q.join(c, Seq("bucket", "label"))
+    hourlyTopK(q.join(c, Seq("bucket", "label"))
       .select(col("ts"), col("vec_id"), col("label"),
-        round(vecDot(col("embedding"), col("cand_emb")) /
-          (col("norm") * col("cand_norm")), 6).as("sim"),
-        format_string("%012d", col("cand_id")).as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"), col("label"))
-      .agg(TopKAgg.topK(col("sim"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"),
-        col("label"), col("matches"))
+        cosine(col("embedding"), col("cand_emb"), col("norm"),
+          col("cand_norm")).as("sim"),
+        format_string("%012d", col("cand_id")).as("cand")),
+      col("sim"), k, col("label"))
   }
 
   /** SQ8-compressed streaming screen — [[annScreen]]'s shape with the
@@ -327,21 +296,15 @@ object VecStreams {
     */
   def sqScreen(streamEmbs: DataFrame, index: DataFrame, k: Int = 3,
       bits: Int = 4): DataFrame = {
-    val q = Similarity.withSqCols(streamEmbs)
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-      .withColumn("bucket",
-        explode(Similarity.probeBuckets(col("bucket"), bits)))
+    val q = probed(Similarity.withSqCols(streamEmbs), bits)
       .withWatermark("ts", "1 hour")
     val c = index.select(col("bucket"), col("vec_id").as("cand_id"),
       col("scale").as("cand_scale"), col("qv").as("cand_qv"))
-    q.join(c, Seq("bucket"))
+    hourlyTopK(q.join(c, Seq("bucket"))
       .select(col("ts"), col("vec_id"),
         Similarity.sqScore(col("sq_qv"), col("cand_qv"), col("cand_scale"))
           .cast("double").as("score"),
-        format_string("%012d", col("cand_id")).as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
-      .agg(TopKAgg.topK(col("score"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"), col("matches"))
+        format_string("%012d", col("cand_id")).as("cand")), col("score"), k)
   }
 
   def pqScreen(streamEmbs: DataFrame, lists: DataFrame,
@@ -352,21 +315,17 @@ object VecStreams {
       s"nprobe must be in [1, ${cents.size}], got $nprobe")
     val m = model.size
     val ksub = model.head.size
-    val q = streamEmbs
-      .withColumn("norm", sqrt(vecDot(col("embedding"), col("embedding"))))
+    val q = prepared(streamEmbs)
       .withColumn("cell", probeCells(cents, nprobe))
       .withColumn("lut", Similarity.pqLut(Similarity.pqVd(
         col("embedding")), model))
       .withWatermark("ts", "1 hour")
     val c = lists.select(col("cell"), col("vec_id").as("cand_id"),
       col("codes"))
-    q.join(c, Seq("cell"))
+    hourlyTopK(q.join(c, Seq("cell"))
       .select(col("ts"), col("vec_id"),
         (-Similarity.pqAdc(col("lut"), col("codes"), m, ksub))
           .cast("double").as("score"),
-        format_string("%012d", col("cand_id")).as("cand"))
-      .groupBy(window(col("ts"), "1 hour"), col("vec_id"))
-      .agg(TopKAgg.topK(col("score"), col("cand"), k).as("matches"))
-      .select(col("window.start").as("hour"), col("vec_id"), col("matches"))
+        format_string("%012d", col("cand_id")).as("cand")), col("score"), k)
   }
 }

@@ -171,7 +171,9 @@ object DedupProps extends Properties("dedup") {
     }
 
   property("clusters: labels are component minima and cover every doc") =
-    forAll(genCorpus) { texts =>
+    forAll(genCorpus) { texts => CacheScope.run {
+      // scoped: the miners' persists are released per corpus, also
+      // while a failure shrinks through many of them
       val df = docsDf(texts)
       val pairs = Dedup.minhashPairs(df)
       val labels = Dedup.clusters(df, pairs).collect()
@@ -180,5 +182,5 @@ object DedupProps extends Properties("dedup") {
       labels.size == texts.size &&
         labels.forall { case (d, c) => c <= d } &&
         edges.forall { case (a, b) => labels(a) == labels(b) }
-    }
+    } }
 }

@@ -118,6 +118,40 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 8L, 9L -> 9L))
   }
 
+  test("clusters' driver union-find labels every doc of a fixed edge list") {
+    // the mined edge lists of two DedupProps corpora (generator seeds 109
+    // and 114), in mining order: path compression writes into the
+    // parent table while the mapping reads it back, and a write that
+    // grows the table under a live key iteration used to drop docs from
+    // the mapping, leaving them labeled as their own cluster
+    val s = spark; import s.implicits._
+    val cases = Seq(
+      51L -> Seq((12L, 16L), (12L, 26L), (5L, 8L), (31L, 45L), (32L, 40L),
+        (32L, 47L), (40L, 47L), (0L, 22L), (9L, 25L), (16L, 26L),
+        (27L, 41L), (13L, 35L), (21L, 23L)),
+      45L -> Seq((2L, 5L), (2L, 33L), (15L, 22L), (5L, 33L), (11L, 17L),
+        (11L, 39L), (0L, 42L), (6L, 32L), (18L, 41L), (17L, 39L),
+        (3L, 17L), (3L, 11L), (3L, 39L), (13L, 40L), (21L, 30L)))
+    cases.foreach { case (n, edges) =>
+      // component minima by relaxation to a fixpoint
+      val want = Array.tabulate(n.toInt)(_.toLong)
+      var changed = true
+      while (changed) {
+        changed = false
+        edges.foreach { case (a, b) =>
+          val m = math.min(want(a.toInt), want(b.toInt))
+          if (want(a.toInt) != m || want(b.toInt) != m) {
+            want(a.toInt) = m; want(b.toInt) = m; changed = true
+          }
+        }
+      }
+      val got = Dedup.clusters((0L until n).toDF("doc_id"),
+          edges.toDF("doc_a", "doc_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(got === want.toSeq.zipWithIndex.map { case (c, d) => (d.toLong, c) })
+    }
+  }
+
   test("bestSurvivors keeps the highest score per cluster where min-id keeps the shortest") {
     val d = spark.createDataFrame(Seq(
       (0L, "tweet", 5L),           // cluster {0,1,2}: min-id keeps 0...

@@ -51,7 +51,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val sims = embs.alias("a").crossJoin(embs.alias("b"))
       .filter(col("a.vec_id") === 0)
       .select(col("b.vec_id"),
-        Similarity.cosine(col("a.embedding"), col("b.embedding")).as("sim"))
+        Similarity.cosine(col("a.embedding"), col("b.embedding"),
+          Similarity.norm(col("a.embedding")),
+          Similarity.norm(col("b.embedding"))).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(sims(0L) === 1.0)
     assert(sims(1L) === 1.0)

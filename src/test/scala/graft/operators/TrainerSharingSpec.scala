@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -9,7 +10,9 @@ import graft.SparkSpec
   *   - [[Similarity.trainPqAndIvf]] shares ONE persisted scaled frame
   *     across the two concurrent Lloyd trainers and still returns the
   *     exact models the sequential convenience forms produce;
-  *   - nothing stays persisted after the trainers return;
+  *   - nothing stays persisted after the trainers return, and a
+  *     trainer leaves a projection its caller's scope caches to that
+  *     scope;
   *   - [[Similarity.ivfPqRefinedSweep]] registers its internal caches
   *     (the npMax candidate frame + brute truth) with the query's
   *     [[graft.sources.CacheScope]], which releases them.
@@ -42,6 +45,19 @@ class TrainerSharingSpec extends AnyFunSuite with SparkSpec {
     // the shared persist is released by the owner after BOTH complete
     // (delta-based: an unrelated suite may legitimately hold persists)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("trainIvfCentroids and pqTrain leave a scaled-projection cache " +
+    "their caller's scope owns") {
+    val v = vecs
+    graft.sources.CacheScope.run {
+      val scaled = graft.sources.CacheScope.persist(Similarity.scaledFrame(v))
+      scaled.count()
+      Similarity.trainIvfCentroids(v, nCells = 8, iters = 2)
+      assert(scaled.storageLevel != StorageLevel.NONE)
+      Similarity.pqTrain(v)
+      assert(scaled.storageLevel != StorageLevel.NONE)
+    }
   }
 
   test("ivfPqRefinedSweep: its scope releases both internal caches") {

@@ -4,9 +4,14 @@ run graft.Verify at a given SF, then replay each oracle_sql.json query in
 DuckDB against the same parquet tables and diff values (columns sorted by
 name, rows in produced order). NOT part of the shipped library.
 
+Verify runs from the checkout this script lives in. Its `[verify]` lines
+(a query that threw, a query that leaked persists) are always printed, a
+query that threw is reported with its message, and any such line makes
+the exit status nonzero.
+
 Usage: python3 tools/check_oracle.py [sfDir] [outDir] [--skip-verify]
 """
-import json, subprocess, sys, glob, os
+import json, subprocess, sys, glob, os, re
 
 import duckdb
 import pandas as pd
@@ -15,12 +20,23 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+failed_in_verify, verify_bad = {}, []
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=CHECKOUT, capture_output=True, text=True)
     sys.stdout.write(r.stdout[-3000:])
+    for line in (r.stdout + r.stderr).splitlines():
+        if "[verify]" not in line:
+            continue
+        print(line)
+        m = re.search(r"\[verify\] (\S+) failed: (.*)", line)
+        if m:
+            failed_in_verify[m.group(1)] = m.group(2)
+        if m or re.search(r"\[verify\] \S+ leaked \d+ persists", line):
+            verify_bad.append(line)
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:])
         sys.exit(f"Verify failed rc={r.returncode}")
@@ -34,7 +50,8 @@ fails, passes = [], []
 for name, sql in sorted(oracle.items()):
     files = glob.glob(f"{OUT}/{name}/*.parquet")
     if not files:
-        fails.append((name, "no spark output"))
+        fails.append((name, f"verify failed: {failed_in_verify[name]}"
+                      if name in failed_in_verify else "no spark output"))
         continue
     got = duckdb.sql(f"SELECT * FROM '{files[0]}'").df()
     try:
@@ -78,5 +95,6 @@ for name in passes:
 for name, why in fails:
     print(f"FAIL {name}: {why}")
 print(f"\n{len(passes)} passed, {len(fails)} failed, "
-      f"{len(all_outputs - set(oracle))} oracle-less")
-sys.exit(1 if fails else 0)
+      f"{len(all_outputs - set(oracle))} oracle-less, "
+      f"{len(verify_bad)} [verify] failed/leaked lines")
+sys.exit(1 if fails or verify_bad else 0)
