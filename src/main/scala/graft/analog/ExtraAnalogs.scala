@@ -404,7 +404,7 @@ object ExtraAnalogs {
   /** WITH-fragment `g…bb`: the dHash fixture law replayed to 64-bit
     * hashes (HUGEINT assembly, two's-complement fold-back to the JVM's
     * wrapping Long) and their 4×16-bit Manku block keys — mirrors
-    * Multimodal.dhashPixel/dhash64/dhashBlocks. Yields
+    * Multimodal.dhashPixel/dhash64/hammingBlocks. Yields
     * `bb(doc_id, dhash, blk, bval)`.
     */
   private lazy val dDhashCte: String =
@@ -4205,7 +4205,7 @@ object ExtraAnalogs {
     // (DocStreams.dhashScreen): every 10th image "arrives" and its
     // dHash blocks probe the static index of the rest — one row per
     // (arrival, corpus image, colliding block) within hamming 3, the
-    // nearDupScreen shape. Shares dhashBlocks with the pair miner.
+    // nearDupScreen shape. Shares hammingBlocks with the pair miner.
     Q("stream_dhash_screen",
       (s, d) => {
         val ids = Tables.documents(s, d)

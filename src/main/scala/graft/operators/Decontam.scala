@@ -263,7 +263,7 @@ object Decontam {
   def rareBigramRate(docs: DataFrame, maxCount: Long = 2): DataFrame = {
     // positional (distinct = false): a bigram occurring k times in a
     // doc is k rare OCCURRENCES — multiplicity is the statistic
-    // fanned out (round 18) — the Dedup.minhashPairs rationale: the
+    // fanned out (round 18) — the Dedup.minhashBandTable rationale: the
     // md5-per-bigram walk on a single-row-group scan is one-core
     val bg = CacheScope.persist(graft.sources.Par.fanOut(docs)
       .select(col("doc_id"),
@@ -274,9 +274,7 @@ object Decontam {
     // skew-prone) bigrams never cross the join at all. n_bigrams is a
     // per-row scalar (positional bigram count = max(len(w)-1, 0)), not
     // a join product.
-    val rare = bg.groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxCount).select("h")
-    val nRare = bg.join(rare, "h")
+    val nRare = Dedup.capHotKeys(bg, "h", maxCount)
       .groupBy("doc_id").agg(count(lit(1)).as("n_rare"))
     docs.select(col("doc_id"),
         greatest(size(tokens(col("text"))) - 1, lit(0)).cast("long")

@@ -21,8 +21,9 @@ import graft.sources.CacheScope
   *   - blocked pairwise Jaccard keys the self-join on (lang, source)
   *     blocking attributes — the classic entity-resolution blocking that
   *     turns O(n²) global into Σ O(block²);
-  *   - SimHash is a per-row scalar; near-dup lookups become equality on
-  *     a 16-bit bucket (Manku et al., WWW'07 shape).
+  *   - SimHash is a per-row 60-bit scalar; near-dup candidates are an
+  *     equi-join on its Manku block table (Manku et al., WWW'07 §3),
+  *     lossless at the mined Hamming radius.
   */
 object Dedup {
 
@@ -94,34 +95,11 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
       lengthPrefilter: Boolean = true): DataFrame = {
-    // two-step select: `hs` is non-cheap and referenced twice (bands +
-    // size) — CollapseProject keeps the steps separate, so the shingle
-    // hashing evaluates once per row. CACHED because the self-join
-    // below evaluates its input once per side (the broadcast arm can't
-    // reuse the other side's exchange), and the md5-per-shingle hash
-    // walk is the operator's dominant scalar cost — the cache is
-    // 4 × 24-byte rows per doc, no text.
-    // fanned out (round 18): the md5-per-shingle walk is the miner's
-    // dominant scalar cost and a single-row-group scan runs it on one
-    // core; Par.fanOut no-ops when the scan already parallelizes, and
-    // every downstream aggregate here is integer-exact
-    val bands = CacheScope.persist(graft.sources.Par.fanOut(docs)
-      .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
-      .select(col("doc_id"),
-        graft.expressions.TextExpressions.minhashBands(col("hs")).as("bands"),
-        size(col("hs")).cast("long").as("sz"))
-      .select(col("doc_id"), col("sz"),
-        posexplode(col("bands")).as(Seq("pos", "band"))))
-    // LOSSLESS length prefilter (same algebra as ngramJaccardPairs'
-    // buckets): |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
-    // J ≥ t forces min/max ≥ t. The verify keeps round(J,6) ≥ t, i.e.
-    // J ≥ t − 5e-7, so screening at t − 1e-6 (margin > round-off plus
-    // any FP ulp in the multiply) provably drops only pairs the verify
-    // would drop anyway — each skipped pair saves a shingle re-join
-    // row and a merge-walk. Sizes ride the band explode for one long.
-    val sizeOk =
-      least(col("ba.sz"), col("bb.sz")).cast("double") >=
-        (lit(threshold) - lit(1e-6)) * greatest(col("ba.sz"), col("bb.sz"))
+    // CACHED because the self-join below evaluates its input once per
+    // side (the broadcast arm can't reuse the other side's exchange),
+    // and the md5-per-shingle hash walk is the operator's dominant
+    // scalar cost — the cache is 4 × 24-byte rows per doc, no text.
+    val bands = CacheScope.persist(minhashBandTable(docs))
     // Self-join via ALIASES of one canonical projection so both sides
     // canonicalize to the same exchange (shareable at scale), and
     // PERSIST the candidate edge list: it is referenced three times
@@ -133,12 +111,49 @@ object Dedup {
       .join(bands.alias("bb"),
         col("ba.pos") === col("bb.pos") && col("ba.band") === col("bb.band"))
       .filter(col("ba.doc_id") < col("bb.doc_id"))
-      .filter(if (lengthPrefilter) sizeOk else lit(true))
+      .filter(if (lengthPrefilter) sizeOk(threshold) else lit(true))
       .select(col("ba.doc_id").as("doc_a"), col("bb.doc_id").as("doc_b"))
       .distinct())
-    // shingle the candidate docs ONLY (semi-join first): verification
-    // never re-derives features for the whole corpus — at scale the
-    // survivors are a vanishing fraction of the input
+    withCandidateShingles(docs, candidates, shingles2(col("text")))
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** Shingle-set Jaccard of two SORTED distinct-element arrays, rounded
+    * at 6 dp (the DuckDB-parity rounding every Jaccard output shares):
+    * |a ∩ b| by the native merge walk, |a ∪ b| = |a| + |b| − |a ∩ b|.
+    */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val inter = graft.expressions.TextExpressions.sortedIntersectCount(a, b)
+    round(inter.cast("double") /
+      (size(a).cast("long") + size(b).cast("long") - inter), 6)
+  }
+
+  /** LOSSLESS length prefilter over a band self-join aliased `ba`/`bb`
+    * (same algebra as ngramJaccardPairs' buckets): |A∩B| ≤ min(|A|,|B|)
+    * and |A∪B| ≥ max(|A|,|B|), so J ≥ t forces min/max ≥ t. The verify
+    * keeps round(J,6) ≥ t, i.e. J ≥ t − 5e-7, so screening at t − 1e-6
+    * (margin > round-off plus any FP ulp in the multiply) provably
+    * drops only pairs the verify would drop anyway — each skipped pair
+    * saves a shingle re-join row and a merge-walk. Sizes ride the band
+    * explode for one long, and the proof does not care which side a
+    * doc came from.
+    */
+  private def sizeOk(threshold: Double): Column =
+    least(col("ba.sz"), col("bb.sz")).cast("double") >=
+      (lit(threshold) - lit(1e-6)) * greatest(col("ba.sz"), col("bb.sz"))
+
+  /** A (doc_a, doc_b) candidate list with each side's sorted shingle
+    * array attached: (doc_a, doc_b, sh_a, sh_b). `shingles` is the
+    * per-doc shingle expression over `docs`. Only the candidate docs
+    * are shingled (semi-join first): verification never re-derives
+    * features for the whole corpus — at scale the survivors are a
+    * vanishing fraction of the input. `candidates` is read three times
+    * (both id arms and the verify join), so callers pass it persisted.
+    */
+  private def withCandidateShingles(docs: DataFrame, candidates: DataFrame,
+      shingles: Column): DataFrame = {
     val candIds = candidates.select(col("doc_a").as("doc_id"))
       .union(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
@@ -146,21 +161,14 @@ object Dedup {
     // sb), and recomputing means a second scan of docs — bounded by
     // |candidate docs| rows of sorted shingle arrays
     val candSh = CacheScope.persist(docs.join(candIds, "doc_id")
-      .select(col("doc_id"), array_sort(shingles2(col("text"))).as("sh")))
-    val inter = graft.expressions.TextExpressions
-      .sortedIntersectCount(col("sh_a"), col("sh_b"))
-    val union = size(col("sh_a")).cast("long") +
-      size(col("sh_b")).cast("long") - inter
-    // same aliasing trick for the two verify joins: candSh's exchange
-    // is shared between the doc_a and doc_b sides
+      .select(col("doc_id"), array_sort(shingles).as("sh")))
+    // the self-join's aliasing trick for the two verify joins: candSh's
+    // exchange is shared between the doc_a and doc_b sides
     candidates.alias("c")
       .join(candSh.alias("sa"), col("c.doc_a") === col("sa.doc_id"))
       .join(candSh.alias("sb"), col("c.doc_b") === col("sb.doc_id"))
       .select(col("c.doc_a").as("doc_a"), col("c.doc_b").as("doc_b"),
         col("sa.sh").as("sh_a"), col("sb.sh").as("sh_b"))
-      .withColumn("jaccard", round(inter.cast("double") / union, 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** The corpus-side band table (doc_id, sz, pos, band) — the STORED
@@ -172,7 +180,13 @@ object Dedup {
     * screens identically to a fresh one.
     */
   def minhashBandTable(docs: DataFrame): DataFrame =
-    // fanned out (round 18) — the minhashPairs rationale
+    // fanned out (round 18): the md5-per-shingle walk is the miners'
+    // dominant scalar cost and a single-row-group scan runs it on one
+    // core; Par.fanOut no-ops when the scan already parallelizes, and
+    // every downstream aggregate is integer-exact. Two-step select:
+    // `hs` is non-cheap and referenced twice (bands + size) —
+    // CollapseProject keeps the steps separate, so the shingle hashing
+    // evaluates once per row.
     graft.sources.Par.fanOut(docs)
     .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
     .select(col("doc_id"),
@@ -205,7 +219,6 @@ object Dedup {
   def minhashPairsIncremental(newDocs: DataFrame, oldDocs: DataFrame,
       threshold: Double = 0.5,
       oldBands: Option[DataFrame] = None): DataFrame = {
-    def bandsOf(df: DataFrame) = minhashBandTable(df)
     // the corpus band table IS the operator's stored artifact (class
     // doc: at scale increments probe it, they don't rebuild it) — a
     // caller-provided stored table is used as-is; otherwise persist
@@ -214,19 +227,14 @@ object Dedup {
     // probe the materialized 32-byte-row table. The batch side stays
     // unpersisted: it is consumed once and is new data each increment
     // by definition.
-    val oldTable = oldBands.getOrElse(CacheScope.persist(bandsOf(oldDocs)))
-    // the minhashPairs lossless size-ratio prefilter, verbatim (the
-    // proof at minhashPairs' `sizeOk` does not care which side a doc
-    // came from)
-    val sizeOk =
-      least(col("ba.sz"), col("bb.sz")).cast("double") >=
-        (lit(threshold) - lit(1e-6)) * greatest(col("ba.sz"), col("bb.sz"))
+    val oldTable =
+      oldBands.getOrElse(CacheScope.persist(minhashBandTable(oldDocs)))
     // persisted: referenced three times (verify join + both shingle
     // semi-join arms), and it is the vanishing-fraction artifact
-    val candidates = CacheScope.persist(bandsOf(newDocs).alias("ba")
+    val candidates = CacheScope.persist(minhashBandTable(newDocs).alias("ba")
       .join(oldTable.alias("bb"),
         col("ba.pos") === col("bb.pos") && col("ba.band") === col("bb.band"))
-      .filter(sizeOk)
+      .filter(sizeOk(threshold))
       .select(col("ba.doc_id").as("new_id"), col("bb.doc_id").as("old_id"))
       .distinct())
     // shingle the candidate docs ONLY, per side (each side's shingle
@@ -234,10 +242,6 @@ object Dedup {
     def candSh(df: DataFrame, idCol: String) = df
       .join(candidates.select(col(idCol).as("doc_id")).distinct(), "doc_id")
       .select(col("doc_id"), array_sort(shingles2(col("text"))).as("sh"))
-    val inter = graft.expressions.TextExpressions
-      .sortedIntersectCount(col("sh_a"), col("sh_b"))
-    val union = size(col("sh_a")).cast("long") +
-      size(col("sh_b")).cast("long") - inter
     candidates.alias("c")
       .join(candSh(newDocs, "new_id").alias("sa"),
         col("c.new_id") === col("sa.doc_id"))
@@ -245,7 +249,7 @@ object Dedup {
         col("c.old_id") === col("sb.doc_id"))
       .select(col("c.new_id").as("new_id"), col("c.old_id").as("old_id"),
         col("sa.sh").as("sh_a"), col("sb.sh").as("sh_b"))
-      .withColumn("jaccard", round(inter.cast("double") / union, 6))
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("new_id", "old_id", "jaccard")
   }
@@ -284,7 +288,7 @@ object Dedup {
     // fully consume either way; MEMORY_AND_DISK trades one disk
     // materialization for the second scalar pass.
     val withSet = CacheScope.persist(graft.sources.Par.fanOut(docs)
-      // fanned out (round 18) — the minhashPairs rationale
+      // fanned out (round 18) — the minhashBandTable rationale
       .select(col("doc_id"), col("lang"), col("source"),
         array_sort(wordSet(col("text"))).as("ws"))
       .withColumn("szb",
@@ -304,34 +308,21 @@ object Dedup {
     // at local sizes, shuffle hash joins at scale, never a per-group
     // buffer. The a-side explodes the ±1 length buckets; each (a, b)
     // matches on at most one bucket key, so no pair dedup is needed.
-    // The a-side also WIDENS to the session's parallelism when the
-    // input has fewer splits than cores: verify work is O(block²)
-    // while file-split sizing is O(bytes), so a small single-split
-    // corpus would otherwise push every candidate pair through one
-    // task (the pair list inherits the stream side's partitioning);
-    // the shuffled rows are ids only, and at real scale the scan
-    // already has more splits than cores and no exchange is added.
-    val cores = docs.sparkSession.sparkContext.defaultParallelism
-    val aBase =
-      if (withSet.rdd.getNumPartitions < cores) withSet.repartition(cores)
-      else withSet
-    val ids = aBase.select(col("lang"), col("source"),
+    // The pair list inherits the a-side's partitioning, which the
+    // fan-out above already widened to the session's cores.
+    val ids = withSet.select(col("lang"), col("source"),
         explode(array(col("szb") - 1, col("szb"), col("szb") + 1)).as("szb"),
         col("doc_id").as("doc_a"))
       .join(withSet.select(col("lang"), col("source"), col("szb"),
         col("doc_id").as("doc_b")), Seq("lang", "source", "szb"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-    val inter = graft.expressions.TextExpressions
-      .sortedIntersectCount(col("ws_a"), col("ws_b"))
-    val union = size(col("ws_a")).cast("long") +
-      size(col("ws_b")).cast("long") - inter
     ids
       .join(withSet.select(col("doc_id").as("doc_a"), col("ws").as("ws_a")),
         Seq("doc_a"))
       .join(withSet.select(col("doc_id").as("doc_b"), col("ws").as("ws_b")),
         Seq("doc_b"))
-      .withColumn("jaccard", round(inter.cast("double") / union, 6))
+      .withColumn("jaccard", setJaccard(col("ws_a"), col("ws_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -375,18 +366,11 @@ object Dedup {
       s"epsPm must be in [0,10000], got $epsPm")
     val ws = CacheScope.persist(docs.select(col("doc_id"),
       array_sort(wordSet(col("text"))).as("ws")))
-    val n = ws.count()
-    val a = ws.select(col("doc_id").as("aid"), col("ws").as("ws_a"))
-      .withColumn("p", wordHash60(col("aid").cast("string")) % lit(n))
-      .filter(col("p") =!= col("aid"))
-    val b = ws.select(col("doc_id").as("bid"), col("ws").as("ws_b"))
-    val inter = graft.expressions.TextExpressions
-      .sortedIntersectCount(col("ws_a"), col("ws_b"))
-    val union = size(col("ws_a")).cast("long") +
-      size(col("ws_b")).cast("long") - inter
-    val hist = CacheScope.persist(a.join(b, col("p") === col("bid"))
+    val hist = CacheScope.persist(Similarity.randomPartners(
+        ws.select(col("doc_id").as("aid"), col("ws").as("ws_a")), "aid",
+        ws.select(col("doc_id").as("bid"), col("ws").as("ws_b")), "bid")
       .filter(size(col("ws_a")) + size(col("ws_b")) > 0)
-      .select(round(round(inter.cast("double") / union, 6) * lit(1e6))
+      .select(round(setJaccard(col("ws_a"), col("ws_b")) * lit(1e6))
         .cast("long").as("jmicro"))
       .select(least(lit(9L),
         call_function("div", col("jmicro"), lit(100000L))).as("bucket"))
@@ -514,14 +498,11 @@ object Dedup {
       s"epsPm must be in [0,10000], got $epsPm")
     val sv = CacheScope.persist(docs
       .select(col("doc_id"), simhash60(col("text")).as("simhash")))
-    val n = sv.count()
-    val a = sv.select(col("doc_id").as("aid"), col("simhash").as("sig_a"))
-      .withColumn("p", wordHash60(col("aid").cast("string")) % lit(n))
-      .filter(col("p") =!= col("aid"))
-    val b = sv.select(col("doc_id").as("bid"), col("simhash").as("sig_b"))
-    val hist = CacheScope.persist(a.join(b, col("p") === col("bid"))
+    val hist = CacheScope.persist(Similarity.randomPartners(
+        sv.select(col("doc_id").as("aid"), col("simhash").as("sig_a")), "aid",
+        sv.select(col("doc_id").as("bid"), col("simhash").as("sig_b")), "bid")
       .select(least(lit(9L), call_function("div",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"),
+        Multimodal.hammingDistance(col("sig_a"), col("sig_b")),
         lit(6L))).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_pairs")))
     // ties toward the larger distance: max(struct(count, bucket))
@@ -578,37 +559,18 @@ object Dedup {
     * (block idx, 15-bit value) — no text, no arrays; candidates are an
     * equi-join on that key, so per-bucket work is |bucket|² with 2¹⁵
     * buckets per block index, and the XOR-popcount verify runs inside
-    * codegen per candidate. Survivor pairs (a vanishing fraction at a
-    * sane sketch width) are deduped (a pair agreeing on k blocks
-    * appears k times).
+    * codegen per candidate. The miner is [[Multimodal.hammingPairs]]
+    * at [[SimhashBits]], the one the 64-bit perceptual hashes use.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val nBlocks = maxHamming + 1
-    require(SimhashBits % nBlocks == 0,
-      s"maxHamming must be one of 1..5 (60-bit blocks), got $maxHamming")
-    val blockBits = SimhashBits / nBlocks
-    val mask = (1L << blockBits) - 1
+    // reject a bad radius before the cache below is registered
+    Multimodal.hammingBlockBits(SimhashBits, maxHamming)
     // cache: the 60-bit fold is the expensive scalar half and the
     // self-join evaluates its input once per side
     val sigs = CacheScope.persist(graft.sources.Par.fanOut(docs)
-      // fanned out (round 18) — the minhashPairs rationale
+      // fanned out (round 18) — the minhashBandTable rationale
       .select(col("doc_id"), simhash60(col("text")).as("simhash")))
-    val blocks = sigs.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until nBlocks).map(i =>
-        shiftright(col("simhash"), SimhashBits - (i + 1) * blockBits)
-          .bitwiseAND(lit(mask))): _*)).as(Seq("blk", "bval")))
-    val a = blocks.select(col("blk"), col("bval"),
-      col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
-    val b = blocks.select(col("blk"), col("bval"),
-      col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    a.join(b, Seq("blk", "bval"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      // a pair sharing k blocks survives k times; hamming is determined
-      // by the pair, so the distinct collapses exact duplicates only
-      .select("doc_a", "doc_b", "hamming").distinct()
+    Multimodal.hammingPairs(sigs, "simhash", SimhashBits, maxHamming)
   }
 
   /** Winnowing near-dup pairs (MOSS shape): docs sharing ≥ `minShared`
@@ -635,13 +597,14 @@ object Dedup {
     */
   def winnowPairs(docs: DataFrame, k: Int = 3, win: Int = 4,
       minShared: Int = 3, maxDf: Long = 128L): DataFrame = {
+    require(maxDf >= 1L, s"maxDf must be >= 1, got $maxDf")
     // cached: the self-join consumes the fingerprint table once per
     // side (plus the df aggregate); 16 bytes per (doc, fp) row, no text
     val fps = CacheScope.persist(graft.sources.Par.fanOut(docs)
-      // fanned out (round 18) — the minhashPairs rationale
+      // fanned out (round 18) — the minhashBandTable rationale
       .select(col("doc_id"),
         explode(winnowFingerprints(col("text"), k, win)).as("fp")))
-    val hits = dfCapped(fps, maxDf)
+    val hits = capHotKeys(fps, "fp", maxDf)
     hits.alias("a")
       .join(hits.alias("b"), col("a.fp") === col("b.fp"))
       .filter(col("a.doc_id") < col("b.doc_id"))
@@ -650,20 +613,19 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Hot-key cap shared by the winnow-fingerprint miners: drop every
-    * fingerprint carried by more than `maxDf` rows corpus-wide. One
-    * aggregate on the SAME key as the self-join it guards (so the df
-    * table is hash-partitioned identically to the probe side — the
-    * [[substringRuns]] `rare` discipline), returning the surviving
-    * (doc_id, fp) rows.
+  /** Hot-key cap shared by the fingerprint, anchor and bigram tables:
+    * keep only the `rows` whose `key` occurs at most `maxDf` times
+    * corpus-wide. One aggregate on the SAME key as the join it guards
+    * (so the df table is hash-partitioned identically to the probe
+    * side), returning the surviving rows with `key` first.
     */
-  private def dfCapped(fps: DataFrame, maxDf: Long): DataFrame = {
-    require(maxDf >= 1L, s"maxDf must be >= 1, got $maxDf")
-    val rare = fps.groupBy("fp")
+  private[operators] def capHotKeys(rows: DataFrame, key: String,
+      maxDf: Long): DataFrame = {
+    val rare = rows.groupBy(key)
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
-      .select("fp")
-    fps.join(rare, "fp")
+      .select(key)
+    rows.join(rare, key)
   }
 
   /** Asymmetric near-dup (CONTAINMENT) pairs — Broder's containment
@@ -720,38 +682,15 @@ object Dedup {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(thresholdPm >= 0L && thresholdPm <= 10000L,
       s"thresholdPm must be in [0, 10000], got $thresholdPm")
-    // fingerprint table: 16 bytes per (doc, fp) row, no text (the
-    // winnowPairs convention); cached — the df aggregate and both
-    // self-join sides read it; fanned out (round 18) — the
-    // minhashPairs rationale
-    val fps = CacheScope.persist(graft.sources.Par.fanOut(docs)
-      .select(col("doc_id"),
-        explode(winnowFingerprints(col("text"), k, win)).as("fp")))
-    val hits = dfCapped(fps, maxDf)
-    val candidates = CacheScope.persist(hits.alias("a")
-      .join(hits.alias("b"), col("a.fp") === col("b.fp"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .select("doc_a", "doc_b"))
-    // shingle only the candidate docs (semi-join first — verification
-    // never re-derives features for the whole corpus)
-    val candIds = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id")))
-      .distinct()
-    val candSh = CacheScope.persist(docs.join(candIds, "doc_id")
-      .select(col("doc_id"),
-        array_sort(graft.functions.TextFunctions
-          .shinglesN(col("text"), k)).as("sh")))
+    // the candidates are winnowPairs' shared-fingerprint pairs (its
+    // cached fingerprint table and hot-key cap included), persisted:
+    // the verify reads them three times
+    val candidates = CacheScope.persist(
+      winnowPairs(docs, k, win, minShared, maxDf).select("doc_a", "doc_b"))
     val inter = graft.expressions.TextExpressions
       .sortedIntersectCount(col("sh_a"), col("sh_b")).cast("long")
     val minSz = least(size(col("sh_a")), size(col("sh_b"))).cast("long")
-    candidates.alias("c")
-      .join(candSh.alias("sa"), col("c.doc_a") === col("sa.doc_id"))
-      .join(candSh.alias("sb"), col("c.doc_b") === col("sb.doc_id"))
-      .select(col("c.doc_a").as("doc_a"), col("c.doc_b").as("doc_b"),
-        col("sa.sh").as("sh_a"), col("sb.sh").as("sh_b"))
+    withCandidateShingles(docs, candidates, shinglesN(col("text"), k))
       // a doc under k words has an EMPTY shingle set (min = 0): no
       // containment is defined for it, and it cannot clear minShared
       // candidates anyway — guard the division all the same
@@ -857,13 +796,7 @@ object Dedup {
     // Cached: consumed by the df-count aggregate AND both self-join
     // sides.
     val anchors = CacheScope.persist(positionalAnchors(docs, gram))
-    // hot-gram cap: one aggregate on the SAME key as the join, so the
-    // df table is hash-partitioned identically to the probe side
-    val rare = anchors.groupBy("h")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("h")
-    val hits = anchors.join(rare, "h")
+    val hits = capHotKeys(anchors, "h", maxDf)
     // candidate anchor alignments, grouped by match diagonal
     val aligned = hits.select(col("doc_id").as("doc_a"),
         col("pos").as("pos_a"), col("h"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
@@ -266,60 +266,73 @@ object Multimodal {
       .mapPartitions(_.map(id => DHashRow(id, dhash64(id, dhashFixture(id)))))
   }
 
-  /** Near-dup image pairs within `maxHamming` bits: Manku block
-    * blocking over the 64-bit hashes (exactly [[Dedup.simhashPairs]]'
-    * shape at 64 bits — nBlocks = maxHamming + 1 equal blocks, any
-    * pair within the threshold MUST agree on one whole block), then
-    * the XOR-popcount verify inside codegen per candidate. Survivors
-    * dedup (a pair agreeing on k blocks appears k times).
+  /** Width of the perceptual fingerprints: image dHash ([[dhash64]])
+    * and the audio envelope hash ([[audioEnvelopeHash]]).
     */
-  /** (doc_id, dhash, blk, bval): the exploded Manku block keys —
-    * shared by the batch pair miner and the streaming ingest screen
-    * ([[graft.streaming.DocStreams.dhashScreen]]), so the two cannot
-    * drift on block geometry.
-    */
-  def dhashBlocks(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingBlocks(hashes, "dhash", maxHamming)
+  val PerceptualBits = 64
 
-  /** The modality-generic half of the miner: any (doc_id, <hashCol>)
-    * frame of 64-bit fingerprints explodes to its Manku block keys —
-    * image dHash ([[dhashBlocks]]) and the audio envelope hash
-    * ([[audioFpPairs]]) share THIS builder, so every 64-bit
-    * perceptual family mines under one block geometry. The output
-    * hash column is normalized to `dhash` whatever the input name.
+  /** Near-dup image pairs within `maxHamming` bits: [[hammingPairs]]
+    * over the 64-bit `dhash` column.
     */
-  def hammingBlocks(hashes: DataFrame, hashCol: String,
-      maxHamming: Int = 3): DataFrame = {
+  def dhashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(hashes, "dhash", PerceptualBits, maxHamming)
+
+  /** XOR-popcount distance between two fingerprint columns, as a long. */
+  def hammingDistance(a: Column, b: Column): Column =
+    bit_count(a.bitwiseXOR(b)).cast("long")
+
+  /** (doc_id, dhash, blk, bval): the exploded Manku block keys
+    * (Manku et al., WWW'07 §3) of any (doc_id, <hashCol>) frame of
+    * `bits`-wide fingerprints — `maxHamming + 1` equal blocks, so by
+    * pigeonhole any pair within `maxHamming` bits agrees EXACTLY on one
+    * whole block. Text SimHash ([[Dedup.SimhashBits]]), image dHash and
+    * the audio envelope hash ([[PerceptualBits]]) share THIS builder,
+    * as do the batch pair miner and the streaming ingest screen
+    * ([[graft.streaming.DocStreams.dhashScreen]]), so none can drift on
+    * block geometry. The output hash column is normalized to `dhash`
+    * whatever the input name.
+    */
+  def hammingBlocks(hashes: DataFrame, hashCol: String, bits: Int,
+      maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
-    require(64 % nBlocks == 0,
-      s"maxHamming + 1 must divide 64 (equal 64-bit blocks; " +
-        s"1, 3, 7 are the practical settings), got $maxHamming")
-    val blockBits = 64 / nBlocks
+    val blockBits = hammingBlockBits(bits, maxHamming)
     val mask = if (blockBits == 64) -1L else (1L << blockBits) - 1
     hashes.select(col("doc_id"), col(hashCol).as("dhash"),
       posexplode(array((0 until nBlocks).map(i =>
-        shiftright(col(hashCol), 64 - (i + 1) * blockBits)
+        shiftright(col(hashCol), bits - (i + 1) * blockBits)
           .bitwiseAND(lit(mask))): _*)).as(Seq("blk", "bval")))
   }
 
-  def dhashPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingPairs(hashes, "dhash", maxHamming)
-
-  /** Near-dup pairs within `maxHamming` bits over ANY 64-bit
-    * fingerprint column — the generic mine-and-verify behind
-    * [[dhashPairs]] (images) and [[audioFpPairs]] (audio).
+  /** Width of one of the `maxHamming + 1` equal Manku blocks of a
+    * `bits`-wide fingerprint; rejects a radius whose blocks cannot tile
+    * it.
     */
-  def hammingPairs(hashes: DataFrame, hashCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val blocks = hammingBlocks(hashes, hashCol, maxHamming)
+  private[operators] def hammingBlockBits(bits: Int, maxHamming: Int): Int = {
+    require(maxHamming >= 0 && bits % (maxHamming + 1) == 0,
+      s"maxHamming + 1 must be a positive divisor of $bits (equal " +
+        s"$bits-bit blocks), got maxHamming = $maxHamming")
+    bits / (maxHamming + 1)
+  }
+
+  /** Near-dup pairs within `maxHamming` bits over ANY `bits`-wide
+    * fingerprint column — the one mine-and-verify behind
+    * [[Dedup.simhashPairs]] (text), [[dhashPairs]] (images) and
+    * [[audioFpPairs]] (audio): an equi-join on the [[hammingBlocks]]
+    * keys, then the XOR-popcount verify inside codegen per candidate.
+    * A pair agreeing on k blocks survives k times; hamming is
+    * determined by the pair, so the distinct collapses exact
+    * duplicates only.
+    */
+  def hammingPairs(hashes: DataFrame, hashCol: String, bits: Int,
+      maxHamming: Int): DataFrame = {
+    val blocks = hammingBlocks(hashes, hashCol, bits, maxHamming)
     val a = blocks.select(col("blk"), col("bval"),
       col("doc_id").as("doc_a"), col("dhash").as("hash_a"))
     val b = blocks.select(col("blk"), col("bval"),
       col("doc_id").as("doc_b"), col("dhash").as("hash_b"))
     a.join(b, Seq("blk", "bval"))
       .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming",
-        bit_count(col("hash_a").bitwiseXOR(col("hash_b"))).cast("long"))
+      .withColumn("hamming", hammingDistance(col("hash_a"), col("hash_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming").distinct()
   }
@@ -1037,7 +1050,7 @@ object Multimodal {
     * miner's exact-recall block geometry, unchanged.
     */
   def audioFpPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingPairs(fps, "fp", maxHamming)
+    hammingPairs(fps, "fp", PerceptualBits, maxHamming)
 
   // ---- Video scene-cut detection over sampled frames ---------------------
   // The keyframe-extraction primitive for video training data: decode
@@ -1105,8 +1118,7 @@ object Multimodal {
       .partitionBy("doc_id").orderBy("frame_idx")
     frames.withColumn("_prev", lag(col("dhash"), 1).over(w))
       .filter(col("_prev").isNotNull)
-      .withColumn("hamming",
-        bit_count(col("dhash").bitwiseXOR(col("_prev"))).cast("long"))
+      .withColumn("hamming", hammingDistance(col("dhash"), col("_prev")))
       .select(col("doc_id"), col("frame_idx"), col("hamming"),
         (col("hamming") > maxHamming).cast("int").as("is_cut"))
   }

@@ -272,13 +272,7 @@ object Similarity {
     * (bucket, n_pairs, mean_cmicro), ≤ 10 rows at any corpus size.
     */
   private def randomPairBuckets(embs: DataFrame): DataFrame = {
-    val n = embs.count()
-    val a = side(embs, "a").withColumn("p",
-      graft.functions.TextFunctions.wordHash60(col("a_id").cast("string"))
-        % lit(n))
-      .filter(col("p") =!= col("a_id"))
-    val b = side(embs, "b")
-    val sims = a.join(b, col("p") === col("b_id"))
+    val sims = randomPartners(side(embs, "a"), "a_id", side(embs, "b"), "b_id")
       .select(round(pairSim("a", "b") * lit(1e6)).cast("long").as("cmicro"))
     sims
       .select(least(lit(9L), call_function("div",
@@ -288,6 +282,23 @@ object Similarity {
       .agg(count(lit(1)).as("n_pairs"),
         (call_function("div", sum(col("cmicro") + lit(1000000L)),
           count(lit(1))) - lit(1000000L)).as("mean_cmicro"))
+  }
+
+  /** The random-pair sample every calibration reads: each `a` row (id
+    * column `aId`) joins the one `b` row whose id `bId` equals the
+    * deterministic hash partner wordHash60(aId) mod n, n = |b| (one
+    * eager count), self-pairs dropped (an absent partner id drops too:
+    * the join is inner). The per-rule histograms and gap scans stay
+    * with their rules.
+    */
+  private[operators] def randomPartners(a: DataFrame, aId: String,
+      b: DataFrame, bId: String): DataFrame = {
+    val n = b.count()
+    a.withColumn("p",
+      graft.functions.TextFunctions.wordHash60(col(aId).cast("string"))
+        % lit(n))
+      .filter(col("p") =!= col(aId))
+      .join(b, col("p") === col(bId))
   }
 
   /** Embedding-space health profile — the random-pair cosine

@@ -7,23 +7,25 @@ import graft.functions.TextFunctions._
 
 /** Streaming document-pipeline pieces: near-dup screening at ingest.
   *
-  * The batch half (graft.operators.Dedup.minhashSignatures) maintains a
-  * band-key index of the accepted corpus; arriving documents compute
-  * their own band keys and STREAM-STATIC join the index — each
-  * micro-batch only touches the bands it carries, no state beyond the
-  * (periodically refreshed) static index. This is the standard
+  * The batch half ([[bandRows]]) maintains a band-key index of the
+  * accepted corpus; arriving documents compute their own band keys
+  * and STREAM-STATIC join the index — each micro-batch only touches
+  * the bands it carries, no state beyond the (periodically refreshed)
+  * static index. This is the standard
   * dedup-at-ingest shape: cheap screen first, exact Jaccard verify on
   * the (tiny) hit set downstream.
   */
 object DocStreams {
 
-  /** (doc_id, pos, band) — exploded band keys for either side. */
+  /** (doc_id, pos, band) — exploded band keys for either side, from
+    * the native minhash banding the batch miners use
+    * (graft.operators.Dedup.minhashBandTable). A doc of fewer than 2
+    * words has no shingle, so no band key and no rows.
+    */
   def bandRows(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
-      .select(col("doc_id"), posexplode(
-        array((0 until 4).map(b => bandKeyInt(col("hs"), b)): _*))
-        .as(Seq("pos", "band")))
+    docs.select(col("doc_id"),
+      posexplode(graft.expressions.TextExpressions.minhashBands(
+        shingleHashesN(col("text")))).as(Seq("pos", "band")))
 
   /** Screen a stream of docs against a static signature index built by
     * [[bandRows]] over the accepted corpus. Emits one row per
@@ -78,13 +80,22 @@ object DocStreams {
     * anchor pass (no second corpus scan, no self-join of the build).
     */
   def substringAnchorIndex(corpus: DataFrame, gram: Int = 8,
-      maxDf: Long = 128L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.operators.Dedup.positionalAnchors(corpus, gram)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
-      .filter(col("df") <= maxDf)
+      maxDf: Long = 128L): DataFrame =
+    capHotKeysAtBuild(graft.operators.Dedup.positionalAnchors(corpus, gram),
+        "h", maxDf)
       .select(col("doc_id").as("corpus_id"),
         col("pos").as("corpus_pos"), col("h"))
+
+  /** Build-time hot-key cap of a static index: keep the `rows` whose
+    * `key` occurs at most `maxDf` times, by one windowed count over the
+    * single build pass (no second corpus scan, no self-join of the
+    * build). Adds the count as column `df`.
+    */
+  private def capHotKeysAtBuild(rows: DataFrame, key: String,
+      maxDf: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    rows.withColumn("df", count(lit(1)).over(Window.partitionBy(key)))
+      .filter(col("df") <= maxDf)
   }
 
   /** Exact-substring screen at ingest: arriving docs explode their own
@@ -121,15 +132,11 @@ object DocStreams {
     * count over the single build pass — no second corpus scan.
     */
   def winnowFpIndex(corpus: DataFrame, k: Int = 3,
-      win: Int = 4, maxDf: Long = 128L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    corpus.select(col("doc_id").as("corpus_id"),
-      explode(graft.functions.TextFunctions.winnowFingerprints(
-        col("text"), k, win)).as("fp"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("fp")))
-      .filter(col("df") <= maxDf)
+      win: Int = 4, maxDf: Long = 128L): DataFrame =
+    capHotKeysAtBuild(corpus.select(col("doc_id").as("corpus_id"),
+        explode(graft.functions.TextFunctions.winnowFingerprints(
+          col("text"), k, win)).as("fp")), "fp", maxDf)
       .select(col("corpus_id"), col("fp"))
-  }
 
   /** Containment screen at ingest — the candidate half of
     * [[graft.operators.Dedup.containmentPairs]] re-cut for Structured
@@ -546,7 +553,8 @@ object DocStreams {
     */
   def dhashIndex(corpusHashes: DataFrame, maxHamming: Int = 3,
       hashCol: String = "dhash"): DataFrame =
-    graft.operators.Multimodal.hammingBlocks(corpusHashes, hashCol, maxHamming)
+    graft.operators.Multimodal.hammingBlocks(corpusHashes, hashCol,
+        graft.operators.Multimodal.PerceptualBits, maxHamming)
       .select(col("blk"), col("bval"),
         col("doc_id").as("matched_id"), col("dhash").as("hash_b"))
 
@@ -564,11 +572,12 @@ object DocStreams {
     */
   def dhashScreen(streamHashes: DataFrame, index: DataFrame,
       maxHamming: Int = 3, hashCol: String = "dhash"): DataFrame =
-    graft.operators.Multimodal.hammingBlocks(streamHashes, hashCol, maxHamming)
+    graft.operators.Multimodal.hammingBlocks(streamHashes, hashCol,
+        graft.operators.Multimodal.PerceptualBits, maxHamming)
       .join(index, Seq("blk", "bval"))
       .filter(col("doc_id") =!= col("matched_id"))
-      .withColumn("hamming",
-        bit_count(col("dhash").bitwiseXOR(col("hash_b"))).cast("long"))
+      .withColumn("hamming", graft.operators.Multimodal.hammingDistance(
+        col("dhash"), col("hash_b")))
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_id"), col("matched_id"),
         col("blk").cast("long").as("block_pos"), col("hamming"))

@@ -90,6 +90,19 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(got.forall(_._3 <= 3L))
   }
 
+  test("the Hamming miners reject a negative radius before caching anything") {
+    // maxHamming + 1 blocks: -1 would be zero blocks of the 60- and
+    // 64-bit fingerprints
+    val hashes = spark.createDataFrame(Seq((0L, 5L), (1L, 7L)))
+      .toDF("doc_id", "dhash")
+    val before = cachedPlans
+    intercept[IllegalArgumentException](Dedup.simhashPairs(docs, -1))
+    intercept[IllegalArgumentException](Multimodal.dhashPairs(hashes, -1))
+    intercept[IllegalArgumentException](Multimodal.audioFpPairs(
+      hashes.withColumnRenamed("dhash", "fp"), -2))
+    assert(cachedPlans === before)
+  }
+
   test("clusters collapse pair graph to min-id survivors, singletons keep their id") {
     val got = Dedup.clusters(docs, Dedup.minhashPairs(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted

@@ -154,6 +154,41 @@ class DocStreamsSpec extends AnyFunSuite with SparkSpec {
     } finally query.stop()
   }
 
+  test("bandRows: a doc under 2 words has no band rows; screen hits equal the interpreted band keys'") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFunctions.{bandKeyInt, shingleHashesN}
+    val docs = spark.createDataFrame(Seq(
+      (100L, "alpha beta gamma delta epsilon zeta"),
+      (101L, "solo"), (102L, ""),
+      (103L, "one two three four five six"),
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven"),
+      (3L, "solo"), (4L, "")))
+      .toDF("doc_id", "text")
+    val (corpusDocs, arriving) =
+      (docs.filter(col("doc_id") >= 100), docs.filter(col("doc_id") < 100))
+    val index = DocStreams.bandRows(corpusDocs)
+    assert(index.select("doc_id").distinct().collect().map(_.getLong(0))
+      .sorted.toSeq === Seq(100L, 103L))
+    assert(index.count() === 8)
+    // the interpreted composition the native banding replaced
+    def interpreted(d: org.apache.spark.sql.DataFrame) = d
+      .select(col("doc_id"), shingleHashesN(col("text")).as("hs"))
+      .select(col("doc_id"), posexplode(
+        array((0 until 4).map(b => bandKeyInt(col("hs"), b)): _*))
+        .as(Seq("pos", "band")))
+    def hits(stream: org.apache.spark.sql.DataFrame,
+        idx: org.apache.spark.sql.DataFrame) =
+      stream.join(idx.select(col("doc_id").as("matched_id"), col("pos"),
+          col("band")), Seq("pos", "band"))
+        .select("doc_id", "matched_id", "pos").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val got = DocStreams.nearDupScreen(arriving, index).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    assert(got === hits(interpreted(arriving), interpreted(corpusDocs)))
+    assert(got.map(p => (p._1, p._2)).distinct === Seq((1L, 100L), (2L, 103L)))
+  }
+
   test("dhashScreen: streamed image hashes probe the block index like the batch twin") {
     import ss.implicits._
     implicit val sq = ss.sqlContext
