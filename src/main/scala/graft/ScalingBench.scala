@@ -521,16 +521,13 @@ object ScalingBench {
           else synthesize(spark, baseDir, dir, k)
           // stored-artifact invalidation (round-18 review): ModelStore
           // artifacts are keyed by md5 of the data-dir PATH
-          // (<family>_<dirKey>), and the serve-stale read default
+          // (ModelStore.dir: <family>_<md5>), and the serve-stale read default
           // would silently serve an index built against the dir's
           // PREVIOUS content after an in-place re-synthesis — drop
           // every artifact keyed by this dir so loaded-twin subjects
           // rebuild against the fresh corpus (invalidate also drops
           // each artifact's `.fp` fingerprint)
-          val key = graft.analog.ExtraAnalogs.dirKey(dir)
-          Option(new java.io.File("target/models").listFiles())
-            .foreach(_.filter(_.getName.endsWith(key))
-              .foreach(f => ModelStore.invalidate(spark, f.getPath)))
+          ModelStore.invalidateFor(spark, dir)
           java.nio.file.Files.write(marker.toPath,
             baseDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }

@@ -19,7 +19,7 @@ object Verify {
     // unexplainable oracle mismatch (Bench keeps the artifacts —
     // amortization is what it measures; unconditional: a partial
     // SPARK_GRAFT_ONLY run must not poison a later full one)
-    ModelStore.invalidate(spark, "target/models")
+    ModelStore.invalidate(spark, ModelStore.Root)
     SparkEntry.queries.filter { case (n, _) => Harness.selected(n) }
       .foreach { case (name, fn) =>
         // one scope per query: the operators' persists are released

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup, Evaluation, Multimodal, Similarity}
-import graft.sources.{Sinks, Tables}
+import graft.sources.{ModelStore, Sinks, Tables}
 
 /** LLM-training-data pipeline operators (BASELINE.json north star) over
   * the `documents` / `embeddings` tables, each paired with an exactly-
@@ -135,21 +135,6 @@ object ExtraAnalogs {
       .join(docs.select("doc_id", "lang"), "doc_id")
   }
 
-  /** Full-width key for per-data-dir stored-artifact directories:
-    * MD5 hex of the data dir path (round-14 ADVICE — the previous
-    * `math.abs(d.hashCode)` was a 32-bit key, so two data dirs could
-    * collide and silently serve a foreign same-schema artifact that
-    * ensureFrame's schema check cannot detect, and
-    * `math.abs(Int.MinValue)` is still negative). A 128-bit digest of
-    * the full path makes accidental collision impossible in practice
-    * and keeps the dir name filesystem-safe regardless of the path's
-    * characters.
-    */
-  private[graft] def dirKey(d: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
   /** The stored BM25 postings index over the %100 corpus split — the
     * build-once artifact ([[graft.sources.ModelStore.ensureFrame]])
     * the retrieval family probes: first invocation builds and saves,
@@ -164,7 +149,7 @@ object ExtraAnalogs {
   private def storedBm25Index(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.sources.ModelStore.ensureFrame(s,
-      s"target/models/bm25_idx_${dirKey(d)}",
+      ModelStore.dir("bm25_idx", d),
       graft.operators.Retrieval.bm25Index(
         Tables.documents(s, d).filter(col("doc_id") % 100 =!= 0)))
 
@@ -176,7 +161,7 @@ object ExtraAnalogs {
   private def storedCorpusSigs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.sources.ModelStore.ensureFrame(s,
-      s"target/models/mh_sigs_${dirKey(d)}",
+      ModelStore.dir("mh_sigs", d),
       Dedup.minhashSignatures(Tables.documents(s, d)
         .filter(col("doc_id") % 100 =!= 0).select("doc_id", "text")))
 
@@ -1307,7 +1292,7 @@ object ExtraAnalogs {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val oldB = graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/mh_bands_${dirKey(d)}",
+          ModelStore.dir("mh_bands", d),
           Dedup.minhashBandTable(docs.filter(col("doc_id") % 10 =!= 3)))
         Sinks.exportSorted(Dedup.minhashPairsIncremental(
           docs.filter(col("doc_id") % 10 === 3),
@@ -2346,7 +2331,7 @@ object ExtraAnalogs {
     Q("sim_ivf2_topk_loaded",
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = s"target/models/ivf2_${dirKey(d)}"
+        val dir = ModelStore.dir("ivf2", d)
         val (l1, l2) = graft.sources.ModelStore.ensureIvf2(e, dir)
         val idx = graft.sources.ModelStore.ensureFrame(s,
           s"$dir/cells", Similarity.ivf2Cells(e, l1, l2, 4))
@@ -2371,7 +2356,7 @@ object ExtraAnalogs {
         val e = Tables.embeddings(s, d)
         val corp = e.filter(col("vec_id") % 20 =!= 0)
         val arr = e.filter(col("vec_id") % 20 === 0)
-        val dir = s"target/models/ivf2u_${dirKey(d)}"
+        val dir = ModelStore.dir("ivf2u", d)
         val (l1, l2) = graft.sources.ModelStore.ensureIvf2(corp, dir)
         val idx = graft.sources.ModelStore.ensureFrame(s, s"$dir/cells",
           Similarity.ivf2Cells(corp, l1, l2, 4), Some(corp))
@@ -2726,7 +2711,7 @@ object ExtraAnalogs {
     Q("model_store_pq",
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = s"target/models/ivfpq_${dirKey(d)}"
+        val dir = ModelStore.dir("ivfpq", d)
         // concurrent trainers (guide §2.6) — same artifacts, overlapped
         val (pqM, ivfM) = Similarity.trainPqAndIvf(e)
         graft.sources.ModelStore.savePq(pqM, s"$dir/pq", s)
@@ -2796,7 +2781,7 @@ object ExtraAnalogs {
     Q("sim_rrf_topk_loaded",
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = s"target/models/ivfpq_rrf_${dirKey(d)}"
+        val dir = ModelStore.dir("ivfpq_rrf", d)
         val (pq, ivf) = graft.sources.ModelStore.ensureIvfPq(e, dir)
         // the corpus-side artifacts too: the stored inverted-list
         // frame and the stored code table — per query batch nothing
@@ -3068,7 +3053,7 @@ object ExtraAnalogs {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val codes = graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/sq_${dirKey(d)}/codes",
+          s"${ModelStore.dir("sq", d)}/codes",
           Similarity.sqCodes(e), fingerprintData = Some(e))
         Similarity.sqTopKFromCodes(codes, e)
       },
@@ -3274,7 +3259,7 @@ object ExtraAnalogs {
         val docs = Tables.documents(s, d)
         val m = graft.operators.LangId.train(
           docs.filter(col("doc_id") % 5 === 0))
-        val dir = s"target/models/langid_nb_${dirKey(d)}"
+        val dir = ModelStore.dir("langid_nb", d)
         graft.sources.ModelStore.saveNb(m, dir)
         val loaded = graft.sources.ModelStore.loadNb(s, dir)
         graft.operators.LangId.predict(docs, loaded)
@@ -3332,7 +3317,7 @@ object ExtraAnalogs {
       // scoring a shipped model, not retraining it per run
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val dir = s"target/models/langid_nb_eval_${dirKey(d)}"
+        val dir = ModelStore.dir("langid_nb_eval", d)
         val loaded = graft.sources.ModelStore.ensureNb(
           docs.filter(col("doc_id") % 5 === 0), dir)
         graft.operators.Evaluation.classPrf(
@@ -3384,7 +3369,7 @@ object ExtraAnalogs {
         import s.implicits._
         val docs = Tables.documents(s, d)
         val seed = docs.filter(col("doc_id") % 5 === 0)
-        val dir = s"target/models/stale_nb_${dirKey(d)}"
+        val dir = ModelStore.dir("stale_nb", d)
         graft.sources.ModelStore.ensureNb(seed, dir)
         val edited = seed.withColumn("text",
           when(col("doc_id") % 10 === 0, concat(col("text"), lit("~")))
@@ -3426,7 +3411,7 @@ object ExtraAnalogs {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val corp = e.filter(col("vec_id") % 20 =!= 0)
-        val dir = s"target/models/ivf2rc_${dirKey(d)}"
+        val dir = ModelStore.dir("ivf2rc", d)
         graft.sources.ModelStore.invalidate(s, dir)
         graft.sources.ModelStore.ensureIvf2(corp, dir)
         require(!graft.sources.ModelStore.refreshIfStale(s, dir, corp),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.operators.{Chunking, QualityFilters}
-import graft.sources.Tables
+import graft.sources.{ModelStore, Tables}
 
 /** Registry entries + DuckDB oracles for the rule-based quality
   * filters (graft.operators.QualityFilters) — the published C4 /
@@ -222,7 +222,7 @@ object QualityAnalogs {
       (s, d) => {
         val m = graft.sources.ModelStore.ensureNb(
           qualityNbBase(s, d).filter(col("doc_id") % 10 === 5),
-          s"target/models/qnb_${ExtraAnalogs.dirKey(d)}")
+          ModelStore.dir("qnb", d))
         // arrivals carry NO labels — the weak-label join belongs to
         // TRAINING (batch, pre-stream); the screen's own plan must
         // stay join-free (PlanAuditSpec pins it streaming-legal)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.operators.{Decontam, Evaluation, Similarity}
-import graft.sources.{Sinks, Tables}
+import graft.sources.{ModelStore, Sinks, Tables}
 
 /** Registry entries + DuckDB oracles for the EMBEDDING-SPACE hygiene
   * operators: semantic decontamination (the paraphrase-leakage screen
@@ -616,7 +616,7 @@ object SemanticAnalogs {
             "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,cast(vec_id as int),0)"))
           .select("vec_id", "embedding", "ts")
         val idx = graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/knncls_${ExtraAnalogs.dirKey(d)}/index",
+          s"${ModelStore.dir("knncls", d)}/index",
           Similarity.buildIndexKeeping(
             embs.filter(col("vec_id") % 20 =!= 0), 4, "label"),
           fingerprintData = Some(embs))
@@ -714,7 +714,7 @@ object SemanticAnalogs {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/knnd_${ExtraAnalogs.dirKey(d)}/edges",
+          s"${ModelStore.dir("knnd", d)}/edges",
           Similarity.nnDescentRound(e,
             Similarity.knnGraph(e, k = 5), k = 5),
           fingerprintData = Some(e))
@@ -757,7 +757,7 @@ object SemanticAnalogs {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val g = graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/knnd_${ExtraAnalogs.dirKey(d)}/edges",
+          s"${ModelStore.dir("knnd", d)}/edges",
           Similarity.nnDescentRound(e,
             Similarity.knnGraph(e, k = 5), k = 5),
           fingerprintData = Some(e))
@@ -861,7 +861,7 @@ object SemanticAnalogs {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val g = graft.sources.ModelStore.ensureFrame(s,
-          s"target/models/knng_${ExtraAnalogs.dirKey(d)}/edges",
+          s"${ModelStore.dir("knng", d)}/edges",
           Similarity.knnGraph(e, k = 5), fingerprintData = Some(e))
         Similarity.labelPropagateFromGraph(g, e)
       },

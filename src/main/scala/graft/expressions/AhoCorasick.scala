@@ -1,10 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Aho–Corasick multi-pattern automaton (Aho & Corasick, CACM 1975) —
   * the blocklist-screening primitive behind
@@ -175,7 +174,8 @@ object AhoCorasick {
   * no boxing beyond the transition map lookups, no regex engine.
   */
 case class BlocklistHits(child: Expression,
-    automaton: AhoCorasick.Automaton) extends UnaryExpression {
+    automaton: AhoCorasick.Automaton)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
@@ -183,11 +183,7 @@ case class BlocklistHits(child: Expression,
 
   override def prettyName: String = "blocklist_hits"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     automaton.countHits(
@@ -272,19 +268,16 @@ object BlocklistTrie {
 
 /** Per-row leftmost-longest blocklist redaction (see [[BlocklistTrie]]). */
 case class BlocklistScrub(child: Expression,
-    trie: BlocklistTrie.Trie) extends UnaryExpression {
+    trie: BlocklistTrie.Trie)
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+  override def dataType: DataType = StringType
 
   override def nullIntolerant: Boolean = true
 
   override def prettyName: String = "blocklist_scrub"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     trie.scrub(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])

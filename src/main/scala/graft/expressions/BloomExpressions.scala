@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -26,7 +25,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * of the same key set would need GBs.
   */
 case class BloomMightContain(child: Expression, filter: BloomFilter)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BooleanType
 
@@ -34,10 +33,7 @@ case class BloomMightContain(child: Expression, filter: BloomFilter)
 
   override def prettyName: String = "bloom_might_contain"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a BIGINT key, got ${child.dataType.sql}")
+  override def inputTypes: Seq[DataType] = Seq(LongType)
 
   override def nullSafeEval(v: Any): Any =
     filter.mightContainLong(v.asInstanceOf[Long])

@@ -1,10 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Byte-pair-encoding vocabulary: a FIXED, ordered merge table
   * (Sennrich et al. 2016, "Neural Machine Translation of Rare Words
@@ -138,7 +137,8 @@ object Bpe {
   * runs behind a vocabulary memo, so hot (Zipf-head) words cost a
   * hash probe.
   */
-case class BpeCount(child: Expression) extends UnaryExpression {
+case class BpeCount(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
@@ -146,11 +146,7 @@ case class BpeCount(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "bpe_token_count"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     Bpe.count(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])

@@ -1,10 +1,10 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Runtime for [[HilbertIndex]] — plain object so codegen calls a
   * static forwarder (the [[CharGramHash]] pattern).
@@ -59,7 +59,7 @@ object HilbertCurve {
   * the same anti-blowup discipline, in SQL).
   */
 case class HilbertIndex(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
 
   override def dataType: DataType = LongType
@@ -68,12 +68,7 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
 
   override def prettyName: String = "hilbert_index"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (bigint, bigint), got " +
-        s"${left.dataType.sql}, ${right.dataType.sql}")
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     HilbertCurve.index(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
@@ -138,6 +133,14 @@ object HilbertCurveN {
     }
     d
   }
+
+  /** [[index]] of an array of coordinates, which must hold `dims`. */
+  def index(coords: ArrayData, dims: Int, bits: Int): Long = {
+    val xs = coords.toLongArray()
+    if (xs.length != dims) throw new IllegalArgumentException(
+      s"hilbert_index_n: expected $dims coordinates, got ${xs.length}")
+    index(xs, bits)
+  }
 }
 
 /** n-dimensional Hilbert index (round 13 — lifts the 2-D design
@@ -150,7 +153,7 @@ object HilbertCurveN {
   * anti-blowup discipline).
   */
 case class HilbertIndexN(child: Expression, dims: Int, bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(dims >= 2, s"dims must be >= 2, got $dims")
   require(bits >= 1 && dims * bits <= 62,
     s"dims*bits must be in [1,62] to fit int64, got $dims x $bits")
@@ -161,31 +164,14 @@ case class HilbertIndexN(child: Expression, dims: Int, bits: Int)
 
   override def prettyName: String = "hilbert_index_n"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<bigint>, got ${other.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    require(xs.length == dims,
-      s"$prettyName: expected $dims coordinates, got ${xs.length}")
-    HilbertCurveN.index(xs, bits)
-  }
+  override def nullSafeEval(a: Any): Any =
+    HilbertCurveN.index(a.asInstanceOf[ArrayData], dims, bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, xs => s"""
-       |long[] coords = $xs.toLongArray();
-       |if (coords.length != $dims) {
-       |  throw new IllegalArgumentException(
-       |    "hilbert_index_n: expected $dims coordinates, got "
-       |      + coords.length);
-       |}
-       |${ev.value} = graft.expressions.HilbertCurveN.index(coords, $bits);
-     """.stripMargin)
+    nullSafeCodeGen(ctx, ev, xs =>
+      s"${ev.value} = graft.expressions.HilbertCurveN.index($xs, $dims, $bits);")
 
   override protected def withNewChildInternal(
       newChild: Expression): HilbertIndexN = copy(child = newChild)

@@ -111,16 +111,16 @@ case class MmrSelect(child: Expression, k: Int) extends UnaryExpression {
 
   override def prettyName: String = "mmr_select"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(a, b, c)), _)
-        if a.dataType == LongType && b.dataType == LongType &&
-          c.dataType.isInstanceOf[ArrayType] &&
-          c.dataType.asInstanceOf[ArrayType].elementType == DoubleType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<struct<bigint, bigint, array<double>>>, " +
-        s"got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputTypes.check(this, child.dataType match {
+      case ArrayType(StructType(Array(a, b, c)), _) =>
+        a.dataType == LongType && b.dataType == LongType &&
+          (c.dataType match {
+            case ArrayType(DoubleType, _) => true
+            case _ => false
+          })
+      case _ => false
+    }, "array<struct<bigint, bigint, array<double>>>")
 
   override def nullSafeEval(a: Any): Any =
     MmrRuntime.select(a.asInstanceOf[ArrayData], k)

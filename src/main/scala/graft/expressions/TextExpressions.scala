@@ -1,51 +1,30 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** Native `bits`-wide SimHash fold over a pre-hashed word array.
-  *
-  * Replaces the built-in composition of `bits` per-bit
-  * `aggregate(hashes, 0, acc + ((h >> b) & 1) * 2 - 1)` folds — higher-
-  * order functions are interpreted (no codegen, no subexpression
-  * elimination), so that shape re-walks the array `bits` times with
-  * lambda dispatch per element. This expression walks it ONCE inside
-  * whole-stage codegen, updating `bits` counters.
-  *
-  * Semantics are bit-identical to the folds it replaces (and to the
-  * DuckDB oracle's per-bit `list_sum` CASE): bit b of the result is set
-  * iff strictly more element-hashes have bit b set than clear. Input
-  * elements are non-null by construction (md5-derived hashes of
-  * non-null tokens). Width is capped at 60 so the signature (and the
-  * 60-bit word hashes feeding it) stay positive in any engine's int64.
+/** Runtime for the array kernels [[SimhashFold]], [[MinhashBands]],
+  * [[SortedIntersectCount]], [[ModalRunLength]] and [[WinnowMins]] — a
+  * plain object, so each expression's generated code is one static
+  * call into the code its `eval` runs (the [[GramHash]] pattern).
   */
-case class SimhashFold(child: Expression, bits: Int = 16)
-    extends UnaryExpression {
-  require(bits >= 1 && bits <= 60, s"simhash width must be in [1,60], got $bits")
+object TextKernels {
+  private val MinhashA = graft.functions.TextFunctions.MinhashA.toArray
+  private val MinhashB = graft.functions.TextFunctions.MinhashB.toArray
+  private val MinhashP = graft.functions.TextFunctions.MinhashP
 
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "simhash_fold"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<bigint>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  /** Bit b of the result is set iff strictly more of the hashes have
+    * bit b set than clear, for b below `bits`.
+    */
+  def simhash(hs: ArrayData, bits: Int): Long = {
+    val n = hs.numElements()
     val counts = new Array[Int](bits)
     var i = 0
     while (i < n) {
-      val h = arr.getLong(i)
+      val h = hs.getLong(i)
       var b = 0
       while (b < bits) {
         counts(b) += (((h >>> b) & 1L) * 2 - 1).toInt
@@ -62,71 +41,16 @@ case class SimhashFold(child: Expression, bits: Int = 16)
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val counts = ctx.freshName("counts")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $x.numElements();
-         |int[] $counts = new int[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $x.getLong($i);
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    $counts[$b] += (int) ((($h >>> $b) & 1L) * 2 - 1);
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < $bits; $b++) {
-         |  if ($counts[$b] > 0) $out |= 1L << $b;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashFold =
-    copy(child = newChild)
-}
-
-/** Native MinHash banding over a pre-hashed shingle array: all 8
-  * universal-hash permutation minima in ONE array walk, paired into 4
-  * LSH band keys (sig[2b]·1000003 + sig[2b+1]).
-  *
-  * Replaces 8 interpreted `array_min(transform(hs, a·h+b mod p))`
-  * scans (higher-order functions carry no codegen). Integer-exact:
-  * identical values to the composition it replaces and to the DuckDB
-  * oracle's `list_min(list_transform(...))` fragments. Empty input →
-  * NULL result (the composed form yields per-band nulls; both shapes
-  * produce null band keys downstream, which never join).
-  */
-case class MinhashBands(child: Expression) extends UnaryExpression {
-  import graft.functions.TextFunctions.{MinhashA, MinhashB, MinhashP}
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "minhash_bands"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<bigint>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  /** The 8 permutation minima paired into 4 band keys; null for an
+    * empty array.
+    */
+  def minhashBands(hs: ArrayData): ArrayData = {
+    val n = hs.numElements()
     if (n == 0) return null
     val mins = Array.fill(8)(Long.MaxValue)
     var i = 0
     while (i < n) {
-      val h = arr.getLong(i)
+      val h = hs.getLong(i)
       var k = 0
       while (k < 8) {
         val v = (MinhashA(k) * h + MinhashB(k)) % MinhashP
@@ -135,89 +59,14 @@ case class MinhashBands(child: Expression) extends UnaryExpression {
       }
       i += 1
     }
-    val bands = Array.tabulate(4)(b => mins(2 * b) * 1000003L + mins(2 * b + 1))
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(bands)
+    UnsafeArrayData.fromPrimitiveArray(
+      Array.tabulate(4)(b => mins(2 * b) * 1000003L + mins(2 * b + 1)))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val as = MinhashA.map(a => s"${a}L").mkString(", ")
-    val bs = MinhashB.map(b => s"${b}L").mkString(", ")
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val mins = ctx.freshName("mins")
-      val bands = ctx.freshName("bands")
-      val aArr = ctx.freshName("aArr")
-      val bArr = ctx.freshName("bArr")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final long[] $aArr = new long[] {$as};
-         |  final long[] $bArr = new long[] {$bs};
-         |  long[] $mins = new long[8];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $x.getLong($i);
-         |    for (int $k = 0; $k < 8; $k++) {
-         |      long $v = ($aArr[$k] * $h + $bArr[$k]) % ${MinhashP}L;
-         |      if ($v < $mins[$k]) $mins[$k] = $v;
-         |    }
-         |  }
-         |  long[] $bands = new long[4];
-         |  for (int $b = 0; $b < 4; $b++) {
-         |    $bands[$b] = $mins[2 * $b] * 1000003L + $mins[2 * $b + 1];
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |      .fromPrimitiveArray($bands);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashBands =
-    copy(child = newChild)
-}
-
-/** Count of common elements between two SORTED string arrays with
-  * distinct elements — a linear merge walk in codegen, replacing
-  * `size(array_intersect(a, b))` whose per-call hash-set build
-  * dominates pairwise set-similarity verification (each candidate pair
-  * pays O(|a|+|b|) hashing + allocation; the merge pays O(|a|+|b|)
-  * comparisons and allocates nothing).
-  *
-  * Contract: inputs ascending-sorted (`array_sort`) and duplicate-free
-  * (`array_distinct` upstream) — exactly what [[graft.functions
-  * .TextFunctions.wordSet]]/`shingles2` produce. Under that contract
-  * the result equals `size(array_intersect(a, b))` element-for-element,
-  * so DuckDB oracles (`len(list_intersect(...))`) are unaffected.
-  */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.StringType, _),
-            ArrayType(org.apache.spark.sql.types.StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs two array<string> args, got ${l.sql}, ${r.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** Common elements of two ascending, duplicate-free string arrays,
+    * by one merge walk.
+    */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Long = {
     val (nx, ny) = (x.numElements(), y.numElements())
     var i = 0
     var j = 0
@@ -231,59 +80,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cmp = ctx.freshName("cmp")
-      s"""
-         |int $nx = $x.numElements();
-         |int $ny = $y.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  int $cmp = $x.getUTF8String($i).compareTo($y.getUTF8String($j));
-         |  if ($cmp == 0) { $c++; $i++; $j++; }
-         |  else if ($cmp < 0) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Longest run of equal adjacent elements in a SORTED string array —
-  * i.e. the modal element's occurrence count. One native array walk
-  * inside whole-stage codegen; replaces the interpreted struct-state
-  * `aggregate` fold the repetition profiler started with (higher-order
-  * functions don't codegen, and a per-element struct copy made it the
-  * operator's dominant cost).
-  *
-  * Contract: input sorted (equal elements adjacent — what
-  * `array_sort` produces). Empty array → 0.
-  */
-case class ModalRunLength(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "modal_run_length"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** Longest run of equal adjacent elements of a sorted string array;
+    * nulls count as one value.
+    */
+  def modalRunLength(arr: ArrayData): Long = {
     val n = arr.numElements()
     var best = 0L
     var run = 0L
@@ -305,79 +105,12 @@ case class ModalRunLength(child: Expression) extends UnaryExpression {
     best
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val run = ctx.freshName("run")
-      val best = ctx.freshName("best")
-      val same = ctx.freshName("same")
-      val cn = ctx.freshName("curNull")
-      val pn = ctx.freshName("prevNull")
-      s"""
-         |int $n = $x.numElements();
-         |long $best = 0L; long $run = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  boolean $same = false;
-         |  if ($i > 0) {
-         |    boolean $cn = $x.isNullAt($i);
-         |    boolean $pn = $x.isNullAt($i - 1);
-         |    $same = ($cn || $pn)
-         |      ? ($cn && $pn)
-         |      : $x.getUTF8String($i).equals($x.getUTF8String($i - 1));
-         |  }
-         |  $run = $same ? $run + 1L : 1L;
-         |  if ($run > $best) { $best = $run; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ModalRunLength = copy(child = newChild)
-}
-
-/** Winnowing fingerprint extraction (Schleimer et al., SIGMOD'03) over
-  * a pre-hashed positional k-gram array: every `win`-wide sliding
-  * window's minimum, deduplicated and ascending-sorted.
-  *
-  * Replaces the built-in `transform(sequence(1, n-win+1),
-  * i -> array_min(slice(hs, i, win)))` shape, which is quadratic in
-  * practice: higher-order functions are interpreted with no
-  * subexpression elimination, so the `hs` subtree — one md5 per k-gram
-  * — re-evaluates per WINDOW POSITION, and each `slice` allocates.
-  * Here `hs` is the child (evaluated once per row) and the window
-  * minima come from one monotonic-deque pass — O(n) total, inside
-  * whole-stage codegen. Measured on the sf0.1 `text_winnow` query:
-  * 43.5 s → sub-second.
-  *
-  * Short-doc conventions (identical to the composed form and the
-  * DuckDB oracle CTE): fewer than `win` hashes → one fingerprint (the
-  * global min); empty input → empty array. Both fall out of clamping
-  * the window width to `min(win, n)`.
-  */
-case class WinnowMins(child: Expression, win: Int = 4)
-    extends UnaryExpression {
-  require(win >= 1, s"winnow window must be >= 1, got $win")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "winnow_mins"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<bigint>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** Ascending distinct minima of every `min(win, n)`-wide window, by
+    * one monotonic-deque pass.
+    */
+  def winnowMins(arr: ArrayData, win: Int): ArrayData = {
     val n = arr.numElements()
-    if (n == 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Long])
+    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
     val w = math.min(win, n)
     val m = n - w + 1
     val mins = new Array[Long](m)
@@ -402,57 +135,200 @@ case class WinnowMins(child: Expression, win: Int = 4)
       if (mins(r) != mins(out - 1)) { mins(out) = mins(r); out += 1 }
       r += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(mins, out))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(mins, out))
   }
+}
+
+/** Native `bits`-wide SimHash fold over a pre-hashed word array.
+  *
+  * Replaces the built-in composition of `bits` per-bit
+  * `aggregate(hashes, 0, acc + ((h >> b) & 1) * 2 - 1)` folds — higher-
+  * order functions are interpreted (no codegen, no subexpression
+  * elimination), so that shape re-walks the array `bits` times with
+  * lambda dispatch per element. This expression walks it ONCE
+  * ([[TextKernels.simhash]]), updating `bits` counters.
+  *
+  * Semantics are bit-identical to the folds it replaces (and to the
+  * DuckDB oracle's per-bit `list_sum` CASE): bit b of the result is set
+  * iff strictly more element-hashes have bit b set than clear. Input
+  * elements are non-null by construction (md5-derived hashes of
+  * non-null tokens). Width is capped at 60 so the signature (and the
+  * 60-bit word hashes feeding it) stay positive in any engine's int64.
+  */
+case class SimhashFold(child: Expression, bits: Int = 16)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(bits >= 1 && bits <= 60, s"simhash width must be in [1,60], got $bits")
+
+  override def dataType: DataType = LongType
+
+  override def nullIntolerant: Boolean = true
+
+  override def prettyName: String = "simhash_fold"
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.simhash(input.asInstanceOf[ArrayData], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val w = ctx.freshName("w")
-      val m = ctx.freshName("m")
-      val mins = ctx.freshName("mins")
-      val dq = ctx.freshName("dq")
-      val head = ctx.freshName("head")
-      val tail = ctx.freshName("tail")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      val r = ctx.freshName("r")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n == 0) {
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |      .fromPrimitiveArray(new long[0]);
-         |} else {
-         |  int $w = $win < $n ? $win : $n;
-         |  int $m = $n - $w + 1;
-         |  long[] $mins = new long[$m];
-         |  int[] $dq = new int[$n];
-         |  int $head = 0; int $tail = 0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $x.getLong($i);
-         |    while ($tail > $head && $x.getLong($dq[$tail - 1]) >= $h) $tail--;
-         |    $dq[$tail++] = $i;
-         |    if ($dq[$head] <= $i - $w) $head++;
-         |    if ($i >= $w - 1) $mins[$i - $w + 1] = $x.getLong($dq[$head]);
-         |  }
-         |  java.util.Arrays.sort($mins);
-         |  int $out = 1;
-         |  for (int $r = 1; $r < $m; $r++) {
-         |    if ($mins[$r] != $mins[$out - 1]) $mins[$out++] = $mins[$r];
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |      .fromPrimitiveArray(java.util.Arrays.copyOf($mins, $out));
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.expressions.TextKernels.simhash($x, $bits);")
+
+  override protected def withNewChildInternal(newChild: Expression): SimhashFold =
+    copy(child = newChild)
+}
+
+/** Native MinHash banding over a pre-hashed shingle array: all 8
+  * universal-hash permutation minima in ONE array walk, paired into 4
+  * LSH band keys (sig[2b]·1000003 + sig[2b+1]).
+  *
+  * Replaces 8 interpreted `array_min(transform(hs, a·h+b mod p))`
+  * scans (higher-order functions carry no codegen). Integer-exact:
+  * identical values to the composition it replaces and to the DuckDB
+  * oracle's `list_min(list_transform(...))` fragments. Empty input →
+  * NULL result (the composed form yields per-band nulls; both shapes
+  * produce null band keys downstream, which never join).
+  */
+case class MinhashBands(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullable: Boolean = true
+
+  override def nullIntolerant: Boolean = true
+
+  override def prettyName: String = "minhash_bands"
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.minhashBands(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x => s"""
+       |${ev.value} = graft.expressions.TextKernels.minhashBands($x);
+       |${ev.isNull} = ${ev.value} == null;
+     """.stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashBands =
+    copy(child = newChild)
+}
+
+/** Count of common elements between two SORTED string arrays with
+  * distinct elements — a linear merge walk
+  * ([[TextKernels.sortedIntersectCount]]), replacing
+  * `size(array_intersect(a, b))` whose per-call hash-set build
+  * dominates pairwise set-similarity verification (each candidate pair
+  * pays O(|a|+|b|) hashing + allocation; the merge pays O(|a|+|b|)
+  * comparisons and allocates nothing).
+  *
+  * Contract: inputs ascending-sorted (`array_sort`) and duplicate-free
+  * (`array_distinct` upstream) — exactly what [[graft.functions
+  * .TextFunctions.wordSet]]/`shingles2` produce. Under that contract
+  * the result equals `size(array_intersect(a, b))` element-for-element,
+  * so DuckDB oracles (`len(list_intersect(...))`) are unaffected.
+  */
+case class SortedIntersectCount(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with ExpectsInputTypes {
+
+  override def dataType: DataType = LongType
+
+  override def nullIntolerant: Boolean = true
+
+  override def prettyName: String = "sorted_intersect_count"
+
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    TextKernels.sortedIntersectCount(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expressions.TextKernels.sortedIntersectCount($x, $y);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Longest run of equal adjacent elements in a SORTED string array —
+  * i.e. the modal element's occurrence count. One native array walk
+  * ([[TextKernels.modalRunLength]]); replaces the interpreted
+  * struct-state `aggregate` fold the repetition profiler started with
+  * (higher-order functions don't codegen, and a per-element struct
+  * copy made it the operator's dominant cost).
+  *
+  * Contract: input sorted (equal elements adjacent — what
+  * `array_sort` produces). Empty array → 0.
+  */
+case class ModalRunLength(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def dataType: DataType = LongType
+
+  override def nullIntolerant: Boolean = true
+
+  override def prettyName: String = "modal_run_length"
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.modalRunLength(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.expressions.TextKernels.modalRunLength($x);")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): ModalRunLength = copy(child = newChild)
+}
+
+/** Winnowing fingerprint extraction (Schleimer et al., SIGMOD'03) over
+  * a pre-hashed positional k-gram array: every `win`-wide sliding
+  * window's minimum, deduplicated and ascending-sorted.
+  *
+  * Replaces the built-in `transform(sequence(1, n-win+1),
+  * i -> array_min(slice(hs, i, win)))` shape, which is quadratic in
+  * practice: higher-order functions are interpreted with no
+  * subexpression elimination, so the `hs` subtree — one md5 per k-gram
+  * — re-evaluates per WINDOW POSITION, and each `slice` allocates.
+  * Here `hs` is the child (evaluated once per row) and the window
+  * minima come from one monotonic-deque pass
+  * ([[TextKernels.winnowMins]]) — O(n) total. Measured on the sf0.1
+  * `text_winnow` query: 43.5 s → sub-second.
+  *
+  * Short-doc conventions (identical to the composed form and the
+  * DuckDB oracle CTE): fewer than `win` hashes → one fingerprint (the
+  * global min); empty input → empty array. Both fall out of clamping
+  * the window width to `min(win, n)`.
+  */
+case class WinnowMins(child: Expression, win: Int = 4)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(win >= 1, s"winnow window must be >= 1, got $win")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullIntolerant: Boolean = true
+
+  override def prettyName: String = "winnow_mins"
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.winnowMins(input.asInstanceOf[ArrayData], win)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.expressions.TextKernels.winnowMins($x, $win);")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowMins =
     copy(child = newChild)
 }
+
 
 /** Runtime for [[GramHashes]] — a plain object so generated code can
   * call the static forwarder. One thread-local MessageDigest (md5
@@ -551,7 +427,8 @@ object GramHash {
   * need occurrences, not the set).
   */
 case class GramHashes(child: Expression, n: Int, distinct: Boolean,
-    hexDigits: Int = 15, mod: Long = 0L) extends UnaryExpression {
+    hexDigits: Int = 15, mod: Long = 0L)
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"n must be >= 1, got $n")
   require(hexDigits >= 1 && hexDigits <= 15,
     s"hexDigits must be in [1,15] (signed-int64 portability), got $hexDigits")
@@ -563,12 +440,7 @@ case class GramHashes(child: Expression, n: Int, distinct: Boolean,
 
   override def prettyName: String = "gram_hashes"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     GramHash.hashes(input.asInstanceOf[ArrayData], n, distinct, hexDigits, mod)
@@ -629,7 +501,7 @@ object CharGramHash {
   * composed form unchanged.
   */
 case class CharGramBuckets(child: Expression, n: Int, mod: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"n must be >= 1, got $n")
   require(mod >= 1L, s"mod must be >= 1, got $mod")
 
@@ -639,11 +511,7 @@ case class CharGramBuckets(child: Expression, n: Int, mod: Long)
 
   override def prettyName: String = "char_gram_buckets"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     CharGramHash.buckets(
@@ -676,19 +544,6 @@ object UnicodeNorm {
   }
 }
 
-/** Unicode NFC normalization (UAX #15 canonical composition) — the
-  * text-canonicalization step an exact-dedup pipeline needs before
-  * hashing: "é" as U+00E9 and as "e" + U+0301 are byte-different,
-  * hash-different, and visually identical, so un-normalized corpora
-  * leak duplicates past every byte-level screen.
-  *
-  * Implementation is the JDK's `java.text.Normalizer` (ICU-equivalent
-  * NFC per the standard); the DuckDB oracle's `nfc_normalize` is the
-  * same UAX #15 transform, verified byte-identical in
-  * TextExpressionsSpec and through the `text_normalize_nfc` oracle
-  * query. ASCII input short-circuits (identity) without leaving
-  * UTF8String.
-  */
 /** Runtime for [[ScriptCounts]]: one code-point walk classifying each
   * character into a fixed script bucket. Buckets are contiguous
   * codepoint ranges only — the whole classification is replayable in
@@ -744,7 +599,8 @@ object ScriptCount {
   * pins Spark's regex dialect into the contract; contiguous ranges
   * keep the law engine-portable.
   */
-case class ScriptCounts(child: Expression) extends UnaryExpression {
+case class ScriptCounts(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -752,11 +608,7 @@ case class ScriptCounts(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "script_counts"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     ScriptCount.counts(
@@ -770,19 +622,29 @@ case class ScriptCounts(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+/** Unicode NFC normalization (UAX #15 canonical composition) — the
+  * text-canonicalization step an exact-dedup pipeline needs before
+  * hashing: "é" as U+00E9 and as "e" + U+0301 are byte-different,
+  * hash-different, and visually identical, so un-normalized corpora
+  * leak duplicates past every byte-level screen.
+  *
+  * Implementation is the JDK's `java.text.Normalizer` (ICU-equivalent
+  * NFC per the standard); the DuckDB oracle's `nfc_normalize` is the
+  * same UAX #15 transform, verified byte-identical in
+  * TextExpressionsSpec and through the `text_normalize_nfc` oracle
+  * query. ASCII input short-circuits (identity) without leaving
+  * UTF8String.
+  */
+case class NfcNormalize(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+  override def dataType: DataType = StringType
 
   override def nullIntolerant: Boolean = true
 
   override def prettyName: String = "nfc_normalize"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     UnicodeNorm.nfc(

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -39,7 +39,8 @@ case class TopKAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0,
     distinct: Boolean = false)
-  extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, String)]] {
+  extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, String)]]
+  with ExpectsInputTypes {
 
   require(k > 0, "top_k needs k > 0")
 
@@ -117,15 +118,7 @@ case class TopKAgg(
     buf
   }
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (score.dataType == DoubleType && label.dataType == StringType)
-      TypeCheckSuccess
-    else TypeCheckFailure(
-      s"top_k needs (double, string), got " +
-        s"(${score.dataType.sql}, ${label.dataType.sql})")
-  }
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, StringType)
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType), StructField("label", StringType))))

@@ -1,19 +1,57 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
+
+/** Runtime for [[VecDot]] and [[VecDotLong]] — a plain object, so the
+  * generated code is one static call into the loop `eval` runs.
+  */
+object VectorKernels {
+
+  /** Left-to-right double fold of `x[i]·y[i]` over the shorter
+    * length; each side's elements are read as float or double.
+    * Generated code passes the two flags as literals, so the JIT
+    * folds the per-element choice away.
+    */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0d
+    var i = 0
+    while (i < n) {
+      val xe = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val ye = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      acc += xe * ye
+      i += 1
+    }
+    acc
+  }
+
+  /** Exact 64-bit `Σ x[i]·y[i]` over the shorter length. */
+  def dotLong(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += x.getLong(i) * y.getLong(i)
+      i += 1
+    }
+    acc
+  }
+}
 
 /** Native Catalyst expression for the embedding hot path.
   *
   * The built-in route (`transform(cast) → zip_with(*) → aggregate(+)`)
   * is correct but interpreted: higher-order functions carry no codegen,
   * so every candidate pair pays lambda dispatch per element plus two
-  * intermediate arrays. This expression generates a tight Java loop
-  * (whole-stage-codegen-able) and allocates nothing.
+  * intermediate arrays. This expression's generated code is one call
+  * into [[VectorKernels.dot]] (whole-stage-codegen-able) and allocates
+  * nothing.
   *
   * Semantics are IDENTICAL to the fold it replaces — left-to-right
   * double accumulation over `(double) a[i] * (double) b[i]` — so the
@@ -39,48 +77,19 @@ case class VecDot(left: Expression, right: Expression)
   @transient private lazy val leftFloat = floatElem(left)
   @transient private lazy val rightFloat = floatElem(right)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputTypes.check(this, children.forall(_.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
       case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<float>/array<double> args, " +
-        s"got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
+    }), "array<float>/array<double> args")
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0d
-    var i = 0
-    while (i < n) {
-      val xe = if (leftFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val ye = if (rightFloat) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xe * ye
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], leftFloat,
+      b.asInstanceOf[ArrayData], rightFloat)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (leftFloat) "getFloat" else "getDouble"
-    val rGet = if (rightFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double) $x.$lGet($i) * (double) $y.$rGet($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => s"${ev.value} = " +
+      s"graft.expressions.VectorKernels.dot($x, $leftFloat, $y, $rightFloat);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
@@ -88,13 +97,13 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 /** [[VecDot]]'s integer twin for the compressed-domain hot paths
-  * (SQ8 codes, JL sketches): a tight long-accumulating loop over two
-  * array<long> columns. Replaces `aggregate(zip_with(_*_), 0L, _+_)`
-  * — same exact 64-bit result (integer addition is associative), but
-  * codegen'd with zero intermediate arrays where the higher-order
-  * built-ins interpret a lambda per element. The caller owns the
-  * no-overflow argument (SQ8: |dot·scale| ≲ 10¹²; sketches: ≤ 4·10¹⁵
-  * by the 2-bit downshift).
+  * (SQ8 codes, JL sketches): one long-accumulating loop
+  * ([[VectorKernels.dotLong]]) over two array<long> columns. Replaces
+  * `aggregate(zip_with(_*_), 0L, _+_)` — same exact 64-bit result
+  * (integer addition is associative), but codegen'd with zero
+  * intermediate arrays where the higher-order built-ins interpret a
+  * lambda per element. The caller owns the no-overflow argument (SQ8:
+  * |dot·scale| ≲ 10¹²; sketches: ≤ 4·10¹⁵ by the 2-bit downshift).
   *
   * CALLER CONTRACT — equal dimensions. Mismatched arrays TRUNCATE to
   * the shorter length (the loop bound is min(|a|, |b|)), unlike the
@@ -106,7 +115,7 @@ case class VecDot(left: Expression, right: Expression)
   * `size(a) = size(b)` or accept a plausible-but-partial dot.
   */
 case class VecDotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
@@ -114,62 +123,117 @@ case class VecDotLong(left: Expression, right: Expression)
 
   override def prettyName: String = "vec_dot_long"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<bigint> args, " +
-        s"got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $x.getLong($i) * $y.getLong($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expressions.VectorKernels.dotLong($x, $y);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDotLong =
     copy(left = newLeft, right = newRight)
 }
 
+/** The PQ codebook kernel behind [[PqEncode]] and [[PqLut]]: `model`'s
+  * m subspaces of ksub sub-centroids (each subDim wide) as a flattened
+  * double image `[s·ksub + c]` with each sub-centroid's full-width
+  * ‖c‖² (the driver-side left-to-right sums the literal tree used).
+  *
+  * Subspace s's distance is d(c) = Σ vs·vs − 2·Σ vs·c + ‖c‖² over the
+  * slice vs of the input at s·subDim, with [[VecDot]]'s left-to-right
+  * double folds and a truncating long cast; the cross and self terms
+  * run over the slice's actual length, so short inputs reproduce what
+  * `slice` + `vec_dot` + literal Σc² computed.
+  */
+final class PqCodebook(model: Seq[Seq[Seq[Long]]]) extends Serializable {
+  private val m = model.size
+  private val ksub = model.head.size
+  private val subDim = model.head.head.size
+  private val cents: Array[Array[Double]] =
+    model.flatMap(_.map(_.map(_.toDouble).toArray)).toArray
+  private val ccs: Array[Double] = cents.map(cd => cd.map(x => x * x).sum)
+
+  private def sliceLen(vd: ArrayData, s: Int): Int =
+    math.max(0, math.min(vd.numElements() - s * subDim, subDim))
+
+  /** Σ x² over subspace s's slice — shared by its ksub distances. */
+  private def selfDot(vd: ArrayData, s: Int): Double = {
+    val start = s * subDim
+    val nv = sliceLen(vd, s)
+    var dxx = 0.0d
+    var i = 0
+    while (i < nv) {
+      val x = vd.getDouble(start + i); dxx += x * x; i += 1
+    }
+    dxx
+  }
+
+  /** d(c) of subspace s, given the slice's [[selfDot]] `dxx`. */
+  def distance(vd: ArrayData, s: Int, c: Int, dxx: Double): Long = {
+    val start = s * subDim
+    val nv = sliceLen(vd, s)
+    val cd = cents(s * ksub + c)
+    var dxc = 0.0d
+    var j = 0
+    while (j < nv) {
+      dxc += vd.getDouble(start + j) * cd(j); j += 1
+    }
+    (dxx - 2.0d * dxc + ccs(s * ksub + c)).toLong
+  }
+
+  /** struct(codes, recon): per subspace the argmin centroid (ties to
+    * the lower cent_id), and the sum of the chosen distances.
+    */
+  def encode(vd: ArrayData): InternalRow = {
+    val codes = new Array[Int](m)
+    var recon = 0L
+    var s = 0
+    while (s < m) {
+      val dxx = selfDot(vd, s)
+      var bestD = Long.MaxValue
+      var c = 0
+      while (c < ksub) {
+        val d = distance(vd, s, c, dxx)
+        if (d < bestD) { bestD = d; codes(s) = c }
+        c += 1
+      }
+      recon += bestD
+      s += 1
+    }
+    new GenericInternalRow(Array[Any](UnsafeArrayData.fromPrimitiveArray(codes), recon))
+  }
+
+  /** Every subspace distance, subspace-major: the m×ksub ADC table. */
+  def lut(vd: ArrayData): ArrayData = {
+    val out = new Array[Long](m * ksub)
+    var s = 0
+    while (s < m) {
+      val dxx = selfDot(vd, s)
+      var c = 0
+      while (c < ksub) {
+        out(s * ksub + c) = distance(vd, s, c, dxx)
+        c += 1
+      }
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
 /** Native PQ encoder — the whole per-row codebook argmin in ONE
-  * compiled call: for each of the m subspaces, the squared-L2 to all
-  * ksub sub-centroids and the argmin (ties to the lower cent_id),
-  * returning struct(codes array<int>, recon bigint).
+  * compiled call ([[PqCodebook.encode]]): for each of the m subspaces,
+  * the squared-L2 to all ksub sub-centroids and the argmin (ties to
+  * the lower cent_id), returning struct(codes array<int>, recon
+  * bigint).
   *
   * Replaces the composed tree it is value-identical to
   * ([[graft.operators.Similarity]]'s previous `least(struct(dist,c)…)`
-  * over m·ksub literal-array dot expansions): per subspace slice vs,
-  * d(c) = Σ vs·vs − 2·Σ vs·c + Σ c² with the SAME left-to-right double
-  * fold as [[VecDot]] and the same truncating long cast; the cross/self
-  * terms run over the slice's actual length and the ‖c‖² term over the
-  * full sub-centroid (exactly what `slice`+`vec_dot`+literal-Σc² did on
-  * short inputs), so even degenerate non-MaxDim vectors encode
+  * over m·ksub literal-array dot expansions): the same arithmetic per
+  * subspace slice, so even degenerate non-MaxDim vectors encode
   * bit-identically. The DuckDB oracle replays the same arithmetic
   * unchanged.
   *
@@ -187,86 +251,28 @@ case class VecDotLong(left: Expression, right: Expression)
   * as child expressions.
   */
 case class PqEncode(child: Expression, model: Seq[Seq[Seq[Long]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("codes",
-        ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false),
-        nullable = false),
-      org.apache.spark.sql.types.StructField("recon", LongType,
-        nullable = false)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("codes", ArrayType(IntegerType, containsNull = false),
+      nullable = false),
+    StructField("recon", LongType, nullable = false)))
 
   override def nullIntolerant: Boolean = true
 
   override def prettyName: String = "pq_encode"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<double>, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
-  @transient private lazy val m = model.size
-  @transient private lazy val ksub = model.head.size
-  @transient private lazy val subDim = model.head.head.size
-  // flattened double image [s*ksub + c] and its full-width ‖c‖² (the
-  // driver-side left-to-right sums the literal tree used)
-  @transient private lazy val cents: Array[Array[Double]] =
-    model.flatMap(_.map(_.map(_.toDouble).toArray)).toArray
-  @transient private lazy val ccs: Array[Double] =
-    cents.map(cd => cd.map(x => x * x).sum)
+  @transient private lazy val codebook = new PqCodebook(model)
 
-  def encodeRow(input: Any): Any = {
-    val vd = input.asInstanceOf[ArrayData]
-    val len = vd.numElements()
-    val codes = new Array[Int](m)
-    var recon = 0L
-    var s0 = 0
-    while (s0 < m) {
-      val start = s0 * subDim
-      val nv = math.max(0, math.min(len - start, subDim))
-      // Σ x² over the slice — shared across this subspace's centroids,
-      // same fold order as vec_dot(vs, vs)
-      var dxx = 0.0d
-      var i = 0
-      while (i < nv) {
-        val x = vd.getDouble(start + i); dxx += x * x; i += 1
-      }
-      var bestD = Long.MaxValue
-      var bestC = 0
-      var c0 = 0
-      while (c0 < ksub) {
-        val cd = cents(s0 * ksub + c0)
-        var dxc = 0.0d
-        var j = 0
-        while (j < nv) {
-          dxc += vd.getDouble(start + j) * cd(j); j += 1
-        }
-        val d = (dxx - 2.0d * dxc + ccs(s0 * ksub + c0)).toLong
-        if (d < bestD) { bestD = d; bestC = c0 }
-        c0 += 1
-      }
-      codes(s0) = bestC
-      recon += bestD
-      s0 += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(codes),
-        recon))
-  }
-
-  override def nullSafeEval(input: Any): Any = encodeRow(input)
+  override def nullSafeEval(input: Any): Any =
+    codebook.encode(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncodeExpr", this,
-      classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, x => s"""
-       |${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-       |  $ref.encodeRow($x);
-     """.stripMargin)
+    val ref = ctx.addReferenceObj("pqCodebook", codebook,
+      classOf[PqCodebook].getName)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.encode($x);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
@@ -275,15 +281,14 @@ case class PqEncode(child: Expression, model: Seq[Seq[Seq[Long]]])
 
 /** [[PqEncode]]'s query-side twin: the full m×ksub ADC lookup table
   * (exact integer subspace distances to every sub-centroid, flattened
-  * subspace-major) in ONE compiled call — value-identical to the
-  * m·ksub literal-array dot expansion it replaces (same left-to-right
-  * double folds, same slice-length semantics, same truncating long
-  * cast). Shrinks the query-side broadcast build's generated code by
+  * subspace-major) in ONE compiled call ([[PqCodebook.lut]]) —
+  * value-identical to the m·ksub literal-array dot expansion it
+  * replaces. Shrinks the query-side broadcast build's generated code by
   * the 32 inlined centroid subtrees and makes per-row LUT evaluation
   * ~µs for the streaming screen, whose arrival batches pay it per row.
   */
 case class PqLut(child: Expression, model: Seq[Seq[Seq[Long]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -291,59 +296,17 @@ case class PqLut(child: Expression, model: Seq[Seq[Seq[Long]]])
 
   override def prettyName: String = "pq_lut"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<double>, got ${t.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
-  @transient private lazy val m = model.size
-  @transient private lazy val ksub = model.head.size
-  @transient private lazy val subDim = model.head.head.size
-  @transient private lazy val cents: Array[Array[Double]] =
-    model.flatMap(_.map(_.map(_.toDouble).toArray)).toArray
-  @transient private lazy val ccs: Array[Double] =
-    cents.map(cd => cd.map(x => x * x).sum)
+  @transient private lazy val codebook = new PqCodebook(model)
 
-  def lutRow(input: Any): Any = {
-    val vd = input.asInstanceOf[ArrayData]
-    val len = vd.numElements()
-    val out = new Array[Long](m * ksub)
-    var s0 = 0
-    while (s0 < m) {
-      val start = s0 * subDim
-      val nv = math.max(0, math.min(len - start, subDim))
-      var dxx = 0.0d
-      var i = 0
-      while (i < nv) {
-        val x = vd.getDouble(start + i); dxx += x * x; i += 1
-      }
-      var c0 = 0
-      while (c0 < ksub) {
-        val cd = cents(s0 * ksub + c0)
-        var dxc = 0.0d
-        var j = 0
-        while (j < nv) {
-          dxc += vd.getDouble(start + j) * cd(j); j += 1
-        }
-        out(s0 * ksub + c0) =
-          (dxx - 2.0d * dxc + ccs(s0 * ksub + c0)).toLong
-        c0 += 1
-      }
-      s0 += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-
-  override def nullSafeEval(input: Any): Any = lutRow(input)
+  override def nullSafeEval(input: Any): Any =
+    codebook.lut(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqLutExpr", this, classOf[PqLut].getName)
-    nullSafeCodeGen(ctx, ev, x => s"""
-       |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-       |  $ref.lutRow($x);
-     """.stripMargin)
+    val ref = ctx.addReferenceObj("pqCodebook", codebook,
+      classOf[PqCodebook].getName)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.lut($x);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqLut =

@@ -28,6 +28,34 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   */
 object ModelStore {
 
+  /** Where stored artifacts live, relative to the working directory. */
+  val Root = "target/models"
+
+  /** The artifact directory of `kind` built from the data directory
+    * `dataDir`: `<Root>/<kind>_<md5 of the dataDir path>`. The key is a
+    * 128-bit digest of the full path (the former 32-bit
+    * `math.abs(d.hashCode)` could collide between data dirs and serve
+    * a foreign same-schema artifact that no schema check can detect),
+    * and stays filesystem-safe whatever the path's characters.
+    */
+  def dir(kind: String, dataDir: String): String =
+    s"$Root/${kind}_${dirKey(dataDir)}"
+
+  private def dirKey(d: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** Drops every artifact [[dir]] built from `dataDir`, so the next
+    * ensure* call rebuilds it against the directory's current content.
+    */
+  def invalidateFor(spark: SparkSession, dataDir: String): Unit = {
+    val key = dirKey(dataDir)
+    Option(new java.io.File(Root).listFiles())
+      .foreach(_.filter(_.getName.endsWith(key))
+        .foreach(f => invalidate(spark, f.getPath)))
+  }
+
   /** Nullability (incl. array containsNull) is normalized away: the
     * parquet writer/reader round-trip does not preserve it, and the
     * check guards against WRONG frames, not wider nullability.

@@ -27,6 +27,21 @@ class ModelStoreSpec extends AnyFunSuite with SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  test("artifact dirs are <Root>/<kind>_<md5 of the data dir>; invalidateFor drops only that dir's") {
+    assert(ModelStore.dir("ivfpq_rrf", "/data/sf0.01") ===
+      "target/models/ivfpq_rrf_" + java.security.MessageDigest.getInstance("MD5")
+        .digest("/data/sf0.01".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    assert(ModelStore.dir("sq", "/data/sf0.01") !== ModelStore.dir("sq", "/data/sf0.1"))
+    val mine = ModelStore.dir("graft_spec_kind", "/data/invalidate-me")
+    val other = ModelStore.dir("graft_spec_kind", "/data/keep-me")
+    try {
+      Seq(mine, other).foreach(d => new java.io.File(d).mkdirs())
+      ModelStore.invalidateFor(spark, "/data/invalidate-me")
+      assert(!new java.io.File(mine).exists())
+      assert(new java.io.File(other).exists())
+    } finally ModelStore.invalidate(spark, other)
+  }
+
   test("NbModel round-trip: frames, params, and predictions survive") {
     val dir = tmp()
     val m = graft.operators.LangId.train(docs, buckets = 64)
