@@ -113,12 +113,9 @@ case class MmrSelect(child: Expression, k: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     InputTypes.check(this, child.dataType match {
-      case ArrayType(StructType(Array(a, b, c)), _) =>
-        a.dataType == LongType && b.dataType == LongType &&
-          (c.dataType match {
-            case ArrayType(DoubleType, _) => true
-            case _ => false
-          })
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+          StructField(_, LongType, _, _),
+          StructField(_, ArrayType(DoubleType, _), _, _))), _) => true
       case _ => false
     }, "array<struct<bigint, bigint, array<double>>>")
 

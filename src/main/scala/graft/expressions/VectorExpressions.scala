@@ -141,7 +141,7 @@ case class VecDotLong(left: Expression, right: Expression)
 /** The PQ codebook kernel behind [[PqEncode]] and [[PqLut]]: `model`'s
   * m subspaces of ksub sub-centroids (each subDim wide) as a flattened
   * double image `[s·ksub + c]` with each sub-centroid's full-width
-  * ‖c‖² (the driver-side left-to-right sums the literal tree used).
+  * ‖c‖², summed left to right.
   *
   * Subspace s's distance is d(c) = Σ vs·vs − 2·Σ vs·c + ‖c‖² over the
   * slice vs of the input at s·subDim, with [[VecDot]]'s left-to-right

@@ -33,10 +33,9 @@ object ModelStore {
 
   /** The artifact directory of `kind` built from the data directory
     * `dataDir`: `<Root>/<kind>_<md5 of the dataDir path>`. The key is a
-    * 128-bit digest of the full path (the former 32-bit
-    * `math.abs(d.hashCode)` could collide between data dirs and serve
-    * a foreign same-schema artifact that no schema check can detect),
-    * and stays filesystem-safe whatever the path's characters.
+    * 128-bit digest of the full path, so two data dirs never share an
+    * artifact (a foreign same-schema artifact would pass every schema
+    * check), and it is filesystem-safe whatever the path's characters.
     */
   def dir(kind: String, dataDir: String): String =
     s"$Root/${kind}_${dirKey(dataDir)}"
