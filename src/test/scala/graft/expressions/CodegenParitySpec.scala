@@ -149,13 +149,12 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
   private def hasCodegen(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
 
-  /** Runs `q` under both modes and asserts equal rows, per column. */
-  private def assertParity(in: () => DataFrame, order: String,
-      cols: (String, Column)*): Unit = {
+  /** Selects `cols` from `in` under both modes; equal rows per column. */
+  private def assertParity(in: () => DataFrame, cols: (String, Column)*): Unit = {
     def run(mode: Seq[(String, String)]): (Seq[Row], Boolean) =
       withConfs(mode) {
         // no ORDER BY: its exchange would hide the stages behind AQE
-        val df = in().select(col(order) +: cols.map { case (n, c) => c.as(n) }: _*)
+        val df = in().select(col("id") +: cols.map { case (n, c) => c.as(n) }: _*)
         (df.collect().toSeq.sortBy(_.getLong(0)), hasCodegen(df))
       }
     val (interp, interpCodegen) = run(Interpreted)
@@ -169,7 +168,7 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("text kernels: interpreted eval equals generated code") {
-    assertParity(text, "id",
+    assertParity(text,
       "simhash_fold" -> simhashFold(col("hs")),
       "simhash_fold_60" -> simhashFold(col("hs"), 60),
       "minhash_bands" -> minhashBands(col("hs")),
@@ -189,13 +188,11 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vector, layout and selection kernels: interpreted eval equals generated code") {
-    val ff = (col("af"), col("bf"))
-    val dd = (col("ad"), col("bd"))
-    assertParity(vecs, "id",
-      "vec_dot_ff" -> vecDot(ff._1, ff._2),
-      "vec_dot_fd" -> vecDot(ff._1, dd._2),
-      "vec_dot_df" -> vecDot(dd._1, ff._2),
-      "vec_dot_dd" -> vecDot(dd._1, dd._2),
+    assertParity(vecs,
+      "vec_dot_ff" -> vecDot(col("af"), col("bf")),
+      "vec_dot_fd" -> vecDot(col("af"), col("bd")),
+      "vec_dot_df" -> vecDot(col("ad"), col("bf")),
+      "vec_dot_dd" -> vecDot(col("ad"), col("bd")),
       "vec_dot_long" -> vecDotLong(col("al"), col("bl")),
       "pq_encode" -> pqEncode(col("vd"), Codebook),
       "pq_lut" -> pqLut(col("vd"), Codebook),
