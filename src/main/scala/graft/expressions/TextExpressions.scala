@@ -9,7 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /** Runtime for the array kernels [[SimhashFold]], [[MinhashBands]],
   * [[SortedIntersectCount]], [[ModalRunLength]] and [[WinnowMins]] — a
   * plain object, so each expression's generated code is one static
-  * call into the code its `eval` runs (the [[GramHash]] pattern).
+  * call into the code its `eval` runs (the [[GramHash]] pattern). The
+  * hash folds (simhash, minhash bands, winnowing) read a null element
+  * as 0 ([[NullAsZero]]).
   */
 object TextKernels {
   private val MinhashA = graft.functions.TextFunctions.MinhashA.toArray
@@ -24,7 +26,7 @@ object TextKernels {
     val counts = new Array[Int](bits)
     var i = 0
     while (i < n) {
-      val h = hs.getLong(i)
+      val h = NullAsZero.long(hs, i)
       var b = 0
       while (b < bits) {
         counts(b) += (((h >>> b) & 1L) * 2 - 1).toInt
@@ -50,7 +52,7 @@ object TextKernels {
     val mins = Array.fill(8)(Long.MaxValue)
     var i = 0
     while (i < n) {
-      val h = hs.getLong(i)
+      val h = NullAsZero.long(hs, i)
       var k = 0
       while (k < 8) {
         val v = (MinhashA(k) * h + MinhashB(k)) % MinhashP
@@ -120,12 +122,12 @@ object TextKernels {
     var tail = 0
     var i = 0
     while (i < n) {
-      val h = arr.getLong(i)
-      while (tail > head && arr.getLong(dq(tail - 1)) >= h) tail -= 1
+      val h = NullAsZero.long(arr, i)
+      while (tail > head && NullAsZero.long(arr, dq(tail - 1)) >= h) tail -= 1
       dq(tail) = i
       tail += 1
       if (dq(head) <= i - w) head += 1
-      if (i >= w - 1) mins(i - w + 1) = arr.getLong(dq(head))
+      if (i >= w - 1) mins(i - w + 1) = NullAsZero.long(arr, dq(head))
       i += 1
     }
     java.util.Arrays.sort(mins)

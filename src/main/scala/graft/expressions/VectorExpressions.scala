@@ -8,8 +8,23 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
+/** The one rule for a null element in the numeric array kernels
+  * ([[VectorKernels]], [[TextKernels]]' simhash, minhash and winnowing
+  * folds, [[PqCodebook]]): it reads as 0. A null slot holds whatever
+  * bytes its writer left, and those differ between the interpreted and
+  * the generated path, so no kernel reads them. Reading 0 keeps each
+  * expression's type, nullability and plan as they were.
+  */
+object NullAsZero {
+  def long(a: ArrayData, i: Int): Long = if (a.isNullAt(i)) 0L else a.getLong(i)
+  def double(a: ArrayData, i: Int): Double = if (a.isNullAt(i)) 0.0d else a.getDouble(i)
+  def float(a: ArrayData, i: Int): Double =
+    if (a.isNullAt(i)) 0.0d else a.getFloat(i).toDouble
+}
+
 /** Runtime for [[VecDot]] and [[VecDotLong]] — a plain object, so the
-  * generated code is one static call into the loop `eval` runs.
+  * generated code is one static call into the loop `eval` runs. A null
+  * element reads as 0 ([[NullAsZero]]).
   */
 object VectorKernels {
 
@@ -23,8 +38,8 @@ object VectorKernels {
     var acc = 0.0d
     var i = 0
     while (i < n) {
-      val xe = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val ye = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      val xe = if (xFloat) NullAsZero.float(x, i) else NullAsZero.double(x, i)
+      val ye = if (yFloat) NullAsZero.float(y, i) else NullAsZero.double(y, i)
       acc += xe * ye
       i += 1
     }
@@ -37,7 +52,7 @@ object VectorKernels {
     var acc = 0L
     var i = 0
     while (i < n) {
-      acc += x.getLong(i) * y.getLong(i)
+      acc += NullAsZero.long(x, i) * NullAsZero.long(y, i)
       i += 1
     }
     acc
@@ -147,7 +162,8 @@ case class VecDotLong(left: Expression, right: Expression)
   * slice vs of the input at s·subDim, with [[VecDot]]'s left-to-right
   * double folds and a truncating long cast; the cross and self terms
   * run over the slice's actual length, so short inputs reproduce what
-  * `slice` + `vec_dot` + literal Σc² computed.
+  * `slice` + `vec_dot` + literal Σc² computed. A null element reads as
+  * 0 ([[NullAsZero]]).
   */
 final class PqCodebook(model: Seq[Seq[Seq[Long]]]) extends Serializable {
   private val m = model.size
@@ -167,7 +183,7 @@ final class PqCodebook(model: Seq[Seq[Seq[Long]]]) extends Serializable {
     var dxx = 0.0d
     var i = 0
     while (i < nv) {
-      val x = vd.getDouble(start + i); dxx += x * x; i += 1
+      val x = NullAsZero.double(vd, start + i); dxx += x * x; i += 1
     }
     dxx
   }
@@ -180,7 +196,7 @@ final class PqCodebook(model: Seq[Seq[Seq[Long]]]) extends Serializable {
     var dxc = 0.0d
     var j = 0
     while (j < nv) {
-      dxc += vd.getDouble(start + j) * cd(j); j += 1
+      dxc += NullAsZero.double(vd, start + j) * cd(j); j += 1
     }
     (dxx - 2.0d * dxc + ccs(s * ksub + c)).toLong
   }

@@ -18,9 +18,10 @@ import graft.sources.Sinks
   *
   * Unlike the reference (which re-read and re-joined the CSVs in every
   * script), the enriched frame is built once per run; at cluster scale
-  * each task still streams the scan through the two broadcast hash
-  * joins — nothing is cached unless the deployment opts in (caching a
-  * 100 TB enrichment is a capacity decision, not a default).
+  * each task still streams the scan, reading each trip's zone
+  * attributes from the lookup arrays built once on the driver — nothing
+  * is cached unless the deployment opts in (caching a 100 TB
+  * enrichment is a capacity decision, not a default).
   */
 object RideshareApp {
   def main(args: Array[String]): Unit = {

@@ -149,8 +149,37 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
   private def hasCodegen(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
 
-  /** Selects `cols` from `in` under both modes; equal rows per column. */
-  private def assertParity(in: () => DataFrame, cols: (String, Column)*): Unit = {
+  /** Null elements at the ends, in the middle and in every slot of the
+    * numeric array kernels' inputs. Each row with nulls follows a row
+    * with values in the same slots: read one row per batch, the
+    * vectorized reader's reused vectors still hold those values under
+    * the nulls, so a kernel that reads a null slot sees them.
+    */
+  private lazy val nullElems = table("null_elems", StructType(Seq(
+    StructField("id", LongType),
+    StructField("hs", ArrayType(LongType)),
+    StructField("af", ArrayType(FloatType)), StructField("bf", ArrayType(FloatType)),
+    StructField("ad", ArrayType(DoubleType)), StructField("bd", ArrayType(DoubleType)),
+    StructField("al", ArrayType(LongType)), StructField("bl", ArrayType(LongType)),
+    StructField("vd", ArrayType(DoubleType)))), {
+    val filled = Row(0L, Seq(7L, 11L, 3L, 13L, 12L, 5L, 6L, 8L), Seq(1f, 5f, 2f, 3f),
+      Seq(2f, 3f, 7f, 1f), Seq(1.0, 9.0, 2.0), Seq(2.0, 3.0, 4.0), Seq(5L, 6L, -2L),
+      Seq(8L, 4L, 3L), Seq(1.0, 7.0, 3.0, 2.0))
+    def after(id: Long, r: Row) = Seq(Row.fromSeq(id +: filled.toSeq.tail), r)
+    after(0L, Row(1L, Seq(7L, null, 3L, null, 12L, 5L), Seq(1f, null, 2f),
+      Seq(2f, 3f, null), Seq(1.0, null, 2.0), Seq(2.0, 3.0, null), Seq(5L, null, -2L),
+      Seq(null, 4L, 3L), Seq(1.0, null, null, 2.0))) ++
+    after(2L, Row(3L, Seq(null), Seq(null), Seq(null), Seq(null), Seq(null), Seq(null),
+      Seq(null), Seq(null, null, null, null))) ++
+    after(4L, Row(5L, Seq(-1L, null, 1L << 59, null, null, 9L, 2L, null),
+      Seq(3.5f, -1f, null, 4f), Seq(null, 2f, 2f, 1f), Seq(0.5, null), Seq(null, 0.25),
+      Seq(1L << 40, null, 9L), Seq(2L, 7L, null), Seq(null, 0.5, 3.0)))
+  })
+
+  /** Selects `cols` from `in` under both modes; equal rows per column.
+    * Returns the rows, sorted by id.
+    */
+  private def assertParity(in: () => DataFrame, cols: (String, Column)*): Seq[Row] = {
     def run(mode: Seq[(String, String)]): (Seq[Row], Boolean) =
       withConfs(mode) {
         // no ORDER BY: its exchange would hide the stages behind AQE
@@ -165,6 +194,7 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
     cols.zipWithIndex.foreach { case ((name, _), j) =>
       assert(interp.map(_.get(j + 1)) === comp.map(_.get(j + 1)), name)
     }
+    interp
   }
 
   test("text kernels: interpreted eval equals generated code") {
@@ -200,6 +230,40 @@ class CodegenParitySpec extends AnyFunSuite with SparkSpec {
       "hilbert_index_n" -> hilbertIndexN(Seq(col("x"), col("y"), col("z")), 4),
       "mmr_select" -> MmrSelect.mmr(col("cands"), 2),
       "bloom_might_contain" -> BloomExpressions.bloomMightContain(col("x"), bloom))
+  }
+
+  test("a null array element reads as 0 on both paths") {
+    def zeroed(c: String, t: DataType): Column =
+      transform(col(c), e => coalesce(e, lit(0).cast(t)))
+    val (hs, al, bl) = (zeroed("hs", LongType), zeroed("al", LongType), zeroed("bl", LongType))
+    val (af, bf) = (zeroed("af", FloatType), zeroed("bf", FloatType))
+    val (ad, bd, vd) = (zeroed("ad", DoubleType), zeroed("bd", DoubleType),
+      zeroed("vd", DoubleType))
+    // each kernel over the null elements and over the same arrays zero-filled
+    val pairs = Seq(
+      "vec_dot_ff" -> (vecDot(col("af"), col("bf")), vecDot(af, bf)),
+      "vec_dot_fd" -> (vecDot(col("af"), col("bd")), vecDot(af, bd)),
+      "vec_dot_dd" -> (vecDot(col("ad"), col("bd")), vecDot(ad, bd)),
+      "vec_dot_long" -> (vecDotLong(col("al"), col("bl")), vecDotLong(al, bl)),
+      "pq_encode" -> (pqEncode(col("vd"), Codebook), pqEncode(vd, Codebook)),
+      "pq_lut" -> (pqLut(col("vd"), Codebook), pqLut(vd, Codebook)),
+      "simhash_fold" -> (simhashFold(col("hs")), simhashFold(hs)),
+      "simhash_fold_60" -> (simhashFold(col("hs"), 60), simhashFold(hs, 60)),
+      "minhash_bands" -> (minhashBands(col("hs")), minhashBands(hs)),
+      "winnow_mins" -> (winnowMins(col("hs")), winnowMins(hs)),
+      "winnow_mins_1" -> (winnowMins(col("hs"), 1), winnowMins(hs, 1)))
+    // one row per batch; the raw and the zero-filled kernels run as separate
+    // queries, because a lambda in the projection copies the input row first
+    def rowsOf(kernels: Seq[(String, Column)]): Seq[Row] =
+      withConfs(Seq("spark.sql.parquet.columnarReaderBatchSize" -> "1")) {
+        assertParity(nullElems, kernels: _*)
+      }
+    val raw = rowsOf(pairs.map { case (name, (kernel, _)) => name -> kernel })
+    val zero = rowsOf(pairs.map { case (name, (_, kernel)) => name -> kernel })
+    assert(raw.size === 6)
+    pairs.zipWithIndex.foreach { case ((name, _), j) =>
+      assert(raw.map(_.get(j + 1)) === zero.map(_.get(j + 1)), name)
+    }
   }
 
   test("top_k aggregate: interpreted equals compiled") {

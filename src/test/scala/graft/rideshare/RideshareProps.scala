@@ -1,5 +1,7 @@
 package graft.rideshare
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -19,16 +21,31 @@ object RideshareProps extends Properties("rideshare") {
 
   private lazy val spark = SharedSpark.spark
 
-  private val zones = Seq(
+  /** Non-contiguous keys, a zone with null attributes, and a row with
+    * a null key that no trip can match.
+    */
+  private val zones = Seq[(Integer, String, String, String)](
     (1, "Manhattan", "Midtown", "Yellow Zone"),
     (2, "Brooklyn", "Park Slope", "Boro Zone"),
-    (3, "Queens", "Astoria", "Boro Zone"))
+    (3, "Queens", "Astoria", "Boro Zone"),
+    (7, null, null, null),
+    (40, "Bronx", "Fordham", "Boro Zone"),
+    (null, "Staten Island", "St. George", "Boro Zone"))
 
-  private val genTrip: Gen[(String, Int, Int, Double, Double, String, Long, Double, Double)] =
+  private val MaxKey = 40
+
+  /** Matched keys, and keys no zone holds: 0, negatives, a gap, the
+    * slot past the largest key, Int.MaxValue, and null.
+    */
+  private val genKey: Gen[Integer] = Gen.frequency(
+    3 -> Gen.oneOf[Integer](1, 2, 3, 7, MaxKey),
+    2 -> Gen.oneOf[Integer](0, -1, Int.MinValue, 4, MaxKey + 1, Int.MaxValue, null))
+
+  private val genTrip: Gen[(String, Integer, Integer, Double, Double, String, Long, Double, Double)] =
     for {
       business <- Gen.oneOf("Uber", "Lyft")
-      pu <- Gen.chooseNum(1, 4) // 4 = unmatched → left-join null path
-      dropoff <- Gen.chooseNum(1, 4)
+      pu <- genKey
+      dropoff <- genKey
       len <- Gen.chooseNum(1, 20).map(_.toDouble)
       wait <- Gen.chooseNum(10, 600).map(_.toDouble)
       tod <- Gen.oneOf("morning", "afternoon", "evening", "night")
@@ -38,17 +55,48 @@ object RideshareProps extends Properties("rideshare") {
     } yield (business, pu, dropoff, len, wait, tod,
       1672531200L + day * 86400L, pay, profit)
 
-  private def enrichedOf(trips: List[(String, Int, Int, Double, Double, String, Long, Double, Double)]) = {
-    val t = spark.createDataFrame(trips)
+  private type Trip = (String, Integer, Integer, Double, Double, String, Long, Double, Double)
+
+  private def tripsOf(trips: List[Trip]): DataFrame =
+    spark.createDataFrame(trips)
       .toDF("business", "pickup_location", "dropoff_location", "trip_length",
         "request_to_pickup", "time_of_day", "date", "driver_total_pay",
         "rideshare_profit")
-    val z = spark.createDataFrame(zones)
-      .toDF("LocationID", "Borough", "Zone", "service_zone")
-    Enrich.enrich(t, z)
+
+  private lazy val zonesDf = spark.createDataFrame(zones)
+    .toDF("LocationID", "Borough", "Zone", "service_zone")
+
+  private def enrichedOf(trips: List[Trip]) = Enrich.enrich(tripsOf(trips), zonesDf)
+
+  /** The enrichment as the reference writes it (`codes/task1.py:45-69`):
+    * two left joins against the prefixed zone table.
+    */
+  private def joinEnriched(trips: DataFrame, zones: DataFrame): DataFrame = {
+    def prefixed(prefix: String) = zones.select(
+      col("LocationID").as(s"${prefix}_LocationID"),
+      col("Borough").as(s"${prefix}_Borough"),
+      col("Zone").as(s"${prefix}_Zone"),
+      col("service_zone").as(s"${prefix}_service_zone"))
+    trips
+      .join(broadcast(prefixed("Pickup")),
+        col("pickup_location") === col("Pickup_LocationID"), "left")
+      .drop("Pickup_LocationID")
+      .join(broadcast(prefixed("Dropoff")),
+        col("dropoff_location") === col("Dropoff_LocationID"), "left")
+      .drop("Dropoff_LocationID")
+      .withColumn("date", from_unixtime(col("date"), "yyyy-MM-dd"))
   }
 
   private val genTrips = Gen.nonEmptyListOf(genTrip)
+
+  property("the lookup equals the two left joins: schema and rows") =
+    forAll(genTrips) { trips =>
+      val want = joinEnriched(tripsOf(trips), zonesDf)
+      val got = enrichedOf(trips)
+      def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+      Prop(got.schema == want.schema) :| s"schema ${got.schema} != ${want.schema}" &&
+        Prop(sorted(got) == sorted(want)) :| s"trips=$trips"
+    }
 
   property("enrich preserves row count (left-join, unique dim keys)") =
     forAll(genTrips) { trips =>
@@ -61,7 +109,6 @@ object RideshareProps extends Properties("rideshare") {
       val kept = RideshareTasks.topBoroughsPerMonth(enr, "Pickup", k = 2)
         .collect().map(r => (r.getInt(1), r.getLong(2)))
       val all = {
-        import org.apache.spark.sql.functions._
         enr.withColumn("month", month(col("date")))
           .groupBy("Pickup_Borough", "month").count()
           .collect().map(r => (r.getInt(1), r.getLong(2)))

@@ -2,8 +2,12 @@ package graft.rideshare
 
 import java.time.{LocalDate, ZoneOffset}
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
+import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -192,6 +196,56 @@ class RideshareTasksSpec extends AnyFunSuite with SparkSpec {
       assert(want.nonEmpty, name)
       assert(rowsOf(got) === want, name)
     }
+  }
+
+  /** `zones` as a CSV file, read back with the declared schema. */
+  private lazy val zonesCsv: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("rideshare_zones") + "/zones"
+    zones.coalesce(1).write.option("header", "true").csv(dir)
+    RideshareSchema.readZones(spark, dir)
+  }
+
+  private def rejection(zoneRows: DataFrame): String =
+    intercept[IllegalArgumentException](Enrich.enrich(trips, zoneRows)).getMessage
+
+  test("the zone lookup rejects a dimension it cannot represent exactly") {
+    def dim(keys: Int*): DataFrame = spark.createDataFrame(
+      keys.map(k => (k, s"B$k", s"Z$k", "Boro Zone")))
+      .toDF("LocationID", "Borough", "Zone", "service_zone")
+    assert(rejection(dim(1, 2, 2, 3)).contains("duplicate zone LocationID 2"))
+    assert(rejection(dim(1, -4)).contains("negative zone LocationID -4"))
+    assert(rejection(dim(1, Enrich.MaxZones)).contains(
+      s"zone LocationID ${Enrich.MaxZones} exceeds"))
+    val overCap = spark.range(Enrich.MaxZones + 1).select(
+      col("id").cast("int").as("LocationID"), lit("B").as("Borough"),
+      lit("Z").as("Zone"), lit("Boro Zone").as("service_zone"))
+    assert(rejection(overCap).contains(s"more than ${Enrich.MaxZones} rows"))
+    // the largest key the lookup takes, and a null key, are accepted
+    assert(Enrich.enrich(trips, dim(Enrich.MaxZones - 1)).count() === 12)
+    assert(Enrich.enrich(trips, zones.union(spark.createDataFrame(
+      Seq(((null: Integer), "B", "Z", "Boro Zone"))).toDF(zones.columns: _*)))
+      .filter("pickup_location = 1").head().getAs[String]("Pickup_Borough") === "Manhattan")
+  }
+
+  test("the zone probe reads a bounded number of rows in one job") {
+    val probe = Enrich.probe(zonesCsv)
+    assert(probe.queryExecution.optimizedPlan.collectFirst {
+      case l: GlobalLimit => l.maxRows
+    } === Some(Some(Enrich.MaxZones + 1L)))
+    assert(probe.queryExecution.executedPlan.collectFirst {
+      case l: CollectLimitExec => l.limit
+    } === Some(Enrich.MaxZones + 1))
+    assert(JobCount.of(spark.sparkContext)(Enrich.enrich(trips, zonesCsv)) === 1)
+  }
+
+  test("the enriched plan is the fact scan alone: no join, no broadcast") {
+    val e = Enrich.enrich(RideshareSchema.readTrips(spark, splitCsv), zonesCsv)
+    assert(e.queryExecution.optimizedPlan.collectFirst { case j: Join => j }.isEmpty)
+    val plan = e.queryExecution.executedPlan
+    assert(plan.collectFirst { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+    assert(plan.collectLeaves().map(_.getClass.getSimpleName) ===
+      Seq(classOf[FileSourceScanExec].getSimpleName), plan)
+    assert(e.columns.length === 21)
   }
 
   test("T7: pivot by business with explicit values and fillna(0)") {
