@@ -41,7 +41,9 @@ object RideshareProps extends Properties("rideshare") {
     3 -> Gen.oneOf[Integer](1, 2, 3, 7, MaxKey),
     2 -> Gen.oneOf[Integer](0, -1, Int.MinValue, 4, MaxKey + 1, Int.MaxValue, null))
 
-  private val genTrip: Gen[(String, Integer, Integer, Double, Double, String, Long, Double, Double)] =
+  private type Trip = (String, Integer, Integer, Double, Double, String, Long, Double, Double)
+
+  private val genTrip: Gen[Trip] =
     for {
       business <- Gen.oneOf("Uber", "Lyft")
       pu <- genKey
@@ -54,8 +56,6 @@ object RideshareProps extends Properties("rideshare") {
       profit <- Gen.chooseNum(-20, 20).map(_.toDouble)
     } yield (business, pu, dropoff, len, wait, tod,
       1672531200L + day * 86400L, pay, profit)
-
-  private type Trip = (String, Integer, Integer, Double, Double, String, Long, Double, Double)
 
   private def tripsOf(trips: List[Trip]): DataFrame =
     spark.createDataFrame(trips)
